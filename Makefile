@@ -5,8 +5,11 @@ SF_DIR ?= /root/testdata/sf0.01
 
 .PHONY: test correctness bench bench-ab scaling
 
+# the ROADMAP tier-1 command: local[nproc] (nproc counted with
+# OMP_NUM_THREADS unset, which would otherwise cap it), not local[32]
 test:
-	python -m pytest tests/ -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+	  timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 # full-registry oracle sweep (ALL registered queries, not just the
 # driver's 50-query window) -> committed artifact next to the driver's

@@ -67,6 +67,7 @@ from ocr_service_spark.operators import (  # noqa: E402
     text_stats,
     weburl,
 )
+from ocr_service_spark.plans.parallelism import documents, fan_out  # noqa: E402
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -237,11 +238,10 @@ def _q60_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ocr_service_spark.operators.multimodal import sample_frames
 
-    docs = (
+    docs = fan_out(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id")
         .filter(F.col("doc_id") < 300)  # deterministic subset (limit() is not)
-        .repartition(spark.sparkContext.defaultParallelism)
     )
 
     def gen(batches):
@@ -281,11 +281,10 @@ def _q61_mp4_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ocr_service_spark.operators.multimodal import sample_frames
 
-    docs = (
+    docs = fan_out(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id")
         .filter(F.col("doc_id") < 300)
-        .repartition(spark.sparkContext.defaultParallelism)
     )
 
     def gen(batches):
@@ -527,15 +526,8 @@ def _q102_exif_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ship_package(spark)
     import pandas as pd
 
-    # the generation stage is compute-bound (~1.6 ms/doc of pure-Python
-    # JPEG encoding), so don't let the input's file count set its
-    # parallelism: the doc_id projection is 8 bytes/row, a repartition
-    # shuffle is free relative to the encode it parallelizes
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    # compute-bound generation (~1.6 ms/doc of pure-Python JPEG encoding)
+    docs = documents(spark, sf_dir, "doc_id")
 
     def gen(batches):
         from ocr_service_spark.extraction.exif import build_exif_blob, splice_app1
@@ -635,11 +627,7 @@ def _q167_gps_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ship_package(spark)
     import pandas as pd
 
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = documents(spark, sf_dir, "doc_id")
 
     def gen(batches):
         from ocr_service_spark.extraction.exif import build_exif_blob, splice_app1
@@ -755,14 +743,8 @@ def _q103_pdf_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ship_package(spark)
     import pandas as pd
 
-    # compute-bound generation (PDF build + parse per doc): parallelism
-    # must come from a repartition of the 8-byte doc_id rows, not from
-    # the input's file count (same rationale as q102)
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    # compute-bound generation (PDF build + parse per doc)
+    docs = documents(spark, sf_dir, "doc_id")
 
     def gen(batches):
         def minimal_pdf(page_texts, info=None):
@@ -875,11 +857,10 @@ def _q105_media_route(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ocr_service_spark.plans.job import run_extraction
 
-    docs = (
+    docs = fan_out(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id")
         .filter(F.col("doc_id") < 300)
-        .repartition(spark.sparkContext.defaultParallelism)
     )
 
     def gen(batches):
@@ -952,11 +933,10 @@ def _q104_avc1_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ship_package(spark)
     import pandas as pd
 
-    docs = (
+    docs = fan_out(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id")
         .filter(F.col("doc_id") < 240)
-        .repartition(spark.sparkContext.defaultParallelism)
     )
 
     def gen(batches):

@@ -123,19 +123,18 @@ def main(argv: list[str] | None = None) -> None:
     if argv and argv[0] in _SUBCOMMANDS:
         _ops_main(argv)
         return
+    from ocr_service_spark.plans.manifest import DEFAULT_N_PARTS, run_with_checkpoint
+
     parser = argparse.ArgumentParser(prog="ocr_service_spark")
     parser.add_argument("--pages", required=True, help="input pages table (parquet dir)")
     parser.add_argument("--results", required=True, help="output results table")
     parser.add_argument("--manifest", required=True, help="checkpoint manifest table")
     parser.add_argument("--mode", default="NO_OCR", choices=["NO_OCR", "OCR"])
     parser.add_argument("--cpus", type=int, default=None, help="local[N] cores")
-    parser.add_argument("--n-parts", type=int, default=64)
-    parser.add_argument("--salt-min-bytes", type=int, default=2 * 1024 * 1024)
-    parser.add_argument("--bucket-pages", type=int, default=16)
+    parser.add_argument("--n-parts", type=int, default=DEFAULT_N_PARTS)
     args = parser.parse_args(argv)
 
     from ocr_service_spark.operators.metrics import ExtractionMetrics
-    from ocr_service_spark.plans.manifest import run_with_checkpoint
     from ocr_service_spark.plans.session import build_session
     from ocr_service_spark.sources.pages import read_pages
 
@@ -150,8 +149,6 @@ def main(argv: list[str] | None = None) -> None:
         args.results,
         args.manifest,
         n_parts=args.n_parts,
-        salt_min_bytes=args.salt_min_bytes,
-        bucket_pages=args.bucket_pages,
         metrics=metrics,
         mode=args.mode,
     )

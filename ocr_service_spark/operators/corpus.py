@@ -16,14 +16,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocr_service_spark.functions.hashing import h32, h32_sql
+from ocr_service_spark.plans.parallelism import documents, fan_out
 
 TOKEN_RE = r"\s+"
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
 
 
 # -- segment-level boilerplate dedup (CCNet/RefinedWeb line-dedup analog) -----
@@ -51,7 +46,7 @@ def q51_boilerplate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``seg`` (which the exploded side would need for the groupBy anyway)
     when it does not.
     """
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     t = F.split(F.trim("text"), TOKEN_RE)
     n_segs = (F.size(t) / SEG_WORDS).cast("int")  # floor division
     segs = F.when(
@@ -125,7 +120,7 @@ def q52_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     side. That is exactly how PaLM/GPT-style decontamination sweeps
     run: benchmark n-grams in memory on every executor.
     """
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     is_eval = F.pmod(h32(F.col("doc_id").cast("string"), CONTAM_SALT), F.lit(EVAL_MOD)) == 0
     t = F.split(F.trim("text"), TOKEN_RE)
     grams = docs.select(
@@ -176,7 +171,7 @@ def q53_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggs, making the sort-merge join cheap. The top-k window partitions
     by doc_id, so no global sort.
     """
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     toks = docs.select(
         "doc_id", F.explode(F.split(F.trim("text"), TOKEN_RE)).alias("term")
     )
@@ -210,9 +205,7 @@ def q54_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     code_sum 0 in both engines (Spark's F.aggregate returns the init
     value over an empty array, the oracle coalesces DuckDB's NULL
     list_sum([]) to match) with NULL codes and scale params."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
     v = F.transform("embedding", lambda x: x.cast("double"))
     mn = F.array_min(v)
     mx = F.array_max(v)
@@ -256,7 +249,7 @@ def q70_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         _marker_pattern,
     )
 
-    src = _docs(spark, sf_dir).select("doc_id", "text", "n_chars")
+    src = documents(spark, sf_dir, "doc_id", "text", "n_chars")
     # The natural corpus only trips too_short/lang_other, so closed-form
     # synthetic rows (mirrored verbatim by the oracle) exercise the
     # remaining branches: exact copies of docs 0-9 (exact_dup), pages of
@@ -364,7 +357,7 @@ def q82_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     many sequences it straddles). Integer-exact throughout: one
     running-sum window per shard, integral div/mod against the
     sequence budget — no floats, no collect."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = documents(spark, sf_dir, "doc_id", "text")
     t = docs.select(
         "doc_id",
         F.pmod(h32(F.col("doc_id").cast("string"), PACK_SALT), F.lit(PACK_SHARDS))
@@ -689,7 +682,7 @@ MIX_WEIGHT_MOD = 4  # weight(srcN) = N % 4 + 1 — deterministic, varied
 
 
 def q99_corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "n_chars")
+    docs = documents(spark, sf_dir, "doc_id", "source", "n_chars")
     weight = (
         F.substring("source", 4, 10).cast("bigint") % MIX_WEIGHT_MOD + 1
     ).alias("weight")
@@ -800,7 +793,7 @@ def q107_line_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the agg is reusable and AQE picks broadcast only if the winner
     set measures small. Per-doc totals are a second narrow agg.
     """
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     t = F.split(F.trim("text"), TOKEN_RE)
     n_segs = (F.size(t) / SEG_WORDS).cast("int")
     segs = F.when(
@@ -850,7 +843,7 @@ def q108_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only exchange is _docs' round-robin source rebalance. Output
     fan-out is bounded by ~n/S chunks per doc.
     """
-    docs = _docs(spark, sf_dir).filter(F.length(F.trim("text")) > 0)
+    docs = documents(spark, sf_dir).filter(F.length(F.trim("text")) > 0)
     t = F.split(F.trim("text"), TOKEN_RE)
     n = F.size(t)
     n_chunks = F.when(n <= CHUNK_W, F.lit(1)).otherwise(
@@ -953,7 +946,7 @@ def clf_weights(spark: SparkSession) -> DataFrame:
 def q147_clf_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: bigram count, summed bucket weight, and the keep
     verdict at score + CLF_BIAS > 0."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = documents(spark, sf_dir, "doc_id", "text")
     t = F.split(F.trim("text"), TOKEN_RE)
     # zip-of-slices bigrams (outer refs in HOF lambdas re-run per
     # element — see q70's rewrite); empty for sub-2-token docs
@@ -1044,7 +1037,7 @@ def q148_reshard_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     that move INTO a brand-new shard (the rendezvous property makes
     these equal — the oracle and the data both prove it), movement in
     basis points."""
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = documents(spark, sf_dir, "doc_id")
     d = F.col("doc_id")
     assigned = docs.select(
         rendezvous_shard(d, RDV_OLD_SHARDS).alias("old_shard"),
@@ -1166,7 +1159,7 @@ def q155_fuzzy_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, gpos) and then per doc. Two narrow aggregations replace
     three explode passes plus two doc_id join-backs; at 100 TB the
     train side streams once instead of three times."""
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     is_eval = (
         F.pmod(h32(F.col("doc_id").cast("string"), CONTAM_SALT), F.lit(EVAL_MOD)) == 0
     )
@@ -1412,7 +1405,7 @@ BUDGET_SALT = "qual"
 
 
 def q150_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = documents(spark, sf_dir, "doc_id", "text")
     quality = F.pmod(h32(F.col("doc_id").cast("string"), BUDGET_SALT), F.lit(100))
     n_tokens = F.size(F.split(F.trim("text"), TOKEN_RE)).cast("bigint")
     scored = docs.select(

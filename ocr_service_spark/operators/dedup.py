@@ -16,21 +16,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ocr_service_spark.functions.hashing import h32, h32_sql
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the table lands as one small parquet file (one input split); the
-    # per-row work here (shingling, hashing) is CPU-bound, so spread it
-    # across the cluster before the expensive projections run
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+from ocr_service_spark.plans.parallelism import documents
 
 
 # -- exact dedup -----------------------------------------------------------------
 def q10_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-hash groups: canonical doc + duplicate count per text."""
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     return (
         docs.groupBy(F.md5("text").alias("content_hash"))
         .agg(F.min("doc_id").alias("canonical_doc_id"), F.count(F.lit(1)).alias("n_copies"))
@@ -61,7 +53,6 @@ MINHASH_VERIFY_MIN = 0.5  # exact-Jaccard floor applied after LSH candidate veri
 # already link the cluster together for the connected-components pass.
 # Same bound philosophy as q14's JACCARD_MAX_DF inverted-index cap.
 LSH_BUCKET_CAP = 64
-
 
 
 def posting_pair_structs(ids_col: str = "ids", a_name: str = "doc_a",
@@ -121,7 +112,7 @@ def _tokens(docs: DataFrame) -> DataFrame:
 def q15_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signature (MINHASH_PERMS permutations) over the
     distinct-token set — one explode + map-side partial min per perm."""
-    toks = _tokens(_docs(spark, sf_dir))
+    toks = _tokens(documents(spark, sf_dir))
     aggs = [
         F.min(h32(F.col("tok"), seed)).alias(f"mh{i}") for i, seed in enumerate(MINHASH_SEEDS)
     ]
@@ -179,7 +170,7 @@ def q34_minhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact verify touches only pairs that share a band. Output is
     directly comparable to q14's exact inverted-index pairs at the
     same threshold (LSH recall measurement comes free)."""
-    return _scored_lsh_candidates(_docs(spark, sf_dir)).filter(
+    return _scored_lsh_candidates(documents(spark, sf_dir)).filter(
         # post-verify cut on the ROUNDED value (both engines cut on
         # identical doubles): candidates that shared a band by luck —
         # common on this tiny-vocabulary corpus — are not near-dups
@@ -310,7 +301,7 @@ def q90_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     historical doc_id). At 10^12 docs the band index is the stored
     artifact (url-bucketed, appended per batch) and the verify side
     stores shingle sketches — the text table is never reopened."""
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     batch = _batch_docs(docs)
     hist_bands = _band_stack(_shingle_sigs(docs)).select(
         F.col("doc_id").alias("hist_id"), "band_key"
@@ -367,7 +358,7 @@ SIMHASH_BITS = 16
 
 def q17_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash: per-bit majority vote over token hashes."""
-    toks = _tokens(_docs(spark, sf_dir)).withColumn("h", h32(F.col("tok"), "sh|"))
+    toks = _tokens(documents(spark, sf_dir)).withColumn("h", h32(F.col("tok"), "sh|"))
     votes = [
         F.sum(
             F.when((F.col("h").bitwiseAND(F.lit(1 << b))) != 0, 1).otherwise(-1)
@@ -451,7 +442,7 @@ def q14_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     each posting — two full posting shuffles for what a broadcast of
     the per-doc counts attaches for free (guide §8: decide with small
     rows, ship metadata, not payloads)."""
-    toks = _shingles(_docs(spark, sf_dir)).select(
+    toks = _shingles(documents(spark, sf_dir)).select(
         "doc_id", F.xxhash64("tok").alias("tok")
     )
     # shuffle 1 (tok): posting lists with the doc-frequency cap applied
@@ -533,7 +524,7 @@ def q37_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = propagate_min_labels(
         nodes.withColumn("label", F.col("doc_id")), edges, K_HOPS
     )
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = documents(spark, sf_dir, "doc_id")
     return docs.join(labels, "doc_id", "left").select(
         "doc_id", F.coalesce("label", F.col("doc_id")).alias("cluster_id")
     )
@@ -547,7 +538,7 @@ def q38_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny groupBy; at 100 TB this is the query that decides what the
     training run actually reads."""
     labels = q37_dedup_components(spark, sf_dir)
-    docs = _docs(spark, sf_dir).select("doc_id", "lang", "n_chars")
+    docs = documents(spark, sf_dir, "doc_id", "lang", "n_chars")
     kept = F.col("doc_id") == F.col("cluster_id")
     return (
         docs.join(labels, "doc_id")
@@ -636,7 +627,7 @@ def q79_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputed for the join rather than cached — at 100 TB a columnar
     re-scan beats persisting a token-exploded corpus.
     """
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     w = F.split(F.trim("text"), r"\s+")
     n = F.size(w)
     # zip SPAN_K staggered slices of ONE tokenization: the old
@@ -987,7 +978,7 @@ LEAK_CLONES = 40
 def q100_split_leakage_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_service_spark.operators.text_stats import SPLIT_SALT, TRAIN_PCT
 
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = documents(spark, sf_dir, "doc_id", "text")
     clones = docs.filter(F.col("doc_id") < LEAK_CLONES).select(
         (F.col("doc_id") + LEAK_CLONE_OFFSET).alias("doc_id"), "text"
     )
@@ -1270,7 +1261,7 @@ def q124_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs measure containment ~1.0 with Jaccard 0.29-0.83 — the short
     wrapped articles fall BELOW q34's 0.5 resemblance cut and only the
     containment rule catches them."""
-    docs = _wrapped_docs(_docs(spark, sf_dir))
+    docs = _wrapped_docs(documents(spark, sf_dir))
     # The shingle string is only ever a GROUPING key here (the pair
     # explode emits ids, never the shingle), so post the 64-bit
     # fingerprint instead: the tok shuffle carries 8 bytes/row instead
@@ -1472,7 +1463,7 @@ def q125_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     union. Buckets are integer deciles (floor(jaccard*10)) so the
     grouping key is exact. At 100 TB this runs over a sampled eval
     slice; the shape is unchanged."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = documents(spark, sf_dir, "doc_id", "text")
     twins = _recall_twins(docs)
     aug = docs.unionByName(twins)
     # ground truth: exact shingle Jaccard per planted pair (1:1 join),
@@ -1694,7 +1685,7 @@ def q156_lsh_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     / candidates, basis points — identical on every row)."""
     from pyspark.sql import Window
 
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = documents(spark, sf_dir, "doc_id", "text")
     aug = docs.unionByName(_recall_twins(docs))
     scored = _scored_lsh_candidates(aug)
     decile = F.least(F.floor(F.col("jaccard") * 10), F.lit(9)).cast("bigint")

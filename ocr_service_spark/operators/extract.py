@@ -56,6 +56,8 @@ RESULT_SCHEMA = StructType(
     ]
 )
 
+# pages per salted bucket: one stage-B row extracts this many pages
+BUCKET_PAGES = 16
 # stage-A output: one row per (url, page bucket); payload rides along
 _EXPLODE_SCHEMA = "url string, bucket int, n_buckets int, page_count int, payload binary"
 # stage-B output: raw (unfinalized) text per bucket
@@ -132,7 +134,7 @@ def extract_documents(
 
 
 def explode_pdf_buckets(
-    big_pdfs: DataFrame, payload_col: str = "html", bucket_pages: int = 16
+    big_pdfs: DataFrame, payload_col: str = "html", bucket_pages: int = BUCKET_PAGES
 ) -> DataFrame:
     """Stage A: parse page count once, emit one row per page bucket.
 
@@ -175,7 +177,7 @@ def explode_pdf_buckets(
     return narrowed.mapInPandas(run, schema=_EXPLODE_SCHEMA)
 
 
-def extract_pdf_buckets(buckets: DataFrame, bucket_pages: int = 16) -> DataFrame:
+def extract_pdf_buckets(buckets: DataFrame, bucket_pages: int = BUCKET_PAGES) -> DataFrame:
     """Stage B: extract the raw text of one page bucket per row."""
     from ocr_service_spark.extraction.pdf_text import pdf_page_texts
 

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_service_spark.extraction.main_content import MIN_BLOCK_CHARS
+from ocr_service_spark.plans.parallelism import documents
 
 MAIN_SCHEMA = "url string, main_text string, n_kept bigint"
 
@@ -105,9 +106,7 @@ def extract_content_span_table(pages: DataFrame, payload_col: str = "html") -> D
 
 
 def q35_main_content_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = documents(spark, sf_dir)
     pages = docs.select(
         F.format_string("doc://%s.html", F.col("doc_id").cast("string")).alias("url"),
         F.encode(F.format_string(_PAGE_FMT, F.col("text")), "utf-8").alias("html"),
@@ -132,9 +131,7 @@ def q106_content_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     </p> tag that terminates the text run). DuckDB hash-checks every
     offset and every span text.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = documents(spark, sf_dir)
     pages = docs.select(
         F.format_string("doc://%s.html", F.col("doc_id").cast("string")).alias("url"),
         F.encode(F.format_string(_PAGE_FMT, F.col("text")), "utf-8").alias("html"),

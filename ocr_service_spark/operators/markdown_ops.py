@@ -16,7 +16,7 @@ the expected Markdown is a closed-form string DuckDB reconstructs and
 hash-checks byte-for-byte.
 
 100 TB: conversion is embarrassingly parallel per document — no
-shuffle anywhere; throughput scales with input splits exactly like
+shuffle beyond the input fan-out (plans/parallelism.py), exactly like
 extract_main_text (operators/main_content.py).
 """
 
@@ -27,6 +27,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ocr_service_spark.plans.parallelism import documents
 
 MD_SCHEMA = "url string, markdown string, n_blocks bigint"
 
@@ -75,9 +77,7 @@ _PAGE_FMT = (
 
 
 def q110_html_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = documents(spark, sf_dir)
     i = F.col("doc_id").cast("string")
     m = lambda k: (F.col("doc_id") % k).cast("string")  # noqa: E731
     pages = docs.select(

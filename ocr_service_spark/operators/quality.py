@@ -35,8 +35,10 @@ the Spark plan and the oracle SQL, eliminating construction-parity risk.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ocr_service_spark.plans.parallelism import fan_out
 
 TOKEN_RE = r"\s+"
 
@@ -221,19 +223,11 @@ C4_MIN_LINE_WORDS = 3
 C4_MIN_SENTENCES = 5
 
 
-def q96_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4 cleaning over a deterministic line corpus carved from each
-    document: every 10-word chunk becomes a line whose ending rotates
-    through {'.', none, ' javascript.', '!', short-'ok.'} by
-    (doc_id + line_no) % 5, and docs hit page-level hazards ('lorem
-    ipsum' line when doc_id%7==0, a '{' line when doc_id%11==3). Line
-    keep = ends in terminal punctuation AND >= 3 words AND no
-    'javascript'; page keep = >= 5 kept sentences AND no 'lorem ipsum'
-    AND no '{'. The kept text is pinned by md5. Map-only projection —
-    the higher-order transform/filter run inside codegen, no Python."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
+def _c4_lines() -> Column:
+    """The carved-line corpus over (doc_id, text) rows: one line per
+    C4_LINE_WORDS-word chunk, its ending picked by (doc_id + line_no) %
+    5, plus the page-level lorem (doc_id%7==0) and brace (doc_id%11==3)
+    lines. q96 and q164 share it."""
     d = F.col("doc_id")
     t = F.split(F.trim("text"), TOKEN_RE)
     n_chunks = F.floor((F.size(t) + F.lit(C4_LINE_WORDS - 1)) / C4_LINE_WORDS)
@@ -258,15 +252,37 @@ def q96_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         d % 7 == 0,
         F.concat(lines, F.array(F.lit("lorem ipsum dolor sit amet."))),
     ).otherwise(lines)
-    lines = F.when(
+    return F.when(
         d % 11 == 3, F.concat(lines, F.array(F.lit("var cfg = { a: 1 };")))
     ).otherwise(lines)
-    kept = F.filter(
+
+
+def _c4_kept(lines: Column) -> Column:
+    """C4's line keep rule: terminal punctuation, >= C4_MIN_LINE_WORDS
+    words, no 'javascript'."""
+    return F.filter(
         lines,
         lambda l: (F.size(F.split(F.trim(l), TOKEN_RE)) >= C4_MIN_LINE_WORDS)
         & F.rtrim(l).rlike("[.!?]$")
         & ~F.lower(l).rlike(r"\bjavascript\b"),
     )
+
+
+def q96_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """C4 cleaning over a deterministic line corpus carved from each
+    document: every 10-word chunk becomes a line whose ending rotates
+    through {'.', none, ' javascript.', '!', short-'ok.'} by
+    (doc_id + line_no) % 5, and docs hit page-level hazards ('lorem
+    ipsum' line when doc_id%7==0, a '{' line when doc_id%11==3). Line
+    keep = ends in terminal punctuation AND >= 3 words AND no
+    'javascript'; page keep = >= 5 kept sentences AND no 'lorem ipsum'
+    AND no '{'. The kept text is pinned by md5. Map-only projection —
+    the higher-order transform/filter run inside codegen, no Python."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    lines = _c4_lines()
+    kept = _c4_kept(lines)
     full = F.array_join(lines, "\n")
     has_lorem = full.rlike("lorem ipsum")
     has_brace = full.contains("{")
@@ -808,16 +824,10 @@ def _q152_body():
 
 
 def q152_repetition_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The documents table lands as ONE parquet file at bench scale, so a
-    # map-only plan inherits a single input split and the whole battery
-    # collapses onto one core (guide §2.5, input skew). The battery is
-    # compute-bound per doc, so spread the (doc_id, text) projection
-    # across the cluster before the heavy stage — the same fix the
-    # metadata/media generation fan-outs carry (q102/q103/q60/q61).
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    # the battery is compute-bound per doc: fan out (doc_id, text) first
+    docs = fan_out(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text"),
+        "doc_id",
     )
     pages = docs.select("doc_id", _q152_body().alias("body"))
 
@@ -1070,12 +1080,9 @@ def q164_filter_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
         _marker_pattern,
     )
 
-    # fan out before the battery (the q152 fix): the four verdicts cost
-    # dozens of regex passes per doc, and the one-file documents table
-    # would otherwise run that compute-bound projection on a single
-    # input split (at 100 TB the scan has real splits and this
-    # repartition is a no-op knob)
-    docs = (
+    # fan out before the battery: the four verdicts cost dozens of
+    # regex passes per doc
+    docs = fan_out(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", "text")
         .unionByName(
@@ -1083,7 +1090,6 @@ def q164_filter_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 sorted(_ABLATION_SYN.items()), "doc_id bigint, text string"
             )
         )
-        .repartition(spark.sparkContext.defaultParallelism)
     )
     d = F.col("doc_id")
     t = F.split(F.trim("text"), TOKEN_RE)
@@ -1096,38 +1102,9 @@ def q164_filter_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
         hit = F.when(F.col("text").rlike(rf"\b{w}\b"), 1).otherwise(0)
         stop_hits = hit if stop_hits is None else stop_hits + hit
 
-    # c4 carved-line corpus (q96's construction, verbatim)
-    n_chunks = F.floor((F.size(t) + F.lit(C4_LINE_WORDS - 1)) / C4_LINE_WORDS)
-
-    def mk_line(i):
-        base = F.array_join(
-            F.slice(t, (i * C4_LINE_WORDS + 1).cast("int"), C4_LINE_WORDS), " "
-        )
-        m = (d + i) % 5
-        return (
-            F.when(m == 4, F.lit("ok."))
-            .when(m == 0, F.concat(base, F.lit(".")))
-            .when(m == 1, base)
-            .when(m == 2, F.concat(base, F.lit(" javascript.")))
-            .otherwise(F.concat(base, F.lit("!")))
-        )
-
-    c4_lines = F.transform(
-        F.sequence(F.lit(0).cast("bigint"), n_chunks - 1), mk_line
-    )
-    c4_lines = F.when(
-        d % 7 == 0,
-        F.concat(c4_lines, F.array(F.lit("lorem ipsum dolor sit amet."))),
-    ).otherwise(c4_lines)
-    c4_lines = F.when(
-        d % 11 == 3, F.concat(c4_lines, F.array(F.lit("var cfg = { a: 1 };")))
-    ).otherwise(c4_lines)
-    c4_kept = F.filter(
-        c4_lines,
-        lambda l: (F.size(F.split(F.trim(l), TOKEN_RE)) >= C4_MIN_LINE_WORDS)
-        & F.rtrim(l).rlike("[.!?]$")
-        & ~F.lower(l).rlike(r"\bjavascript\b"),
-    )
+    # c4 carved-line corpus (q96's construction)
+    c4_lines = _c4_lines()
+    c4_kept = _c4_kept(c4_lines)
     c4_full = F.array_join(c4_lines, "\n")
 
     # url score components (q97, over the shared closed-form URL)

@@ -16,13 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_service_spark.operators.extract import extract_documents
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-file table: fan out so the extraction UDF gets real tasks
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+from ocr_service_spark.plans.parallelism import documents, fan_out
 
 
 def _extract_wrapped(docs: DataFrame, fmt: str, ext: str) -> DataFrame:
@@ -44,17 +38,17 @@ def _extract_wrapped(docs: DataFrame, fmt: str, ext: str) -> DataFrame:
 
 def q30_extract_html_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     fmt = "<!DOCTYPE html>\n<html><head><title>t</title></head><body><p>%s</p></body></html>"
-    return _extract_wrapped(_docs(spark, sf_dir), fmt, "html")
+    return _extract_wrapped(documents(spark, sf_dir), fmt, "html")
 
 
 def q31_extract_rtf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     fmt = "{\\rtf1\\ansi\\deff0{\\fonttbl{\\f0 Arial;}}%s\\par}"
-    return _extract_wrapped(_docs(spark, sf_dir), fmt, "rtf")
+    return _extract_wrapped(documents(spark, sf_dir), fmt, "rtf")
 
 
 def q32_extract_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     fmt = '<?xml version="1.0"?><doc kind="synthetic">%s</doc>'
-    return _extract_wrapped(_docs(spark, sf_dir), fmt, "xml")
+    return _extract_wrapped(documents(spark, sf_dir), fmt, "xml")
 
 
 def q33_payload_ladder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,7 +59,7 @@ def q33_payload_ladder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     job; the expected output per rung is SQL-expressible."""
     from ocr_service_spark.sources.pages import decode_payload_ladder
 
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     # F.base64 emits RFC-2045 chunked output (newline every 76 chars);
     # the reference's strict validator only accepts unchunked base64
     b64 = F.regexp_replace(F.base64(F.encode("text", "utf-8")), "[\\r\\n]", "")
@@ -137,7 +131,7 @@ def q62_charset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     reality of a Common-Crawl-style pages table."""
     import pandas as pd
 
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = documents(spark, sf_dir, "doc_id", "text")
 
     def gen(batches):
         for batch in batches:
@@ -179,7 +173,7 @@ def q66_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = documents(spark, sf_dir, "doc_id", "text")
     fmt = "<!DOCTYPE html>\n<html><head><title>t</title></head><body><p>%s</p></body></html>"
 
     def gen(batches):
@@ -228,7 +222,7 @@ def q48_pii_scrub_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     document, counted, and masked with JVM-side regexp_replace; the
     oracle rebuilds and scrubs the same text in SQL. All column work
     stays in whole-stage codegen — no Python in the loop."""
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     pii_text = F.format_string(
         "%s contact u%s@mail.example.org or 555-%s now",
         F.col("text"),
@@ -265,7 +259,7 @@ def q44_audio_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ocr_service_spark.operators.multimodal import extract_audio_features
 
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = documents(spark, sf_dir, "doc_id")
 
     def gen(batches):
         for batch in batches:
@@ -320,16 +314,13 @@ def _warc_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    # repartition BY SHARD with an explicit width: the input here is a
-    # few KB of doc_ids, so AQE would coalesce the groupBy's shuffle to
-    # one partition and build every shard's WARC blob (the expensive
-    # part) in a single task; a user-specified repartition width is not
-    # coalesced, and groupBy("shard") reuses its partitioning outright
-    docs = (
+    # fan out BY SHARD: each shard's WARC blob (the expensive part)
+    # builds in its own task and groupBy("shard") reuses the partitioning
+    docs = fan_out(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id")
-        .withColumn("shard", F.expr(f"doc_id div {WARC_SHARD_DOCS}"))
-        .repartition(spark.sparkContext.defaultParallelism, "shard")
+        .withColumn("shard", F.expr(f"doc_id div {WARC_SHARD_DOCS}")),
+        "shard",
     )
 
     def build(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -448,7 +439,7 @@ def q88_mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-free: at 100 TB this is a scan-side column repair."""
     from ocr_service_spark.extraction.charset import mojibake, repair_mojibake
 
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = documents(spark, sf_dir, "doc_id", "text")
 
     def gen(batches):
         import pandas as pd
@@ -482,9 +473,7 @@ def _cdx_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     malformed junk line per doc_id%19==0 that the parser must drop.
     Line assembly is a pure projection — the writer twin of
     sources/cdx.parse_cdx."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = documents(spark, sf_dir)
     d = F.col("doc_id")
     urlkey = F.format_string("com,example,cdx%d)/doc/%d", d % 6, d)
     url = F.format_string("https://cdx%d.example.com/doc/%d", d % 6, d)
@@ -590,7 +579,7 @@ def q133_epub_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = documents(spark, sf_dir, "doc_id")
 
     def gen(batches):
         for batch in batches:
@@ -923,18 +912,11 @@ def q117_wet_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = fetched.select("url", F.col("payload").alias("html"))
     results = extract_documents(pages).filter(F.col("success"))
     doc_id = F.regexp_extract("url", r"/doc/(\d+)$", 1).cast("bigint")
-    # explicit-width repartition by shard: the extracted rows are a few
-    # hundred KB, so AQE would coalesce the WET-assembly groupBy to one
-    # partition and build every shard's blob in a single task (the
-    # _warc_shards rationale); groupBy("shard") reuses this partitioning
-    conv = (
-        results.select(
-            doc_id.alias("doc_id"),
-            "url",
-            "extracted_text",
-        )
-        .withColumn("shard", F.expr(f"doc_id DIV {WARC_SHARD_DOCS}"))
-        .repartition(spark.sparkContext.defaultParallelism, "shard")
+    # fan out by shard, as _warc_shards does for the WARC build
+    conv = fan_out(
+        results.select(doc_id.alias("doc_id"), "url", "extracted_text")
+        .withColumn("shard", F.expr(f"doc_id DIV {WARC_SHARD_DOCS}")),
+        "shard",
     )
 
     def build_wet(pdf: "pd.DataFrame") -> "pd.DataFrame":

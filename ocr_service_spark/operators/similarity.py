@@ -78,6 +78,7 @@ from ocr_service_spark.operators.dedup import (
     _cap_bucket,
     posting_pair_structs,
 )
+from ocr_service_spark.plans.parallelism import fan_out
 
 TOPK = 10
 QUERY_VEC_ID = 0
@@ -86,17 +87,6 @@ EMB_DIM = 64
 LSH_BANDS = 8
 LSH_ROWS = 4  # planes per band; planes are indexed band*LSH_ROWS + j
 NEARDUP_MIN_COS = 0.45  # corpus has no true dups; keeps output non-trivial
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the table lands as one small parquet file (one input split); the
-    # per-row work downstream (SRP projections, norms, PQ/IVF scoring)
-    # is CPU-bound, so spread it across the cluster before the
-    # expensive projections run (the dedup._docs rationale; at 100 TB
-    # the scan has real splits and this is a no-op knob)
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
 
 
 def _dot(a, b):
@@ -246,7 +236,9 @@ def _stacked_keys(emb: DataFrame) -> DataFrame:
 
 # -- q20: brute-force cosine top-k --------------------------------------------
 def q20_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir).withColumn("vec", F.col("embedding").cast("array<double>"))
+    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet")).withColumn(
+        "vec", F.col("embedding").cast("array<double>")
+    )
     query = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(F.col("vec").alias("qvec"))
     joined = emb.filter(F.col("vec_id") != QUERY_VEC_ID).crossJoin(F.broadcast(query))
     cos = _dot(F.col("vec"), F.col("qvec")) / (
@@ -264,7 +256,7 @@ def q20_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q21: LSH bucket index ------------------------------------------------------
 def q21_lsh_ann_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded SRP-LSH bucket stats: one row per (band, bucket_key)."""
-    stacked = _stacked_keys(_emb(spark, sf_dir))
+    stacked = _stacked_keys(fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet")))
     return stacked.groupBy("band", "bucket_key").agg(
         F.count(F.lit(1)).alias("n_vectors"),
         F.countDistinct("label").alias("n_labels"),
@@ -284,7 +276,7 @@ def q19_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-identical embeddings (boilerplate pages) land in one bucket,
     and an uncapped bucket is a single-task quadratic explode — see
     dedup._cap_bucket for the recall argument."""
-    emb = _emb(spark, sf_dir).select(
+    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     )
     stacked = _stacked_keys(emb.select("vec_id", F.col("vec").alias("embedding")))
@@ -408,7 +400,7 @@ def q24_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF cell stats: one row per centroid cell. The assign is pure
     map-side (IVF_CELLS folds per row); the agg groups into at most
     IVF_CELLS rows — partial-agg combines do nearly all of it."""
-    emb = _emb(spark, sf_dir).select(
+    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet")).select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("vec")
     )
     return (
@@ -428,7 +420,7 @@ def q25_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     <=IVF_NPROBE-row DataFrame carrying the query vector, so the prune
     is a broadcast EQUI join on cell (never a nested-loop join) and
     the final top-k is orderBy().limit() = TakeOrderedAndProject."""
-    emb = _emb(spark, sf_dir).select(
+    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet")).select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("vec")
     )
     assigned = _with_cell(emb)
@@ -482,7 +474,7 @@ def q46_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-stage filter before exact re-ranking: the packed table is
     16 bytes/vector and the scan is SIMD-friendly bit math, with the
     final top-k planned as TakeOrderedAndProject."""
-    emb = _emb(spark, sf_dir).select(
+    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet")).select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("vec")
     )
     packed = emb.select(
@@ -519,7 +511,7 @@ def q85_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     join on ``cell`` (bounded groups — the SemDeDup trick), the
     filter applies to the ROUNDED cosine so both engines cut on
     identical values, and the keeper election is one min-struct agg."""
-    emb = _emb(spark, sf_dir).select(
+    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     )
     assigned = _with_cell(emb).select("vec_id", "vec", "cell")
@@ -577,7 +569,7 @@ def q85_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_neardup_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs scorer — small-n VERIFICATION BASELINE ONLY (O(n^2);
     tests use it to measure q19's LSH recall). Never the scale path."""
-    emb = _emb(spark, sf_dir).select(
+    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     )
     a = emb.select(F.col("vec_id").alias("vec_a"), F.col("vec").alias("va"))
@@ -602,9 +594,7 @@ def _km_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectors as integer codes (round(x*KM_SCALE)): every distance and
     every comparison downstream is integer arithmetic, so assignment is
     bit-stable across engines — no float-sum ordering hazards."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
     return emb.select(
         "vec_id",
         F.transform(

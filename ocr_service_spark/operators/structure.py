@@ -13,7 +13,8 @@ and DuckDB recomputes the expected structure from the same closed form
 nested-table and breadcrumb-pop rules.
 
 100 TB shape: q120/q123 are one Arrow-batched mapInPandas over
-(url, payload) — zero shuffles, the explode happens inside the UDF and
+(url, payload) — no shuffle beyond the input fan-out
+(plans/parallelism.py), the explode happens inside the UDF and
 is capped (MAX_CELLS / MAX_HEADINGS) so a pathological page bounds its
 own fan-out; q122 is pure whole-stage-codegen (regexp mark + split +
 posexplode), no Python at all.
@@ -26,6 +27,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ocr_service_spark.plans.parallelism import documents
 
 CELLS_SCHEMA = (
     "url string, table_idx bigint, row_idx bigint, col_idx bigint, "
@@ -147,9 +150,7 @@ def q120_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested-table isolation (every 10th doc nests a table inside a cell:
     the inner text forms table_idx 1 and the parent cell keeps only its
     own character data), and text outside tables contributing nothing."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = documents(spark, sf_dir)
     id_s = F.col("doc_id").cast("string")
     doc_cell = F.when(
         F.col("doc_id") % 10 == 0,
@@ -221,9 +222,7 @@ def q122_sentence_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     single spaces; the segmenter must recover exactly those groups
     (terminator kept with its sentence). Both the construction and the
     split are whole-stage codegen."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = documents(spark, sf_dir)
     toks = F.split(F.trim("text"), r"\s+")
     w = (F.col("doc_id") % 3 + 2).cast("int")
     n_sent = F.ceil(F.size(toks) / w).cast("int")
@@ -274,9 +273,7 @@ def q123_section_outline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pops the previous h2 — path shortens), odd docs' is an h3 (nests
     under the open h2 — path deepens), and the final h2 pops everything
     back to the h1. Inline markup inside ``<h1>`` pins tag stripping."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = documents(spark, sf_dir)
     id_s = F.col("doc_id").cast("string")
     m = (F.col("doc_id") % 5).cast("string")
     k = (F.col("doc_id") % 7).cast("string")
@@ -400,9 +397,7 @@ def q126_structured_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``offers`` object is skipped), JSON number -> string rendering
     (wordCount), and the malformed-JSON skip contract (doc_id%4==3's
     block contributes zero rows to the hash)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = documents(spark, sf_dir)
     id_s = F.col("doc_id").cast("string")
     nc_s = F.col("n_chars").cast("string")
     d = F.col("doc_id")
@@ -517,9 +512,7 @@ def q129_pub_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     module-level fixture notes above; the true date is closed-form in
     doc_id (year 2000+id%20, month 1+id%12, day 1+id%28) so DuckDB
     recomputes it without parsing any HTML."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = documents(spark, sf_dir)
     d = F.col("doc_id")
     iso = F.format_string(
         "%04d-%02d-%02d",

@@ -13,15 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_service_spark.functions.hashing import h32, h32_sql
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # one parquet file -> one input split; fan out before the CPU-bound
-    # regex/hash projections (at 100 TB the scan has real splits and
-    # this repartition is a no-op knob)
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+from ocr_service_spark.plans.parallelism import documents
 
 
 TOKEN_RE = r"\s+"
@@ -31,7 +23,7 @@ BPEISH_RE = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"
 
 # -- token counting ------------------------------------------------------------
 def q11_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     tokens = F.size(F.split(F.trim("text"), TOKEN_RE))
     bpeish = F.regexp_count(F.col("text"), F.lit(BPEISH_RE))
     return (
@@ -52,7 +44,7 @@ _SW_RE = r"\b(" + "|".join(STOPWORDS) + r")\b"
 
 
 def q12_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     tokens = F.size(F.split(F.trim("text"), TOKEN_RE)).cast("double")
     sw_hits = F.regexp_count(F.col("text"), F.lit(_SW_RE)).cast("double")
     alpha = F.regexp_count(F.col("text"), F.lit(r"[a-zA-Z]")).cast("double")
@@ -84,7 +76,7 @@ def _marker_pattern(markers: tuple[str, ...]) -> str:
 
 
 def q13_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     hits = {
         lang: F.regexp_count(F.col("text"), F.lit(_marker_pattern(markers)))
         for lang, markers in LANG_MARKERS.items()
@@ -110,7 +102,7 @@ def q18_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bottom-k document fingerprint: hash every char 8-gram, keep the
     two smallest — a winnowing-style sketch that is order-insensitive
     and deterministic, computed fully JVM-side via transform/sequence."""
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     # Guard the gram positions: F.sequence(1, n) DESCENDS when n < 1
     # (text shorter than the gram width), unlike DuckDB range() which
     # yields an empty list — clamp to an empty array to mirror it.
@@ -138,7 +130,7 @@ def q36_token_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     profiling). percentile_disc selects an actual sample — integer-exact
     across engines, no interpolation arithmetic to diverge on; it
     aggregates per group without collecting raw values to the driver."""
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     tokens = F.size(F.split(F.trim("text"), TOKEN_RE))
     agg = [F.count(F.lit(1)).alias("n_docs")] + [
         F.expr(
@@ -165,7 +157,7 @@ def q28_hll_distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     shards/days/partitions combine without touching raw tokens; the
     estimate is the standard alpha*m^2 / sum(2^-r) harmonic mean, same
     IEEE arithmetic on both engines."""
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     toks = docs.select(
         "lang", F.explode(F.array_distinct(F.split(F.trim("text"), TOKEN_RE))).alias("tok")
     )
@@ -208,7 +200,7 @@ def q29_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     only one row per distinct (lang, token)."""
     from pyspark.sql import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     toks = docs.select("lang", F.explode(F.split(F.trim("text"), TOKEN_RE)).alias("tok"))
     counts = toks.groupBy("lang", "tok").agg(F.count(F.lit(1)).alias("n"))
     w = Window.partitionBy("lang").orderBy(F.col("n").desc(), F.col("tok").asc())
@@ -262,7 +254,7 @@ def q139_count_min_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the distinct-token table. The exact-count side exists here
     only to MEASURE the sketch's error — at production scale the
     sketch replaces it; that is the point."""
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     toks = docs.select(F.explode(F.split(F.trim("text"), TOKEN_RE)).alias("tok"))
     sketch = (
         toks.select(F.explode(_cm_cells(F.col("tok"))).alias("cell"))
@@ -305,7 +297,7 @@ def q143_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-first-shard per type) plus windows over 16 rows."""
     from pyspark.sql import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     toks = docs.select(
         (F.col("doc_id") % VOCAB_SHARDS).cast("bigint").alias("shard"),
         F.explode(F.split(F.trim("text"), TOKEN_RE)).alias("tok"),
@@ -345,7 +337,7 @@ def q27_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition sorts a whole language."""
     from pyspark.sql import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     h = h32(F.col("doc_id").cast("string"), SAMPLE_SALT)
     w = Window.partitionBy("lang").orderBy(h.asc(), F.col("doc_id").asc())
     return (
@@ -365,7 +357,7 @@ def q39_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeat the same phrase; prose does not. Shape at 100 TB: bigram
     explode -> two partial-agg groupBys keyed by doc — the same
     map-side-combining pattern as the MinHash aggregations, no joins."""
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     t = F.split(F.trim("text"), TOKEN_RE)
     # zip-of-slices bigrams (outer refs in HOF lambdas re-run per
     # element — see q70's rewrite)
@@ -408,7 +400,7 @@ def q26_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shards, and incremental appends (no RNG, no stored assignment
     table). Pure map-side projection + a tiny groupBy; at 100 TB the
     split column would be written back and used for partition pruning."""
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     bucket = F.pmod(h32(F.col("doc_id").cast("string"), SPLIT_SALT), F.lit(100))
     split = F.when(bucket < TRAIN_PCT, F.lit("train")).otherwise(F.lit("val"))
     return (
@@ -437,7 +429,7 @@ def q83_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitespace words (corpus stats) and the BPE-ish pre-tokenizer
     (trainer cost). Pure whole-stage-codegen projection — no shuffle,
     no UDF; at 100 TB this is a map-only column append."""
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     ws = F.size(F.split(F.trim("text"), TOKEN_RE)).cast("bigint")
     bpe = F.size(F.regexp_extract_all("text", F.lit(BPE_PAT), F.lit(0))).cast("bigint")
     return docs.select(
@@ -472,7 +464,7 @@ def q81_lm_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself derives the cutoffs from a held-out sample rather than the
     full corpus — same 1-row broadcast, cheaper agg.
     """
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     w = F.split(F.trim("text"), TOKEN_RE)
     # zip-of-slices bigrams (outer refs in HOF lambdas re-run per
     # element — see q70's rewrite)
@@ -531,7 +523,7 @@ BPE_MAX_WORD = 24  # Gopher-style max word length; bounds the parity fold
 def _bpe_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(word, len, wcnt) for lowercase alpha words — the vocab table a
     BPE trainer iterates over. At 100 TB this is persisted once."""
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     w = docs.select(
         F.explode(
             F.regexp_extract_all(F.lower("text"), F.lit(r"[a-z]+"), F.lit(0))
@@ -810,7 +802,7 @@ def q93_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule is DSIR's top-quantile selection via ONE exact-percentile
     cutoff row cross-joined back (the q81 pattern) — no global rank
     shuffle."""
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     toks = docs.select(
         "doc_id",
         "lang",
@@ -1181,7 +1173,7 @@ def q109_unicode_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda x: unicodedata.normalize("NFC", x) if x is not None else None
         )
 
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     decomposed = F.replace(F.col("text"), F.lit("e"), F.lit("e" + _NFC_MARK))
     d = docs.select("doc_id", decomposed.alias("raw"))
     d = d.withColumn("nfc", nfc("raw"))
@@ -1220,7 +1212,7 @@ def q128_unicode_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixed-script token count, and the cleaned text's length + hash
     (controls must hash to their original text — the scrub is provably
     a no-op on clean input). Map-only at any scale."""
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     d = F.col("doc_id")
     raw = (
         F.when(d % 4 == 0, F.col("text"))
@@ -1286,7 +1278,7 @@ def q131_paragraph_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     para_lang, majority_lang, in_majority); the oracle replays every
     label closed-form from the planting, so cross-engine agreement
     pins the splitter, the scorer, and the election."""
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = documents(spark, sf_dir, "doc_id")
     d = F.col("doc_id")
     langs_arr = F.array([F.lit(lang) for lang in _SEG_LANGS])
     marker_text = F.array(
@@ -1373,7 +1365,7 @@ def q118_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction."""
     from pyspark.sql import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     tokens = F.size(F.split(F.trim("text"), TOKEN_RE)).cast("bigint")
     bins = (
         docs.select(tokens.alias("tokens"))
@@ -1433,7 +1425,7 @@ def q121_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     lift (milli): pair counts, unigram counts, and the exact PMI>ln2
     verdict."""
     docs = (
-        _docs(spark, sf_dir)
+        documents(spark, sf_dir)
         .select("doc_id", "text")
         .unionByName(
             spark.createDataFrame(

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_service_spark.functions.hashing import h32, h32_sql
+from ocr_service_spark.plans.parallelism import documents
 
 # Dialect-portable regexes (same semantics in Java regex and RE2).
 _RE_FRAGMENT = r"#.*$"
@@ -198,12 +199,7 @@ def _link_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id%3==0 add a subdirectory-relative link, every doc carries a
     fragment/javascript/mailto trio that must be dropped, and docs
     with doc_id%7==0 are marked noindex."""
-    # fan out before the page synthesis + outlink parse (q152/q102 rule)
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = documents(spark, sf_dir, "doc_id")
     d = F.col("doc_id").cast("string")
     url = F.format_string(
         "https://www.src%s.example.com/dir/page%s.html",
@@ -784,13 +780,7 @@ def q161_image_text_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept, keep=false); doc_id%7==0 adds a data: inline (dropped by
     hygiene, no row). The REAL parser runs end-to-end; the oracle
     replays the planting."""
-    # fan out before the page synthesis + real-parser extraction
-    # (the q152/q102 rule)
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = documents(spark, sf_dir, "doc_id")
     d = F.col("doc_id")
     ds = d.cast("string")
     page_url = F.format_string(
@@ -867,13 +857,7 @@ def q162_page_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     4 declares an unusable data: og:image (falls through to alt)."""
     import pandas as pd
 
-    # fan out before the page synthesis + real-parser extraction
-    # (the q152/q102 rule)
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = documents(spark, sf_dir, "doc_id")
     d = F.col("doc_id")
     ds = d.cast("string")
     page_url = F.format_string(
@@ -998,13 +982,7 @@ def q165_html_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     second table whose colspan=2 lead cell pushes the next cell to
     col_idx 2. The REAL parser runs end-to-end (charset ladder,
     tolerant close); the oracle replays the planting."""
-    # fan out before the page synthesis + real-parser extraction
-    # (the q152/q102 rule)
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = documents(spark, sf_dir, "doc_id")
     d = F.col("doc_id")
     ds = d.cast("string")
     page_url = F.format_string(
@@ -2300,9 +2278,7 @@ def q89_bloom_seen_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe: truly_seen (ground truth), bloom_hit (all K bits set),
     false_positive. Novel hits are the measured fp rate; misses of a
     seen url are impossible (the oracle proves zero)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = documents(spark, sf_dir)
     d = F.col("doc_id")
     seen_url = F.format_string("https://seen%d.example.com/page/%d", d % 11, d)
     novel_url = F.format_string("https://new%d.example.com/x/%d", d % 11, d)
@@ -2665,14 +2641,7 @@ def _canonical_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     urljoin resolution); every page carries a rel=stylesheet distractor
     and doc_id%30==5 pages declare a SECOND canonical that must lose
     the first-wins tie-break."""
-    # fan out the 8-byte doc_id projection before the compute-bound
-    # page synthesis + parse (the q152/q102 rule): the one-file table
-    # would otherwise build and parse every page on a single input split
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = documents(spark, sf_dir, "doc_id")
     d = F.col("doc_id")
     base = d - d % 3
     host = F.format_string("http://h%s.example.com", (base % 40).cast("string"))
@@ -3117,14 +3086,7 @@ def _hreflang_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     fr member declares NOTHING, breaking reciprocity for every edge
     pointing at it. A feed-alternate distractor rides on every page
     (must not parse as hreflang)."""
-    # fan out the 8-byte doc_id projection before the compute-bound
-    # page synthesis + parse (the q152/q102 rule): the one-file table
-    # would otherwise build and parse every page on a single input split
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = documents(spark, sf_dir, "doc_id")
     d = F.col("doc_id")
     base = d - d % 3
     member = d % 3
@@ -3471,12 +3433,7 @@ def _feed_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     skip must fire; ``updated`` already in Z time), d%10==7 is garbage
     bytes that must contribute zero items. Three items per feed with
     every field closed-form in (doc_id, item_idx)."""
-    # fan out before the feed synthesis + parse (the q152/q102 rule)
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = documents(spark, sf_dir, "doc_id")
     d = F.col("doc_id")
     months = F.array([F.lit(m) for m in _RFC822_MONTHS])
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ocr_service_spark.operators.extract import (
+    BUCKET_PAGES,
     explode_pdf_buckets,
     extract_documents,
     extract_pdf_buckets,
@@ -67,7 +68,7 @@ def run_extraction(
     pages: DataFrame,
     payload_col: str = "html",
     salt_min_bytes: int = SALT_MIN_BYTES,
-    bucket_pages: int = 16,
+    bucket_pages: int = BUCKET_PAGES,
     repartition: int | None = None,
     repartition_by_size: bool = False,
     metrics=None,

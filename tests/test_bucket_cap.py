@@ -106,17 +106,14 @@ def test_q14_q124_posting_cap_is_mapside_window_group_limit(spark, tmp_path):
     # exchange) plus the final one, exactly like _cap_bucket's.
     from pyspark.sql import functions as F
 
-    from ocr_service_spark.operators.dedup import (
-        _df_cap_prelimit,
-        _docs,
-        _shingles,
-    )
+    from ocr_service_spark.operators.dedup import _df_cap_prelimit, _shingles
+    from ocr_service_spark.plans.parallelism import documents
 
     sf_dir = _flood_docs_dir(spark, tmp_path)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
-    toks = _shingles(_docs(spark, sf_dir)).select(
+    toks = _shingles(documents(spark, sf_dir)).select(
         "doc_id", F.xxhash64("tok").alias("tok")
     )
     plan = (

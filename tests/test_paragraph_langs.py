@@ -62,10 +62,10 @@ def test_majority_tie_breaks_to_largest_lang_string(spark):
 
 
 def test_plan_has_no_data_shuffle(spark):
-    # the ONLY exchange allowed is _docs' round-robin generation
-    # repartition (fixture synthesis parallelism, pinned in
-    # test_plans.py) — the operator itself must introduce no keyed
-    # shuffle: no hash/range partitioning anywhere
+    # the ONLY exchange allowed is documents()' round-robin fan-out
+    # (fixture synthesis parallelism, pinned in test_plans.py) — the
+    # operator itself must introduce no keyed shuffle: no hash/range
+    # partitioning anywhere
     plan = q131_paragraph_langs(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
     assert "hashpartitioning" not in plan, plan
     assert "rangepartitioning" not in plan, plan

@@ -75,3 +75,37 @@ def test_wet_assembly_width_is_explicit(spark):
 
     plan = _plan(q117_wet_export(spark, SF_DIR))
     assert plan.count("REPARTITION_BY_NUM") >= 1, plan
+
+
+def test_fan_out_plans_explicit_width(spark):
+    """The helper itself: keyless fan_out is a round-robin exchange of
+    width defaultParallelism, keyed fan_out a hash exchange of the same
+    width, both REPARTITION_BY_NUM (user-sized, so AQE leaves them)."""
+    import re
+
+    from ocr_service_spark.plans.parallelism import fan_out
+
+    n = spark.sparkContext.defaultParallelism
+    df = spark.range(100).withColumnRenamed("id", "doc_id")
+    keyless = _plan(fan_out(df))
+    assert f"RoundRobinPartitioning({n}), REPARTITION_BY_NUM" in keyless, keyless
+    keyed = _plan(fan_out(df, "doc_id"))
+    assert re.search(rf"hashpartitioning\(doc_id#\d+L, {n}\), REPARTITION_BY_NUM", keyed), keyed
+
+
+def test_no_hand_rolled_fan_out():
+    """Builders fan out through plans/parallelism.py only: a
+    defaultParallelism in an operator module or the entry file is a
+    second copy of the rule."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    files = sorted((root / "ocr_service_spark" / "operators").glob("*.py"))
+    files.append(root / "__spark_entry__.py")
+    offenders = [
+        f"{path.relative_to(root)}:{i}"
+        for path in files
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "defaultParallelism" in line
+    ]
+    assert not offenders, offenders

@@ -64,5 +64,5 @@ def test_plan_is_codegen_only_no_join_no_shuffle(spark):
         .toString()
     )
     assert "Join" not in plan and "hashpartitioning" not in plan, plan
-    # only _docs' round-robin generation repartition may appear
+    # only documents()' round-robin fan-out may appear
     assert plan.count("Exchange") <= 1, plan

@@ -47,13 +47,13 @@ def test_packing_is_append_stable(spark):
     cutoff = 250
     import ocr_service_spark.operators.corpus as c
 
-    docs = c._docs(spark, SF_DIR).filter(f"doc_id < {cutoff}")
-    orig_docs = c._docs
-    c._docs = lambda s, d: docs
+    docs = c.documents(spark, SF_DIR, "doc_id", "text").filter(f"doc_id < {cutoff}")
+    orig_documents = c.documents
+    c.documents = lambda s, d, *cols: docs
     try:
         head = {r.doc_id: r for r in q82_sequence_packing(spark, SF_DIR).collect()}
     finally:
-        c._docs = orig_docs
+        c.documents = orig_documents
     assert head
     for doc_id, r in head.items():
         f = full[doc_id]

@@ -116,7 +116,7 @@ def extract_documents(
                 if metrics is not None:
                     metrics.docs.add(1)
                     metrics.bytes_in.add(0 if payload is None else len(payload))
-                    metrics.wall_ms.add(int(elapsed))
+                    metrics.wall_ms.add(elapsed)
                     if not row["extracted_text"]:
                         metrics.empty_text.add(1)
             yield _result_frame(rows)

@@ -21,6 +21,11 @@ configured):
   so re-processing a partially-written part is idempotent (the crash
   window between results-write and manifest-append re-runs that part
   and replaces its files);
+- one writer per part: the results are hash-partitioned on part_hash
+  (``fan_out``) before the write, so one run writes ONE file per part
+  directory for the price of one shuffle of result rows; writing
+  straight from the scan tasks would open a writer per part in every
+  task, tasks x n_parts small files (and read-back listings) per run;
 - the manifest row for a part is appended only after the part's
   results hit storage; manifest content (doc_count, empty-text count,
   confidence decile histogram) is aggregated by reading back the
@@ -35,6 +40,8 @@ import datetime as dt
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ocr_service_spark.plans.parallelism import fan_out
 
 DEFAULT_N_PARTS = 64
 
@@ -147,8 +154,11 @@ def run_with_checkpoint(
     results = run_extraction(todo, **extract_kwargs)
     results = with_part_hash(results, n_parts, hash_expr)
 
+    # one writer per part (module docstring): one file per part dir,
+    # and the extraction stage no longer hosts the write
     (
-        results.write.mode("overwrite")
+        fan_out(results, "part_hash")
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("part_hash")
         .parquet(results_path)
@@ -168,7 +178,8 @@ def run_with_checkpoint(
     # columns rather than text payloads.
     from ocr_service_spark.plans.snapshots import AS_OF_MAX_INLINE_PARTS
 
-    written = spark.read.parquet(results_path)
+    # the schema is known: reading with it skips the inference job
+    written = spark.read.schema(results.schema).parquet(results_path)
     done = completed_parts(spark, manifest_path, snapshot_id)
     if done is not None:
         done_list = [

@@ -15,6 +15,12 @@ back to one task; a user-specified ``repartition(n, ...)`` plans a
 fan-out (``fan_out(df, "shard")``) also lets a following
 ``groupBy(keys)`` reuse the partitioning without a second exchange.
 
+The second use of a keyed fan-out is one writer per output partition:
+before a ``partitionBy(key)`` write, ``fan_out(df, key)`` puts every
+row of one key in one task, so the write lands one file per partition
+directory instead of one per (task, key) pair
+(``manifest.run_with_checkpoint``'s results by ``part_hash``).
+
 The cost is not zero at scale: ``repartition(n)`` ALWAYS plans a full
 exchange (round-robin when keyless), so on a 100 TB table with real
 splits it shuffles every row it is handed. That is why callers narrow

@@ -6,7 +6,7 @@ WORKLOAD ?= webmix
 SEED ?= 1
 TRACE ?= 0
 
-.PHONY: test perf correctness bench bench-ab scaling
+.PHONY: test perf profile correctness bench scaling
 
 # the ROADMAP tier-1 command: local[nproc] (nproc counted with
 # OMP_NUM_THREADS unset, which would otherwise cap it), not local[32]
@@ -19,6 +19,12 @@ test:
 perf:
 	python3 perfbench/run.py --workload $(WORKLOAD) --seed $(SEED) --seconds 2 --trace $(TRACE)
 
+# every registered query: min-of-3 noop wall time plus jobs, stages,
+# tasks, executor/JVM/Python-worker time, shuffle and spill from the
+# Spark event log
+profile:
+	SPARK_GRAFT_SF_DIR=$(SF_DIR) python tools/profile_registry.py --json PROFILE.json
+
 # full-registry oracle sweep (ALL registered queries, not just the
 # driver's 50-query window) -> committed artifact next to the driver's
 # CORRECTNESS_r$(ROUND).json
@@ -27,10 +33,6 @@ correctness:
 
 bench:
 	python bench.py
-
-# session-accumulation A/B probe (fresh JVM per run, interleaved)
-bench-ab:
-	python tools/bench_ab.py 5
 
 scaling:
 	python tools/bench_scaling.py

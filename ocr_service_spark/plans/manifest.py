@@ -71,9 +71,10 @@ def completed_parts(
     design scale) and append duplicate lineage rows."""
     from pyspark.errors import AnalysisException
 
-    from ocr_service_spark.plans.snapshots import recover_manifest_swaps
+    from ocr_service_spark.plans.snapshots import manifest_present
 
-    recover_manifest_swaps(manifest_path)
+    if not manifest_present(spark, manifest_path):
+        return None
     try:
         manifest = spark.read.parquet(manifest_path)
     except AnalysisException:
@@ -87,19 +88,17 @@ def completed_parts(
 
 def resume_filter(
     pages: DataFrame,
-    spark: SparkSession,
-    manifest_path: str,
-    snapshot_id: str,
+    done: DataFrame | None,
     n_parts: int = DEFAULT_N_PARTS,
     hash_expr: Column | None = None,
 ) -> DataFrame:
-    """Drop documents whose partition is already manifested.
+    """Drop documents whose partition is already manifested; ``done``
+    is ``completed_parts``' frame (None before the first commit).
 
     The completed-part set is tiny (≤ n_parts rows): the anti-join is
     broadcast, so resume costs one scan-side hash probe, no shuffle.
     """
     pages = with_part_hash(pages, n_parts, hash_expr)
-    done = completed_parts(spark, manifest_path, snapshot_id)
     if done is None:
         return pages
     return pages.join(F.broadcast(done), "part_hash", "left_anti")
@@ -145,11 +144,20 @@ def run_with_checkpoint(
     **extract_kwargs,
 ) -> None:
     """Resumable extraction: skip manifested parts, write results with
-    per-part overwrite, then append the manifest rows."""
+    per-part overwrite, then append the manifest rows. A rerun whose
+    every part is manifested returns before scanning the pages."""
     from ocr_service_spark.plans.job import run_extraction
+    from ocr_service_spark.plans.snapshots import AS_OF_MAX_INLINE_PARTS, latest_commit
 
+    # the done set is read once, up front: the manifest is single-writer,
+    # so nothing appends to it between here and the read-back below
     snapshot_id = input_snapshot_id(pages_path, n_parts)
-    todo = resume_filter(pages, spark, manifest_path, snapshot_id, n_parts, hash_expr)
+    done = completed_parts(spark, manifest_path, snapshot_id)
+    # (at most n_parts rows: part_hash < n_parts within one snapshot)
+    done_list = [] if done is None else [r["part_hash"] for r in done.collect()]
+    if len(done_list) >= n_parts:
+        return
+    todo = resume_filter(pages, done, n_parts, hash_expr)
 
     results = run_extraction(todo, **extract_kwargs)
     results = with_part_hash(results, n_parts, hash_expr)
@@ -176,20 +184,12 @@ def run_with_checkpoint(
     # manifest aggregation projects only the lineage columns, so
     # parquet column pruning keeps the re-read to metadata-sized
     # columns rather than text payloads.
-    from ocr_service_spark.plans.snapshots import AS_OF_MAX_INLINE_PARTS
-
     # the schema is known: reading with it skips the inference job
     written = spark.read.schema(results.schema).parquet(results_path)
-    done = completed_parts(spark, manifest_path, snapshot_id)
-    if done is not None:
-        done_list = [
-            r["part_hash"] for r in done.limit(AS_OF_MAX_INLINE_PARTS + 1).collect()
-        ]
-        if len(done_list) > AS_OF_MAX_INLINE_PARTS:
-            written = written.join(F.broadcast(done), "part_hash", "left_anti")
-        elif done_list:
-            written = written.filter(~F.col("part_hash").isin(done_list))
-    from ocr_service_spark.plans.snapshots import latest_commit
+    if len(done_list) > AS_OF_MAX_INLINE_PARTS:
+        written = written.join(F.broadcast(done), "part_hash", "left_anti")
+    elif done_list:
+        written = written.filter(~F.col("part_hash").isin(done_list))
 
     commit_seq = latest_commit(spark, manifest_path) + 1
     (

@@ -49,6 +49,19 @@ def recover_manifest_swaps(manifest_path: str) -> None:
         recover_interrupted_swap(manifest_path, suffix)
 
 
+def manifest_present(spark: SparkSession, manifest_path: str) -> bool:
+    """Whether the manifest directory exists (after healing an
+    interrupted swap). The probe goes through the path's Hadoop
+    FileSystem, so local paths and scheme-qualified URIs (``file:/``,
+    ``hdfs://``) answer alike. Only a missing path means absent: any
+    other IO failure propagates, like a failing read. Probing first
+    keeps a first run from a failing ``spark.read`` and the WARN stack
+    trace Spark logs for it."""
+    recover_manifest_swaps(manifest_path)
+    path = spark._jvm.org.apache.hadoop.fs.Path(manifest_path)
+    return bool(path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path))
+
+
 def _read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
     """Schema-migrating manifest read: manifests written before the
     snapshot layer lack ``commit_seq``, and a plain parquet read of a
@@ -68,12 +81,14 @@ def _read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
 def latest_commit(spark: SparkSession, manifest_path: str) -> int:
     """Highest commit_seq in the manifest (0 when absent/empty).
 
-    Only a MISSING/unreadable-as-a-table manifest (AnalysisException:
-    path not found / no parquet to infer from) maps to 0. A transient
+    Only a MISSING directory or an unreadable-as-a-table manifest
+    (AnalysisException: no parquet to infer from) maps to 0. A transient
     IO error must PROPAGATE: swallowing it would restart commit_seq at
     1 and append duplicate lineage rows under a reused snapshot id."""
     from pyspark.errors import AnalysisException
 
+    if not manifest_present(spark, manifest_path):
+        return 0
     try:
         manifest = _read_manifest(spark, manifest_path)
         row = manifest.agg(F.max("commit_seq").alias("m")).collect()[0]

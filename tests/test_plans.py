@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_service_spark.plans.job import run_extraction
-from ocr_service_spark.plans.manifest import resume_filter, with_part_hash
+from ocr_service_spark.plans.manifest import completed_parts, resume_filter, with_part_hash
 from ocr_service_spark.operators.relational import q02_revenue_by_region
 from ocr_service_spark.sources.pages import generate_pages
 
@@ -135,7 +135,7 @@ def test_resume_antijoin_is_broadcast(spark, pages_path):
         8,
     ).limit(50)
     manifest_from_results(results, "snap").write.mode("overwrite").parquet(manifest_path)
-    todo = resume_filter(pages, spark, manifest_path, "snap", 8)
+    todo = resume_filter(pages, completed_parts(spark, manifest_path, "snap"), 8)
     plan = _formatted_plan(todo)
     assert "LeftAnti" in plan
     assert "Broadcast" in plan

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from ocr_service_spark.extraction import extract_document
 from ocr_service_spark.plans.job import run_extraction
 from ocr_service_spark.plans.manifest import (
+    completed_parts,
     input_snapshot_id,
     resume_filter,
     run_with_checkpoint,
@@ -148,7 +149,7 @@ def test_checkpoint_resume(spark, tmp_path):
     assert done1 <= {0, 1, 2, 3} and done1
 
     # resume must only schedule the missing parts
-    todo = resume_filter(pages, spark, manifest_path, snapshot, n_parts)
+    todo = resume_filter(pages, completed_parts(spark, manifest_path, snapshot), n_parts)
     remaining = {r["part_hash"] for r in todo.select("part_hash").distinct().collect()}
     assert remaining.isdisjoint(done1)
 

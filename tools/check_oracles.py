@@ -63,8 +63,15 @@ def main() -> int:
     for name in sorted(oracles):
         if only and name not in only:
             continue
-        sdf = qs[name](spark, sf_dir).toPandas()
-        ddf = con.execute(oracles[name]).fetch_df()
+        try:
+            sdf = qs[name](spark, sf_dir).toPandas()
+            ddf = con.execute(oracles[name]).fetch_df()
+        except Exception as ex:  # noqa: BLE001 — a FAIL record, keep checking
+            problems = [f"{type(ex).__name__}: {ex}"[:300]]
+            print(f"FAIL {name}: {problems[0]}")
+            records.append({"query": name, "ok": False, "rows": None, "problems": problems})
+            failed.append(name)
+            continue
         cols = sorted(sdf.columns)
         problems = []
         if sorted(ddf.columns) != cols:

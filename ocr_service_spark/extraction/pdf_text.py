@@ -22,6 +22,23 @@ public PDF 1.7 spec (ISO 32000-1), scoped to text extraction:
   > WinAnsi/MacRoman/Standard base encodings; Type0/Identity-H fonts
   decode 2-byte codes through their ToUnicode CMap.
 
+Glyph runs: a show operator handles its whole string at once, with no
+Python call per glyph. A font memoizes code -> text and, per text state
+(size, Tc, Tw, Tz), code -> pen advance. The run's text is one join,
+appended to the page once, plus an empty string when the last glyph
+decodes to "" so the next show's inserted-space rule still reads the
+last glyph. The advances are folded into the pen with
+``reduce(operator.add, ...)``: the same float additions in the same
+order as a per-glyph ``pen_x += adv``, so every gap decision rounds
+exactly as before (``sum``/``fsum`` would change the rounding).
+
+Open once, extract many ranges: ``OpenedPdf`` is the one parse path
+(object scan, decryption, page tree); ``pdf_page_texts`` and
+``pdf_to_text`` open a document and interpret a page range of it. An
+open document caches the streams pages share (object streams,
+ToUnicode CMaps) but not page content, which is decoded per page, so
+keeping it open costs no more memory as more pages are interpreted.
+
 Encrypted documents raise ``PdfEncryptedError`` (the reference's
 pdfium would equally fail without a password); the pipeline maps this
 to the reference's swallowed-exception empty result (processor.py:93-95).
@@ -30,9 +47,19 @@ to the reference's swallowed-exception empty result (processor.py:93-95).
 from __future__ import annotations
 
 import re
+import struct
 import zlib
+from functools import reduce
+from operator import add
 
-__all__ = ["pdf_to_text", "pdf_page_count", "pdf_page_texts", "PdfError", "PdfEncryptedError"]
+__all__ = [
+    "pdf_to_text",
+    "pdf_page_count",
+    "pdf_page_texts",
+    "OpenedPdf",
+    "PdfError",
+    "PdfEncryptedError",
+]
 
 
 class PdfError(Exception):
@@ -59,6 +86,9 @@ class Name(str):
 
 _WS = b"\x00\t\n\x0c\r "
 _DELIM = b"()<>[]{}/%"
+# the bytes a literal string treats specially; everything between them
+# is copied as one slice
+_STRING_SPECIAL = re.compile(rb"[()\\]")
 
 
 class _Lexer:
@@ -112,7 +142,15 @@ class _Lexer:
         out = bytearray()
         depth = 1
         d, n = self.data, self.n
+        special = _STRING_SPECIAL.search
         while self.pos < n:
+            m = special(d, self.pos)
+            if m is None:
+                out += d[self.pos :]
+                self.pos = n
+                break
+            out += d[self.pos : m.start()]
+            self.pos = m.start()
             c = d[self.pos]
             if c == 0x5C:  # backslash
                 self.pos += 1
@@ -146,15 +184,12 @@ class _Lexer:
                 depth += 1
                 out.append(c)
                 self.pos += 1
-            elif c == 0x29:
+            else:  # 0x29
                 depth -= 1
                 self.pos += 1
                 if depth == 0:
                     break
                 out.append(c)
-            else:
-                out.append(c)
-                self.pos += 1
         return bytes(out)
 
     def read_hex_string(self) -> bytes:
@@ -399,7 +434,11 @@ class _Document:
             depth += 1
         return obj
 
-    def stream_bytes(self, num: int) -> bytes:
+    def stream_bytes(self, num: int, cache: bool = True) -> bytes:
+        """The decoded data of stream object ``num``. ``cache=False`` is
+        for page content, which is interpreted once: an open document
+        then holds only what pages share (ToUnicode CMaps, object
+        streams), not every page decoded so far."""
         if num in self._decoded:
             return self._decoded[num]
         if num not in self.streams:
@@ -417,7 +456,8 @@ class _Document:
             raw = self.data[start : end if end >= 0 else len(self.data)].rstrip(b"\r\n")
         raw = self._decrypt(num, raw)
         out = self._decode_filters(d, raw)
-        self._decoded[num] = out
+        if cache:
+            self._decoded[num] = out
         return out
 
     def _decode_filters(self, d: dict, raw: bytes) -> bytes:
@@ -774,9 +814,25 @@ def _parse_tounicode(cmap: bytes) -> dict[int, str]:
     return out
 
 
+class _Memo(dict):
+    """key -> ``fn(key)``, computed on first lookup."""
+
+    __slots__ = ("fn",)
+
+    def __init__(self, fn) -> None:
+        self.fn = fn
+
+    def __missing__(self, key):
+        value = self[key] = self.fn(key)
+        return value
+
+
 class _Font:
     def __init__(self, doc: _Document, fdict: dict) -> None:
         self.doc = doc
+        self.chars = _Memo(self.char)  # code -> text
+        # (size, Tc, Tw, hscale) -> code -> pen advance
+        self._advances: dict[tuple, _Memo] = {}
         fdict = doc.resolve(fdict) or {}
         self.subtype = fdict.get("Subtype")
         self.two_byte = self.subtype == "Type0"
@@ -849,11 +905,13 @@ class _Font:
                 break
 
     def codes(self, raw: bytes):
+        """The character codes of a shown string: its bytes, or its
+        big-endian 16-bit pairs for a Type0 font (an odd trailing byte
+        is dropped)."""
         if self.two_byte:
-            for i in range(0, len(raw) - 1, 2):
-                yield (raw[i] << 8) | raw[i + 1]
-        else:
-            yield from raw
+            n = len(raw) // 2
+            return struct.unpack(">%dH" % n, raw[: 2 * n])
+        return raw
 
     def char(self, code: int) -> str:
         if code in self.tounicode:
@@ -877,6 +935,23 @@ class _Font:
 
     def width(self, code: int) -> float:
         return self.widths.get(code, self.default_width)
+
+    def advances(self, size: float, char_spacing: float, word_spacing: float, hscale: float):
+        """code -> horizontal pen advance under one text state (PDF 1.7
+        §9.4.4: (w0 * Tfs + Tc + Tw) * Th, Tw for single-byte code 32)."""
+        key = (size, char_spacing, word_spacing, hscale)
+        memo = self._advances.get(key)
+        if memo is None:
+            word = not self.two_byte
+
+            def advance(code: int) -> float:
+                adv = self.width(code) / 1000.0 * size + char_spacing
+                if code == 32 and word:
+                    adv += word_spacing
+                return adv * hscale
+
+            memo = self._advances[key] = _Memo(advance)
+        return memo
 
 
 # ---------------------------------------------------------------------------
@@ -938,13 +1013,14 @@ def _interpret_page(doc: _Document, content: bytes, fonts: dict[str, _Font]) -> 
             and not out[-1].endswith(("\n", " "))
         ):
             out.append(" ")
-        for code in font.codes(raw):
-            ch = font.char(code)
-            out.append(ch)
-            adv = font.width(code) / 1000.0 * st.size + st.char_spacing
-            if code == 32 and not font.two_byte:
-                adv += st.word_spacing
-            pen_x += adv * st.hscale
+        codes = font.codes(raw)
+        if codes:
+            chars = font.chars
+            out.append("".join(map(chars.__getitem__, codes)))
+            if not chars[codes[-1]]:
+                out.append("")  # the space rule above reads the last glyph
+            advance = font.advances(st.size, st.char_spacing, st.word_spacing, st.hscale)
+            pen_x = reduce(add, map(advance.__getitem__, codes), pen_x)
         last_end_x = pen_x
         st.tm[4] = pen_x
 
@@ -1057,40 +1133,58 @@ def _page_content(doc: _Document, page: dict) -> bytes:
         refs = [r for r in contents if isinstance(r, Ref)]
     parts = []
     for ref in refs:
-        parts.append(doc.stream_bytes(ref.num))
+        parts.append(doc.stream_bytes(ref.num, cache=False))
     return b"\n".join(parts)
+
+
+def _parse(stream: bytes, password: bytes = b"") -> tuple[_Document, list[dict]]:
+    if not stream.startswith(b"%PDF"):
+        raise PdfError("not a pdf")
+    doc = _Document(stream, password=password)
+    return doc, doc.pages()
+
+
+class OpenedPdf:
+    """A parsed document, ready to interpret any page range: the open
+    step of ``pdf_page_texts``. The salted bucket stage keeps one open
+    for a consecutive run of a document's bucket rows instead of
+    re-parsing it for every bucket.
+
+    ``password`` unlocks standard-security-handler documents; with the
+    default empty password, docs that verify against the empty user
+    password decrypt transparently (pdfium behavior) and others raise
+    PdfEncryptedError. A non-PDF or an empty page tree raises PdfError."""
+
+    __slots__ = ("_doc", "_pages")
+
+    def __init__(self, stream: bytes, password: bytes = b"") -> None:
+        self._doc, self._pages = _parse(stream, password)
+        if not self._pages:
+            raise PdfError("no pages")
+
+    def page_texts(self, start: int = 0, stop: int | None = None) -> list[str]:
+        """Per-page text of the half-open page range [start, stop)."""
+        doc = self._doc
+        texts = []
+        for page in self._pages[start:stop]:
+            fonts = _page_fonts(doc, page)
+            content = _page_content(doc, page)
+            texts.append(_interpret_page(doc, content, fonts))
+        return texts
 
 
 def pdf_page_texts(
     stream: bytes, start: int = 0, stop: int | None = None, password: bytes = b""
 ) -> list[str]:
     """Per-page text in page order, optionally restricted to the
-    half-open page range [start, stop) — the salted explode/re-agg path
-    extracts one bucket of pages per task. The reference concatenates
-    page texts with no separator (converter.py:193-197).
-
-    ``password`` unlocks standard-security-handler documents; with the
-    default empty password, docs that verify against the empty user
-    password decrypt transparently (pdfium behavior) and others raise
-    PdfEncryptedError."""
-    if not stream.startswith(b"%PDF"):
-        raise PdfError("not a pdf")
-    doc = _Document(stream, password=password)
-    pages = doc.pages()
-    if not pages:
-        raise PdfError("no pages")
-    texts = []
-    for page in pages[start:stop]:
-        fonts = _page_fonts(doc, page)
-        content = _page_content(doc, page)
-        texts.append(_interpret_page(doc, content, fonts))
-    return texts
+    half-open page range [start, stop). The reference concatenates
+    page texts with no separator (converter.py:193-197)."""
+    return OpenedPdf(stream, password).page_texts(start, stop)
 
 
 def pdf_page_count(stream: bytes) -> int:
-    if not stream.startswith(b"%PDF"):
-        raise PdfError("not a pdf")
-    return len(_Document(stream).pages())
+    """Page count; 0 for an empty page tree."""
+    return len(_parse(stream)[1])
 
 
 def pdf_to_text(stream: bytes, password: bytes = b"") -> tuple[str, int]:

@@ -448,9 +448,11 @@ def q14_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle 1 (tok): posting lists with the doc-frequency cap applied
     # inline — rare shingles only, from a single shingle pass; the
     # WindowGroupLimit pre-limit bounds what any reducer ever holds.
-    # Checkpointed lazily: two consumers below, and column-pruning
+    # Checkpointed: two consumers below, and column-pruning
     # differences would otherwise defeat ReuseExchange and run the
-    # explode+prelimit subtree once per consumer.
+    # explode+prelimit subtree once per consumer. eager=False does not
+    # defer it: with AQE on (session.py) the call itself runs the
+    # upstream shuffle stage, while the DataFrame is being built.
     rare_ids = (
         _df_cap_prelimit(toks)
         .groupBy("tok")
@@ -558,16 +560,19 @@ def propagate_min_labels(labels: DataFrame, edges: DataFrame, rounds: int) -> Da
     labels(doc_id, label) and directed edges(src, dst): after round k
     every node's label is the minimum label within graph distance k.
 
-    Lineage is truncated with a LAZY localCheckpoint on the edge set
-    and on each round's labels. Without it the logical plan re-expands
+    Lineage is truncated with a localCheckpoint(eager=False) on the
+    edge set and on each round's labels. Without it the logical plan re-expands
     shared subtrees per reference: edges (the whole upstream LSH
     pipeline when called from q37) appears once per round, and
     labels(k-1) appears TWICE inside labels(k) — a 2^rounds blowup
     that Catalyst/AQE exchange-reuse only partially collapses
     (measured 65 s for q154 at sf0.1; 4 s with truncation). The
     checkpoint is the in-memory form of the write-labels/read-back
-    snapshot truncation the cluster-scale loop uses; eager=False keeps
-    the operator lazy — nothing runs until the caller's action."""
+    snapshot truncation the cluster-scale loop uses. eager=False does
+    NOT keep the operator lazy: with AQE on (session.py), the call runs
+    every upstream shuffle stage at once, so each non-trivial checkpoint
+    is a job while the DataFrame is being built, before the caller's
+    action."""
     edges = edges.localCheckpoint(eager=False)
     # One round = min over (self ∪ in-neighbours), expressed as a single
     # join+agg against the edge set EXTENDED WITH SELF-LOOPS: label(v)
@@ -575,7 +580,7 @@ def propagate_min_labels(labels: DataFrame, edges: DataFrame, rounds: int) -> Da
     # min_{u→v} label(u)), exactly the old join+agg+left-join round but
     # with labels referenced ONCE per round. That single reference is
     # what kills the 2^rounds plan blowup at its root: the un-checkpointed
-    # chain grows linearly, so the per-round lazy checkpoints (and their
+    # chain grows linearly, so the per-round checkpoints (and their
     # materialization barriers) go away entirely, and the 8 identical
     # scans of the checkpointed looped-edge set share one
     # BroadcastExchange via ReuseExchange instead of rebuilding the
@@ -996,7 +1001,7 @@ def q100_split_leakage_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |val bucket| x |train bucket| (see _cap_bucket's recall argument;
     # the LEAK_CLONES originals have the lowest doc_ids and always
     # survive a lowest-ids-first cap)
-    # two consumers (vb, tb): the lazy checkpoint stops the signature
+    # two consumers (vb, tb): the checkpoint stops the signature
     # map stage being planned (and run) once per side of the band join
     bands = _cap_bucket(
         _band_stack(sigs).join(sp, "doc_id"), ["band_key", "split"], "doc_id"
@@ -1269,7 +1274,7 @@ def q124_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (guide §2.3 "narrower types").
     toks = _shingles(docs).select("doc_id", F.xxhash64("tok").alias("tok"))
     # grouped has two consumers (posting -> pairs, n_ok -> per-doc
-    # bound); the lazy checkpoint stops the explode+prelimit subtree
+    # bound); the checkpoint stops the explode+prelimit subtree
     # being planned (and run) once per consumer — column-pruning
     # differences defeat ReuseExchange here.
     grouped = (
@@ -1309,9 +1314,10 @@ def q124_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_ok"))
     )
     # One per-doc fingerprint frame serves the size/bound metadata AND
-    # the exact verify; the lazy localCheckpoint (the q37/propagate
+    # the exact verify; the localCheckpoint (the q37/propagate
     # precedent) materializes the shingle+hash projection once instead
-    # of once per consumer.
+    # of once per consumer. Under AQE its eager=False still runs the
+    # upstream shuffle stages when it is called, not at the action.
     doc_fps = docs.select(
         "doc_id",
         F.transform(_shingle_array(), lambda s: F.xxhash64(s)).alias("toks"),

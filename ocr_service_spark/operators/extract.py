@@ -9,6 +9,9 @@ Three operators compose the extraction job (plans/job.py):
   spreads across tasks ("salting on (url, page_range)" per the north
   rule). Page count is parsed once here.
 - ``extract_pdf_buckets``  — stage B: per-bucket raw page-range text.
+  A task parses a document once per consecutive run of its rows
+  (``pdf_text.OpenedPdf``), not once per bucket; the page interpreter
+  handles each shown string as one glyph run (see ``pdf_text``).
   ``reassemble_pdf_results`` then re-aggregates with an ordered concat
   (array_sort over (bucket, txt) structs) — deterministic page order,
   unlike the reference's ``imap_unordered`` pool (converter.py:170-175).
@@ -21,6 +24,7 @@ from __future__ import annotations
 
 import time
 from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -35,6 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ocr_service_spark.extraction.pdf_text import OpenedPdf
 from ocr_service_spark.extraction.pipeline import extract_document
 
 RESULT_SCHEMA = StructType(
@@ -177,44 +182,69 @@ def explode_pdf_buckets(
     return narrowed.mapInPandas(run, schema=_EXPLODE_SCHEMA)
 
 
-def extract_pdf_buckets(buckets: DataFrame, bucket_pages: int = BUCKET_PAGES) -> DataFrame:
-    """Stage B: extract the raw text of one page bucket per row."""
-    from ocr_service_spark.extraction.pdf_text import pdf_page_texts
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict[str, list] = {
-                "url": [],
-                "bucket": [],
-                "page_count": [],
-                "txt": [],
-                "error": [],
-            }
-            for url, bucket, page_count, payload in zip(
-                batch["url"], batch["bucket"], batch["page_count"], batch["payload"]
-            ):
-                txt, error = "", False
-                if page_count < 0:
+def _bucket_texts(batches: Iterator[pd.DataFrame], bucket_pages: int) -> Iterator[pd.DataFrame]:
+    """The body of ``extract_pdf_buckets``: one text row per bucket row."""
+    open_url: str | None = None
+    opened: OpenedPdf | None = None  # None: open_url failed to open
+    for batch in batches:
+        out: dict[str, list] = {
+            "url": [],
+            "bucket": [],
+            "page_count": [],
+            "txt": [],
+            "error": [],
+        }
+        for url, bucket, page_count, payload in zip(
+            batch["url"], batch["bucket"], batch["page_count"], batch["payload"]
+        ):
+            txt, error = "", False
+            if page_count < 0:
+                error = True
+            else:
+                if open_url is None or url != open_url:
+                    open_url = url
+                    try:
+                        opened = OpenedPdf(bytes(payload))
+                    except Exception:
+                        opened = None
+                if opened is None:
                     error = True
                 else:
                     try:
                         start = int(bucket) * bucket_pages
-                        txt = "".join(
-                            pdf_page_texts(bytes(payload), start, start + bucket_pages)
-                        )
+                        txt = "".join(opened.page_texts(start, start + bucket_pages))
                     except Exception:
                         error = True
-                out["url"].append(url)
-                out["bucket"].append(int(bucket))
-                out["page_count"].append(int(page_count))
-                out["txt"].append(txt)
-                out["error"].append(error)
-            frame = pd.DataFrame(out)
-            frame["bucket"] = frame["bucket"].astype("int32")
-            frame["page_count"] = frame["page_count"].astype("int32")
-            yield frame
+            out["url"].append(url)
+            out["bucket"].append(int(bucket))
+            out["page_count"].append(int(page_count))
+            out["txt"].append(txt)
+            out["error"].append(error)
+        frame = pd.DataFrame(out)
+        frame["bucket"] = frame["bucket"].astype("int32")
+        frame["page_count"] = frame["page_count"].astype("int32")
+        yield frame
 
-    return buckets.mapInPandas(run, schema=_BUCKET_TEXT_SCHEMA)
+
+def extract_pdf_buckets(buckets: DataFrame, bucket_pages: int = BUCKET_PAGES) -> DataFrame:
+    """Stage B: extract the raw text of one page bucket per row.
+
+    A task parses a document once per consecutive run of that url's
+    rows: the last opened document is kept while consecutive rows share
+    its ``url`` (across Arrow batches), and a failed open marks every
+    bucket of the run ``error`` without parsing again. No sort is added,
+    so a task still holds one bucket's payload at a time.
+
+    How long the runs are depends on the shuffle, not on this stage.
+    ``plans/job.py`` hash-partitions buckets on (url, bucket), so each
+    reducer block holds about one bucket per url. A task that reads one
+    salted document (pdfskew's single giant) sees one run and parses it
+    once. A task whose reducer blocks mix several big PDFs reads them
+    interleaved and reopens on almost every row, as before the reuse.
+    """
+    return buckets.mapInPandas(
+        partial(_bucket_texts, bucket_pages=bucket_pages), schema=_BUCKET_TEXT_SCHEMA
+    )
 
 
 def reassemble_pdf_results(bucket_texts: DataFrame) -> DataFrame:

@@ -345,7 +345,7 @@ def hits_scores(edges: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
     groupBy sum — the q69 two-shuffle shape — and the normalizer is a
     1-row total crossJoin broadcast (the q99/q121 pattern; the nested
     loop against one row is the intended plan). The edge list, node
-    list and each half-round's scores are lineage-truncated with lazy
+    list and each half-round's scores are lineage-truncated with
     localCheckpoints (the in-memory per-round snapshot a 10^8-node
     production run writes out): edges and nodes are referenced twice
     per round and each score table feeds the next half-round, so
@@ -435,12 +435,15 @@ def bfs_depths(edges: DataFrame, seeds: DataFrame, max_depth: int = BFS_MAX_DEPT
     rounds hash-partition on the same host key, so AQE reuses the
     exchange. Parallel edges are harmless for min-depth but multiply
     join output, so the caller deduplicates; seeds are depth 0 by
-    definition. Each round's dist is lineage-truncated with a lazy
+    definition. Each round's dist is lineage-truncated with a
     localCheckpoint (the in-memory form of the per-round write/
     read-back a 10^8-host production run uses): dist appears TWICE in
     the next round (join probe + union), so without truncation the
     plan re-expands the seed subtree 2^max_depth times — the q37
-    propagate_min_labels lesson."""
+    propagate_min_labels lesson. eager=False does not defer the
+    rounds: with AQE on (session.py) each checkpoint call runs its
+    round's shuffle stages, so building the returned DataFrame already
+    runs about one job per round."""
     dist = seeds.select("host", F.lit(0).cast("bigint").alias("depth"))
     edges = edges.localCheckpoint(eager=False)
     for _ in range(max_depth):
@@ -3136,7 +3139,7 @@ def q136_hreflang_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = extract_hreflang_edges(pages)
     doc_of = lambda c: F.regexp_extract(c, r"/(\d+)$", 1).cast("bigint")
     # both sides of the reciprocity self-join consume this edge set;
-    # the lazy checkpoint (q37 precedent) stops the page synthesis +
+    # the checkpoint (q37 precedent) stops the page synthesis +
     # hreflang parse being planned (and run) once per side
     e = edges.select(
         doc_of("url").alias("src_doc"),

@@ -12,7 +12,7 @@ TRACE ?= 0
 # OMP_NUM_THREADS unset, which would otherwise cap it), not local[32]
 test:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
-	  timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+	  timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider -rs
 
 # one benchmark run (BENCHMARK.json's command): end-to-end metrics with
 # TRACE=0, the per-layer metrics with TRACE=1

@@ -116,6 +116,13 @@ def entry(spark: SparkSession) -> DataFrame:
     return run_extraction(_synthetic_pages(spark, "/root/testdata/sf0.001"))
 
 
+# queries that read the reference checkout's test documents
+# (``sources.pages.REFERENCE_DOCS``), and those whose committed expected
+# tables derive from them (q41/q42 run on stand-ins without it)
+NEEDS_REFERENCE = frozenset({"q40_extract_fixtures", "q43_ocr_mode_stats"})
+REFERENCE_EXPECTED = NEEDS_REFERENCE | {"q41_extract_synthetic", "q42_media_features"}
+
+
 def _q40_extract_fixtures(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ship_package(spark)
     from ocr_service_spark.plans.job import run_extraction
@@ -747,46 +754,7 @@ def _q103_pdf_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents(spark, sf_dir, "doc_id")
 
     def gen(batches):
-        def minimal_pdf(page_texts, info=None):
-            objs = []
-            n = len(page_texts)
-            kids = " ".join(f"{3 + 2 * k} 0 R" for k in range(n))
-            objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-            objs.append(f"<< /Type /Pages /Kids [{kids}] /Count {n} >>".encode())
-            for k, text in enumerate(page_texts):
-                content = f"BT /F1 12 Tf 72 700 Td ({text}) Tj ET".encode()
-                objs.append(
-                    (
-                        f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-                        f"/Contents {4 + 2 * k} 0 R /Resources << /Font << /F1 "
-                        f"{3 + 2 * n} 0 R >> >> >>"
-                    ).encode()
-                )
-                objs.append(
-                    b"<< /Length " + str(len(content)).encode() + b" >>\nstream\n"
-                    + content + b"\nendstream"
-                )
-            objs.append(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-            info_ref = b""
-            if info is not None:
-                body = " ".join(f"/{k} ({v})" for k, v in info.items())
-                objs.append(f"<< {body} >>".encode())
-                info_ref = f" /Info {len(objs)} 0 R".encode()
-            out = bytearray(b"%PDF-1.4\n")
-            offsets = []
-            for k, body in enumerate(objs, start=1):
-                offsets.append(len(out))
-                out += f"{k} 0 obj\n".encode() + body + b"\nendobj\n"
-            xref_at = len(out)
-            out += f"xref\n0 {len(objs) + 1}\n0000000000 65535 f \n".encode()
-            for off in offsets:
-                out += f"{off:010d} 00000 n \n".encode()
-            out += (
-                f"trailer\n<< /Size {len(objs) + 1} /Root 1 0 R".encode()
-                + info_ref
-                + f" >>\nstartxref\n{xref_at}\n%%EOF\n".encode()
-            )
-            return bytes(out)
+        from ocr_service_spark.sources.pages import write_text_pdf
 
         for batch in batches:
             rows = []
@@ -795,13 +763,12 @@ def _q103_pdf_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
                 texts = [f"d{i}p{k}" for k in range(i % 4 + 1)]
                 info = None
                 if i % 11 != 0:
-                    info = {
-                        "Title": f"Doc {i}",
-                        "Author": f"Writer {i % 6}",
-                        "Producer": "ocr-service-spark",
-                        "CreationDate": f"D:202608{i % 28 + 1:02d}120000Z",
-                    }
-                rows.append({"doc_id": i, "payload": minimal_pdf(texts, info)})
+                    info = (
+                        f"/Title (Doc {i}) /Author (Writer {i % 6})"
+                        " /Producer (ocr-service-spark)"
+                        f" /CreationDate (D:202608{i % 28 + 1:02d}120000Z)"
+                    )
+                rows.append({"doc_id": i, "payload": write_text_pdf(texts, info=info)})
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
     pdfs = docs.mapInPandas(gen, schema="doc_id bigint, payload binary")

@@ -1,5 +1,7 @@
 """Pages-table sources: schema, readers, payload ladder, deterministic
-synthetic generator, and the reference-fixture loader.
+synthetic generator, the reference-fixture loader, and the one home of
+the reference checkout's location (``REFERENCE_DOCS``) and of the
+synthetic document writers (PDF, DOCX, CFB).
 
 Input shape is authoritative from BASELINE.json ``input_hint``:
 
@@ -13,6 +15,7 @@ role of the reference's per-request ``ProcessContext.stream``.
 from __future__ import annotations
 
 import datetime as dt
+import struct
 from collections.abc import Iterator
 from pathlib import Path
 
@@ -102,7 +105,10 @@ def decode_payload_ladder(df: DataFrame, src_col: str = "body") -> DataFrame:
 
 
 def load_fixture_pages(spark: SparkSession) -> DataFrame:
-    """Reference fixture payloads as a pages DataFrame (tests/E2E)."""
+    """Reference fixture payloads as a pages DataFrame (tests/E2E).
+    Raises ``FileNotFoundError`` when ``REFERENCE_DOCS`` is absent."""
+    if not REFERENCE_DOCS.is_dir():
+        raise FileNotFoundError(f"reference test documents not found: {REFERENCE_DOCS}")
     rows = []
     base_ts = dt.datetime(2026, 7, 23, 0, 0, 0)
     for i, path in enumerate(sorted(REFERENCE_DOCS.rglob("*"))):
@@ -231,6 +237,167 @@ def _synth_xml(rng: Iterator[int], paragraphs: int) -> bytes:
     return f"<?xml version=\"1.0\"?><doc>{items}</doc>".encode()
 
 
+# ---------------------------------------------------------------------------
+# Synthetic document writers (test fixtures, q103, the stand-in payloads)
+# ---------------------------------------------------------------------------
+
+HELVETICA = b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
+
+
+def pdf_stream(content: bytes) -> bytes:
+    return b"<< /Length %d >>\nstream\n" % len(content) + content + b"\nendstream"
+
+
+def assemble_pdf(objs: list[bytes], trailer: str = "") -> bytes:
+    """Uncompressed PDF with a classic xref table: ``objs[k]`` is object
+    ``k + 1`` and object 1 the catalog; ``trailer`` is appended to the
+    trailer dict after ``/Root`` (e.g. ``" /Info 9 0 R"``)."""
+    out = bytearray(b"%PDF-1.4\n")
+    offsets = []
+    for num, body in enumerate(objs, start=1):
+        offsets.append(len(out))
+        out += b"%d 0 obj\n" % num + body + b"\nendobj\n"
+    xref_at = len(out)
+    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
+    for off in offsets:
+        out += b"%010d 00000 n \n" % off
+    out += (
+        f"trailer\n<< /Size {len(objs) + 1} /Root 1 0 R{trailer} >>\n"
+        f"startxref\n{xref_at}\n%%EOF\n"
+    ).encode()
+    return bytes(out)
+
+
+def write_text_pdf(
+    pages: list[str | bytes],
+    font: bytes = HELVETICA,
+    extra_objs: tuple[bytes, ...] = (),
+    info: str | None = None,
+    trailer: str = "",
+) -> bytes:
+    """N-page PDF whose pages share one font ``/F1``, object ``3 + 2N``.
+
+    A ``str`` page becomes one ``Tj`` of that text; a ``bytes`` page is
+    the page's whole content stream. ``extra_objs`` follow the font as
+    objects ``4 + 2N``, ...; ``info`` is the body of a trailer ``/Info``
+    dict placed after them; ``trailer`` goes to ``assemble_pdf``."""
+    n = len(pages)
+    kids = " ".join(f"{3 + 2 * i} 0 R" for i in range(n))
+    objs = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        f"<< /Type /Pages /Kids [{kids}] /Count {n} >>".encode(),
+    ]
+    for i, page in enumerate(pages):
+        if isinstance(page, str):
+            page = f"BT /F1 12 Tf 72 700 Td ({page}) Tj ET".encode()
+        objs.append(
+            f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents {4 + 2 * i} 0 R "
+            f"/Resources << /Font << /F1 {3 + 2 * n} 0 R >> >> >>".encode()
+        )
+        objs.append(pdf_stream(page))
+    objs += [font, *extra_objs]
+    if info is not None:
+        objs.append(f"<< {info} >>".encode())
+        trailer += f" /Info {len(objs)} 0 R"
+    return assemble_pdf(objs, trailer)
+
+
+def build_cfb(streams: dict[str, bytes]) -> bytes:
+    """Minimal [MS-CFB] v3 writer: every stream padded to >= 4096 bytes
+    (regular FAT chains only, no ministream), one FAT sector, one
+    directory sector (<= 3 streams)."""
+    SS = 512
+    FREESECT, ENDOFCHAIN, FATSECT = 0xFFFFFFFF, 0xFFFFFFFE, 0xFFFFFFFD
+    names = list(streams)
+    assert len(names) <= 3
+    padded = {n: s + b"\x00" * ((-len(s)) % SS) for n, s in streams.items()}
+    for n in padded:
+        if len(padded[n]) < 4096:
+            padded[n] = padded[n] + b"\x00" * (4096 - len(padded[n]))
+    # sector layout: 0 = FAT, 1 = directory, then stream chains
+    fat = [FATSECT, ENDOFCHAIN]
+    starts, sizes = {}, {}
+    for n in names:
+        data = padded[n]
+        n_sec = len(data) // SS
+        starts[n] = len(fat)
+        sizes[n] = len(streams[n])
+        for i in range(n_sec):
+            fat.append(len(fat) + 1 if i < n_sec - 1 else ENDOFCHAIN)
+    body = b"".join(padded[n] for n in names)
+    fat += [FREESECT] * (SS // 4 - len(fat))
+    fat_sector = struct.pack(f"<{SS // 4}I", *fat)
+
+    def dirent(name, objtype, start, size, left, right, child):
+        raw = name.encode("utf-16-le")
+        ent = raw + b"\x00" * (64 - len(raw))
+        ent += struct.pack("<HBB3I16sI", len(raw) + 2, objtype, 1, left, right, child,
+                           b"\x00" * 16, 0)
+        ent += b"\x00" * 16  # creation + modified timestamps: offsets 100-115
+        ent = ent[:116] + struct.pack("<IQ", start, size)
+        return ent.ljust(128, b"\x00")
+
+    ents = [dirent("Root Entry", 5, ENDOFCHAIN, 0, FREESECT, FREESECT, 1)]
+    for i, n in enumerate(names):
+        right = i + 2 if i + 1 < len(names) else FREESECT
+        ents.append(dirent(n, 2, starts[n], sizes[n], FREESECT, right, FREESECT))
+    while len(ents) < 4:
+        ents.append(b"\x00" * 128)
+    directory = b"".join(ents)
+
+    header = bytearray(512)
+    header[0:8] = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
+    struct.pack_into("<H", header, 26, 0x003E)   # minor version
+    struct.pack_into("<H", header, 28, 0x0003)   # v3
+    struct.pack_into("<H", header, 30, 9)        # sector shift
+    struct.pack_into("<H", header, 32, 6)        # mini shift
+    struct.pack_into("<I", header, 44, 1)        # num FAT sectors
+    struct.pack_into("<I", header, 48, 1)        # first dir sector
+    # mini cutoff 0: every stream lives on regular FAT chains, so this
+    # writer needs no ministream (the reader honors the header field)
+    struct.pack_into("<I", header, 56, 0)
+    struct.pack_into("<I", header, 60, ENDOFCHAIN)  # first minifat
+    struct.pack_into("<I", header, 64, 0)
+    struct.pack_into("<I", header, 68, ENDOFCHAIN)  # first difat
+    struct.pack_into("<I", header, 72, 0)
+    struct.pack_into("<109I", header, 76, 0, *([FREESECT] * 108))
+    return bytes(header) + fat_sector + directory + body
+
+
+# generate_pages' non-text payloads: kind -> file under REFERENCE_DOCS
+_REFERENCE_PAYLOADS = {
+    "docx": "generic/pat_id_1.docx",
+    "docx_big": "generic/synthetic_medical_text_approx_20_pages.docx",
+    "pdf": "generic/pat_id_1.pdf",
+    "pdf_big": "pdf/ex1.pdf",
+    "png": "generic/pat_id_1.png",
+    "encrypted": "invalid/word_enc_noerror.docx",
+}
+
+
+def _fixture_payloads() -> dict[str, bytes]:
+    """The reference's test documents when ``REFERENCE_DOCS`` exists,
+    else stand-ins of the same kinds built from a fixed seed (the big
+    PDF spans more than one salted page bucket)."""
+    if REFERENCE_DOCS.is_dir():
+        return {k: (REFERENCE_DOCS / rel).read_bytes() for k, rel in _REFERENCE_PAYLOADS.items()}
+    from ocr_service_spark.extraction.glyph_ocr import render_text_png
+    from ocr_service_spark.operators.extract import BUCKET_PAGES
+
+    rng = _lcg(0)
+    noise = bytes(next(rng) % 256 for _ in range(256))
+    return {
+        "docx": _synth_docx(rng, 20),
+        "docx_big": _synth_docx(rng, 600),
+        "pdf": write_text_pdf([_sentence(rng, 40)]),
+        "pdf_big": write_text_pdf([_sentence(rng, 80) for _ in range(BUCKET_PAGES + 4)]),
+        "png": render_text_png(GLYPH_FIXTURE_TEXT),
+        "encrypted": build_cfb(
+            {"EncryptionInfo": b"\x04\x00\x04\x00" + noise, "EncryptedPackage": noise}
+        ),
+    }
+
+
 def generate_pages(
     spark: SparkSession,
     n_docs: int,
@@ -248,17 +415,7 @@ def generate_pages(
     salted PDF path and size-skew repartitioning have real work in
     benchmarks.
     """
-    fixture_bytes = {
-        "docx": (REFERENCE_DOCS / "generic/pat_id_1.docx").read_bytes(),
-        "docx_big": (
-            REFERENCE_DOCS / "generic/synthetic_medical_text_approx_20_pages.docx"
-        ).read_bytes(),
-        "pdf": (REFERENCE_DOCS / "generic/pat_id_1.pdf").read_bytes(),
-        "pdf_big": (REFERENCE_DOCS / "pdf/ex1.pdf").read_bytes(),
-        "png": (REFERENCE_DOCS / "generic/pat_id_1.png").read_bytes(),
-        "encrypted": (REFERENCE_DOCS / "invalid/word_enc_noerror.docx").read_bytes(),
-    }
-    bc = spark.sparkContext.broadcast(fixture_bytes)
+    bc = spark.sparkContext.broadcast(_fixture_payloads())
     base_ts = dt.datetime(2026, 1, 1)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

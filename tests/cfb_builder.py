@@ -1,70 +1,1 @@
-"""Minimal [MS-CFB] v3 writer for handcrafted legacy-office test
-fixtures (every stream on regular FAT chains; mini cutoff 0 so no
-ministream is needed). Shared by the .doc/.xls/.ppt reader tests."""
-
-from __future__ import annotations
-
-import struct
-
-
-def build_cfb(streams: dict[str, bytes]) -> bytes:
-    """Minimal [MS-CFB] v3 writer: every stream padded to >= 4096 bytes
-    (regular FAT chains only, no ministream), one FAT sector, one
-    directory sector (<= 3 streams)."""
-    SS = 512
-    FREESECT, ENDOFCHAIN, FATSECT = 0xFFFFFFFF, 0xFFFFFFFE, 0xFFFFFFFD
-    names = list(streams)
-    assert len(names) <= 3
-    padded = {n: s + b"\x00" * ((-len(s)) % SS) for n, s in streams.items()}
-    for n in padded:
-        if len(padded[n]) < 4096:
-            padded[n] = padded[n] + b"\x00" * (4096 - len(padded[n]))
-    # sector layout: 0 = FAT, 1 = directory, then stream chains
-    fat = [FATSECT, ENDOFCHAIN]
-    starts, sizes = {}, {}
-    for n in names:
-        data = padded[n]
-        n_sec = len(data) // SS
-        starts[n] = len(fat)
-        sizes[n] = len(streams[n])
-        for i in range(n_sec):
-            fat.append(len(fat) + 1 if i < n_sec - 1 else ENDOFCHAIN)
-    body = b"".join(padded[n] for n in names)
-    fat += [FREESECT] * (SS // 4 - len(fat))
-    fat_sector = struct.pack(f"<{SS // 4}I", *fat)
-
-    def dirent(name, objtype, start, size, left, right, child):
-        raw = name.encode("utf-16-le")
-        ent = raw + b"\x00" * (64 - len(raw))
-        ent += struct.pack("<HBB3I16sI", len(raw) + 2, objtype, 1, left, right, child,
-                           b"\x00" * 16, 0)
-        ent += b"\x00" * 16  # creation + modified timestamps: offsets 100-115
-        ent = ent[:116] + struct.pack("<IQ", start, size)
-        return ent.ljust(128, b"\x00")
-
-    ents = [dirent("Root Entry", 5, ENDOFCHAIN, 0, FREESECT, FREESECT, 1)]
-    for i, n in enumerate(names):
-        right = i + 2 if i + 1 < len(names) else FREESECT
-        ents.append(dirent(n, 2, starts[n], sizes[n], FREESECT, right, FREESECT))
-    while len(ents) < 4:
-        ents.append(b"\x00" * 128)
-    directory = b"".join(ents)
-
-    header = bytearray(512)
-    header[0:8] = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
-    struct.pack_into("<H", header, 26, 0x003E)   # minor version
-    struct.pack_into("<H", header, 28, 0x0003)   # v3
-    struct.pack_into("<H", header, 30, 9)        # sector shift
-    struct.pack_into("<H", header, 32, 6)        # mini shift
-    struct.pack_into("<I", header, 44, 1)        # num FAT sectors
-    struct.pack_into("<I", header, 48, 1)        # first dir sector
-    # mini cutoff 0: every stream lives on regular FAT chains, so this
-    # writer needs no ministream (the reader honors the header field)
-    struct.pack_into("<I", header, 56, 0)
-    struct.pack_into("<I", header, 60, ENDOFCHAIN)  # first minifat
-    struct.pack_into("<I", header, 64, 0)
-    struct.pack_into("<I", header, 68, ENDOFCHAIN)  # first difat
-    struct.pack_into("<I", header, 72, 0)
-    struct.pack_into("<109I", header, 76, 0, *([FREESECT] * 108))
-    return bytes(header) + fat_sector + directory + body
-
+from ocr_service_spark.sources.pages import build_cfb  # noqa: F401  (perfbench/corpus.py imports it here)

@@ -8,8 +8,24 @@ import pytest
 REPO_ROOT = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO_ROOT))
 
-REFERENCE_DOCS = Path("/root/reference/ocr_service/tests/resources/docs")
-GOLDEN_DIR = REPO_ROOT / "tests" / "golden"
+from ocr_service_spark.sources.pages import REFERENCE_DOCS  # noqa: E402
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "requires_reference: reads the reference checkout's test documents"
+    )
+
+
+def pytest_collection_modifyitems(config, items):
+    """Tests marked ``requires_reference`` or using ``fixture_bytes`` are
+    skipped, with the directory named, when the reference is absent."""
+    if REFERENCE_DOCS.is_dir():
+        return
+    skip = pytest.mark.skip(reason=f"reference test documents not found: {REFERENCE_DOCS}")
+    for item in items:
+        if "requires_reference" in item.keywords or "fixture_bytes" in item.fixturenames:
+            item.add_marker(skip)
 
 
 @pytest.fixture(scope="session")

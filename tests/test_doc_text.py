@@ -5,7 +5,8 @@ conversion of generic/pat_id_1.doc in tests/test_process.py:115-167."""
 from __future__ import annotations
 
 import struct
-from pathlib import Path
+
+import pytest
 
 from ocr_service_spark.extraction.doc_text import (
     _normalize_word_text,
@@ -14,20 +15,22 @@ from ocr_service_spark.extraction.doc_text import (
 )
 from ocr_service_spark.extraction.pipeline import extract_document
 
-FIXTURE = Path("/root/reference/ocr_service/tests/resources/docs/generic/pat_id_1.doc")
-DOC = FIXTURE.read_bytes()
+
+@pytest.fixture(scope="module")
+def doc(fixture_bytes) -> bytes:
+    return fixture_bytes("generic/pat_id_1.doc")
 
 
-def test_cfb_streams_names_and_sizes():
-    streams = cfb_streams(DOC)
+def test_cfb_streams_names_and_sizes(doc):
+    streams = cfb_streams(doc)
     assert "worddocument" in streams
     assert "1table" in streams or "0table" in streams
     # WordDocument stream is sector-padded but non-trivial
     assert len(streams["worddocument"]) >= 1024
 
 
-def test_extract_doc_text_fixture():
-    text = extract_doc_text(DOC)
+def test_extract_doc_text_fixture(doc):
+    text = extract_doc_text(doc)
     assert "Bart Davidson" in text
     assert "07754828992" in text
     assert "Paracetamol" in text
@@ -35,8 +38,8 @@ def test_extract_doc_text_fixture():
     assert "\r" not in text and "\x07" not in text
 
 
-def test_doc_through_full_pipeline():
-    row = extract_document(DOC, "https://fixtures.test/generic/pat_id_1.doc")
+def test_doc_through_full_pipeline(doc):
+    row = extract_document(doc, "https://fixtures.test/generic/pat_id_1.doc")
     assert row["success"] is True
     assert "Bart Davidson" in row["extracted_text"]
     assert row["doc_class"] == "office"
@@ -50,17 +53,17 @@ def test_non_doc_payloads_return_empty():
     assert extract_doc_text(b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1" + b"\x00" * 100) == ""
 
 
-def test_encrypted_doc_flag_returns_empty():
+def test_encrypted_doc_flag_returns_empty(doc):
     # flip fEncrypted (bit 8 of the FIB flags) in the WordDocument stream
     # inside a copy of the fixture: extractor must bail, not emit garbage.
-    streams = cfb_streams(DOC)
+    streams = cfb_streams(doc)
     wd = bytearray(streams["worddocument"])
     flags = struct.unpack_from("<H", wd, 0x0A)[0]
     struct.pack_into("<H", wd, 0x0A, flags | 0x0100)
     # splice the mutated stream back at its byte offset in the file: the
     # fixture's WordDocument is a single FAT chain starting in sector 0
-    idx = DOC.index(bytes(streams["worddocument"][:64]))
-    mutated = DOC[:idx] + bytes(wd[:64]) + DOC[idx + 64 :]
+    idx = doc.index(bytes(streams["worddocument"][:64]))
+    mutated = doc[:idx] + bytes(wd[:64]) + doc[idx + 64 :]
     # only the flag word changed; if layout assumptions drift the
     # extractor still returns a string (never raises)
     assert isinstance(extract_doc_text(mutated), str)
@@ -93,18 +96,18 @@ def test_fuzz_ole_prefixed_junk_never_raises(junk: bytes):
 
 @settings(max_examples=60, deadline=None)
 @given(st.integers(min_value=0, max_value=22000), st.binary(min_size=1, max_size=8))
-def test_fuzz_corrupted_fixture_never_raises(offset: int, patch: bytes):
+def test_fuzz_corrupted_fixture_never_raises(doc, offset: int, patch: bytes):
     # splice random bytes into the real fixture: truncations, bad FIB
     # offsets, broken piece tables — all must degrade to '' or partial
     # text, never an exception
-    data = DOC[:offset] + patch + DOC[offset + len(patch):]
+    data = doc[:offset] + patch + doc[offset + len(patch):]
     assert isinstance(extract_doc_text(data), str)
 
 
 # -- handcrafted .doc: exercises the UTF-16 piece branch and multi-piece
 # -- concat, which the all-cp1252 single-piece fixture cannot reach ----------
 
-from cfb_builder import build_cfb
+from ocr_service_spark.sources.pages import build_cfb
 
 
 def _build_doc(pieces: list[tuple[str, bool]], which_table: int = 1) -> bytes:

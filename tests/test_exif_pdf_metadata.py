@@ -17,6 +17,7 @@ from ocr_service_spark.extraction.exif import (
 )
 from ocr_service_spark.extraction.jpeg_codec import encode_jpeg_gray
 from ocr_service_spark.extraction.pdf_text import pdf_info, pdf_page_count
+from ocr_service_spark.sources.pages import write_text_pdf
 
 
 def _hand_packed_exif_le() -> bytes:
@@ -99,43 +100,7 @@ def test_deep_sub_ifd_chain_is_depth_capped():
 
 
 def _pdf(info_body: str | None, n_pages: int = 2) -> bytes:
-    objs = []
-    kids = " ".join(f"{3 + 2 * k} 0 R" for k in range(n_pages))
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    objs.append(f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode())
-    for k in range(n_pages):
-        content = f"BT /F1 12 Tf 72 700 Td (p{k}) Tj ET".encode()
-        objs.append(
-            (
-                f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-                f"/Contents {4 + 2 * k} 0 R /Resources << /Font << /F1 "
-                f"{3 + 2 * n_pages} 0 R >> >> >>"
-            ).encode()
-        )
-        objs.append(
-            b"<< /Length " + str(len(content)).encode() + b" >>\nstream\n"
-            + content + b"\nendstream"
-        )
-    objs.append(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-    info_ref = b""
-    if info_body is not None:
-        objs.append(f"<< {info_body} >>".encode())
-        info_ref = f" /Info {len(objs)} 0 R".encode()
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = []
-    for k, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += f"{k} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += f"xref\n0 {len(objs) + 1}\n0000000000 65535 f \n".encode()
-    for off in offsets:
-        out += f"{off:010d} 00000 n \n".encode()
-    out += (
-        f"trailer\n<< /Size {len(objs) + 1} /Root 1 0 R".encode()
-        + info_ref
-        + f" >>\nstartxref\n{xref_at}\n%%EOF\n".encode()
-    )
-    return bytes(out)
+    return write_text_pdf([f"p{k}" for k in range(n_pages)], info=info_body)
 
 
 def test_pdf_info_literal_strings_and_page_count():

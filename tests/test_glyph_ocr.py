@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import struct
 import zlib
-from pathlib import Path
 
 import pytest
 
@@ -24,8 +23,6 @@ from ocr_service_spark.extraction.png_codec import (
     decode_png_gray,
     encode_png_gray,
 )
-
-REF_PNG = Path("/root/reference/ocr_service/tests/resources/docs/generic/pat_id_1.png")
 
 
 def _chunk(ctype: bytes, body: bytes) -> bytes:
@@ -144,13 +141,13 @@ def test_engine_meets_reference_similarity_gate_on_rendered_fixture():
     assert got == truth  # and in fact exact
 
 
-def test_engine_degrades_gracefully_out_of_model():
+def test_engine_degrades_gracefully_out_of_model(fixture_bytes):
     eng = GlyphOcrEngine()
     assert eng.recognize(b"GIF89a...") == ("", 0.0)
     # the real reference scan is no longer a degradation case: the
     # scaled path reads it (tests/test_scan_ocr.py pins the similarity
     # floors); it must still report honest sub-certain confidence
-    text, conf = eng.recognize(REF_PNG.read_bytes())
+    text, conf = eng.recognize(fixture_bytes("generic/pat_id_1.png"))
     assert isinstance(text, str) and "Davidson" in text and 0 < conf < 100
     # genuinely unreadable pixels (structured noise) stay low-trust and
     # never crash

@@ -4,14 +4,12 @@ reference's behavior when converters/rasterizers are absent."""
 
 from __future__ import annotations
 
-from pathlib import Path
+import pytest
 
 from ocr_service_spark.extraction import extract_document
 from ocr_service_spark.extraction.glyph_ocr import GlyphOcrEngine, render_text_png
 from ocr_service_spark.plans.job import run_extraction
 from ocr_service_spark.sources.pages import load_fixture_pages
-
-RES = Path("/root/reference/ocr_service/tests/resources/docs")
 
 
 def test_image_ocr_mode_recognizes_rendered_page_exactly():
@@ -26,12 +24,12 @@ def test_image_ocr_mode_recognizes_rendered_page_exactly():
     assert row["ocr_skipped"] is False
 
 
-def test_image_ocr_mode_reference_png_routes_through_engine():
+def test_image_ocr_mode_reference_png_routes_through_engine(fixture_bytes):
     # out-of-model input (antialiased proportional font): routed to the
     # scaled scan path (extraction/scan_ocr.py), which actually READS
     # it — similarity floors pinned in tests/test_scan_ocr.py — with
     # honest sub-certain confidence
-    png = (RES / "generic/pat_id_1.png").read_bytes()
+    png = fixture_bytes("generic/pat_id_1.png")
     row = extract_document(png, "u.png", mode="OCR")
     text, conf = GlyphOcrEngine().recognize(png)
     assert row["extracted_text"] == text.strip()
@@ -42,13 +40,13 @@ def test_image_ocr_mode_reference_png_routes_through_engine():
     assert row["ocr_skipped"] is False
 
 
-def test_pdf_ocr_mode_runs_rasterize_recognize_loop():
+def test_pdf_ocr_mode_runs_rasterize_recognize_loop(fixture_bytes):
     # full loop: parse -> text-layer rasterize (glyph font) -> binarize
     # -> segment -> recognize -> ordered page concat; output must clear
     # the reference acceptance gate vs the NO_OCR text layer
     from ocr_service_spark.functions.similarity_gate import lev_similarity
 
-    pdf = (RES / "generic/pat_id_1.pdf").read_bytes()
+    pdf = fixture_bytes("generic/pat_id_1.pdf")
     row = extract_document(pdf, "u.pdf", mode="OCR")
     truth = extract_document(pdf, "u.pdf", mode="NO_OCR")
     assert row["success"] is True
@@ -68,19 +66,20 @@ def test_pdf_ocr_mode_corrupt_pdf_swallows():
     assert row["content_type"] == "application/pdf"
 
 
-def test_text_formats_fall_back_in_ocr_mode():
+def test_text_formats_fall_back_in_ocr_mode(fixture_bytes):
     # OCR mode sends rtf/html/xml to LO (absent) -> no_pdf_produced T4
     for name, marker in (
         ("generic/pat_id_1.rtf", "Bart Davidson"),
         ("generic/pat_id_1.html", "Bart Davidson"),
     ):
-        row = extract_document((RES / name).read_bytes(), f"u.{name[-4:]}", mode="OCR")
+        row = extract_document(fixture_bytes(name), f"u.{name[-4:]}", mode="OCR")
         assert row["fallback_reason"] == "no_pdf_produced"
         assert row["content_type"] == "text/plain"
         assert marker in row["extracted_text"]
         assert row["success"] is True
 
 
+@pytest.mark.requires_reference
 def test_spark_job_ocr_mode(spark):
     from ocr_service_spark.sources.pages import GLYPH_FIXTURE_TEXT
 

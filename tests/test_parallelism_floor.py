@@ -109,3 +109,25 @@ def test_no_hand_rolled_fan_out():
         if "defaultParallelism" in line
     ]
     assert not offenders, offenders
+
+
+def test_one_reference_path_and_one_pdf_writer():
+    """The reference checkout's location and the classic-xref PDF
+    assembly live in sources/pages.py only (perfbench/ is the
+    benchmark's own code)."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    home = root / "ocr_service_spark" / "sources" / "pages.py"
+    needles = ('Path("' + "/root/reference", "xref" + "\\n0 ")
+    assert all(needle in home.read_text() for needle in needles)
+    offenders = [
+        f"{path.relative_to(root)}: {needle}"
+        for path in sorted(root.rglob("*.py"))
+        if path != home
+        and path.relative_to(root).parts[0] != "perfbench"
+        and not any(part.startswith(".") for part in path.relative_to(root).parts)
+        for needle in needles
+        if needle in path.read_text()
+    ]
+    assert not offenders, offenders

@@ -26,6 +26,7 @@ from ocr_service_spark.extraction.pdf_text import (
     _rc4,
     pdf_to_text,
 )
+from ocr_service_spark.sources.pages import write_text_pdf
 
 PAGE_TEXT = "aes encrypted page payload"
 FILE_ID = bytes(range(16))
@@ -40,33 +41,14 @@ def test_aes_fips_vectors():
     assert decrypt_block(_expand_key(k256), encrypt_block(_expand_key(k256), pt)) == pt
 
 
-def _assemble(objs: list[bytes], trailer_extra: str) -> bytes:
-    out = bytearray(b"%PDF-1.6\n")
-    offsets = []
-    for i, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += f"{i} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += f"xref\n0 {len(objs) + 1}\n0000000000 65535 f \n".encode()
-    for off in offsets:
-        out += f"{off:010d} 00000 n \n".encode()
-    out += (
-        f"trailer\n<< /Size {len(objs) + 1} /Root 1 0 R {trailer_extra} >>\n"
-        f"startxref\n{xref_at}\n%%EOF\n"
-    ).encode()
-    return bytes(out)
-
-
-def _base_objs(content_enc: bytes) -> list[bytes]:
-    return [
-        b"<< /Type /Catalog /Pages 2 0 R >>",
-        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 4 0 R "
-        b"/Resources << /Font << /F1 5 0 R >> >> >>",
-        b"<< /Length " + str(len(content_enc)).encode() + b" >>\nstream\n"
-        + content_enc + b"\nendstream",
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-    ]
+def _encrypted_pdf(content_enc: bytes, encrypt_dict: str) -> bytes:
+    """One page whose content stream (object 4) is already encrypted,
+    with the /Encrypt dict as object 6."""
+    return write_text_pdf(
+        [content_enc],
+        extra_objs=(encrypt_dict.encode(),),
+        trailer=f" /Encrypt 6 0 R /ID [<{FILE_ID.hex()}> <{FILE_ID.hex()}>]",
+    )
 
 
 def _make_r4_aesv2(user_pw: bytes = b"") -> bytes:
@@ -103,17 +85,12 @@ def _make_r4_aesv2(user_pw: bytes = b"") -> bytes:
     ).digest()[:16]
     iv = bytes(range(16, 32))
     content_enc = iv + cbc_encrypt(obj_key, iv, content)
-    objs = _base_objs(content_enc)
-    objs.append(
-        (
-            "<< /Filter /Standard /V 4 /R 4 /Length 128 /P -4"
-            " /CF << /StdCF << /CFM /AESV2 /Length 16 >> >>"
-            " /StmF /StdCF /StrF /StdCF"
-            f" /O <{o_entry.hex()}> /U <{u_entry.hex()}> >>"
-        ).encode()
-    )
-    return _assemble(
-        objs, f"/Encrypt {len(objs)} 0 R /ID [<{FILE_ID.hex()}> <{FILE_ID.hex()}>]"
+    return _encrypted_pdf(
+        content_enc,
+        "<< /Filter /Standard /V 4 /R 4 /Length 128 /P -4"
+        " /CF << /StdCF << /CFM /AESV2 /Length 16 >> >>"
+        " /StmF /StdCF /StrF /StdCF"
+        f" /O <{o_entry.hex()}> /U <{u_entry.hex()}> >>",
     )
 
 
@@ -126,18 +103,13 @@ def _make_r6_aesv3(user_pw: bytes = b"") -> bytes:
     content = f"BT /F1 12 Tf 72 700 Td ({PAGE_TEXT}) Tj ET".encode()
     iv = bytes(range(32, 48))
     content_enc = iv + cbc_encrypt(file_key, iv, content)
-    objs = _base_objs(content_enc)
-    objs.append(
-        (
-            "<< /Filter /Standard /V 5 /R 6 /Length 256 /P -4"
-            " /CF << /StdCF << /CFM /AESV3 /Length 32 >> >>"
-            " /StmF /StdCF /StrF /StdCF"
-            f" /O <{(b'o' * 48).hex()}> /OE <{(b'e' * 32).hex()}>"
-            f" /U <{u_entry.hex()}> /UE <{ue.hex()}> >>"
-        ).encode()
-    )
-    return _assemble(
-        objs, f"/Encrypt {len(objs)} 0 R /ID [<{FILE_ID.hex()}> <{FILE_ID.hex()}>]"
+    return _encrypted_pdf(
+        content_enc,
+        "<< /Filter /Standard /V 5 /R 6 /Length 256 /P -4"
+        " /CF << /StdCF << /CFM /AESV3 /Length 32 >> >>"
+        " /StmF /StdCF /StrF /StdCF"
+        f" /O <{(b'o' * 48).hex()}> /OE <{(b'e' * 32).hex()}>"
+        f" /U <{u_entry.hex()}> /UE <{ue.hex()}> >>",
     )
 
 

@@ -14,77 +14,25 @@ from ocr_service_spark.extraction.pdf_text import (
     pdf_page_texts,
     pdf_to_text,
 )
-
-
-_HELVETICA = b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
-
-
-def _stream(content: bytes) -> bytes:
-    return b"<< /Length %d >>\nstream\n" % len(content) + content + b"\nendstream"
-
-
-def _minimal_pdf(
-    pages: list[str | bytes], font: bytes = _HELVETICA, extra_objs: tuple[bytes, ...] = ()
-) -> bytes:
-    """Build an uncompressed N-page PDF whose pages share one font /F1.
-
-    A ``str`` page becomes one ``Tj`` of that text; a ``bytes`` page is
-    the page's whole content stream. ``font`` is the body of object
-    ``3 + 2 * N``; ``extra_objs`` follow it as objects ``4 + 2 * N``, ...
-    (e.g. a ToUnicode stream the font dict refers to)."""
-    objs: list[bytes] = []
-    n = len(pages)
-    kids = " ".join(f"{3 + 2 * i} 0 R" for i in range(n))
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    objs.append(f"<< /Type /Pages /Kids [{kids}] /Count {n} >>".encode())
-    for i, page in enumerate(pages):
-        if isinstance(page, str):
-            content = f"BT /F1 12 Tf 72 700 Td ({page}) Tj ET".encode()
-        else:
-            content = page
-        objs.append(
-            (
-                f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-                f"/Contents {4 + 2 * i} 0 R /Resources << /Font << /F1 "
-                f"{3 + 2 * n} 0 R >> >> >>"
-            ).encode()
-        )
-        objs.append(_stream(content))
-    objs.append(font)
-    objs.extend(extra_objs)
-
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = []
-    for i, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += f"{i} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += f"xref\n0 {len(objs) + 1}\n0000000000 65535 f \n".encode()
-    for off in offsets:
-        out += f"{off:010d} 00000 n \n".encode()
-    out += (
-        f"trailer\n<< /Size {len(objs) + 1} /Root 1 0 R >>\n"
-        f"startxref\n{xref_at}\n%%EOF\n"
-    ).encode()
-    return bytes(out)
+from ocr_service_spark.sources.pages import pdf_stream, write_text_pdf
 
 
 def test_two_page_concat_no_separator():
     # the reference asserts exactly "firstsecond"
     # (tests/test_pdf_text_cleanup.py:8-55)
-    pdf = _minimal_pdf(["first", "second"])
+    pdf = write_text_pdf(["first", "second"])
     text, pages = pdf_to_text(pdf)
     assert pages == 2
     assert text == "firstsecond"
 
 
 def test_page_order_is_kids_order():
-    pdf = _minimal_pdf([f"p{i}" for i in range(7)])
+    pdf = write_text_pdf([f"p{i}" for i in range(7)])
     assert pdf_page_texts(pdf) == [f"p{i}" for i in range(7)]
 
 
 def test_page_range_extraction():
-    pdf = _minimal_pdf(["a", "b", "c", "d"])
+    pdf = write_text_pdf(["a", "b", "c", "d"])
     assert pdf_page_texts(pdf, 1, 3) == ["b", "c"]
     assert pdf_page_count(pdf) == 4
 
@@ -94,13 +42,13 @@ def test_incremental_update_appends_objects():
     # keeps the newest definition of an object number (later wins is not
     # guaranteed by our scan — the test pins current first-definition
     # behavior so regressions are visible)
-    pdf = _minimal_pdf(["old"])
+    pdf = write_text_pdf(["old"])
     text, pages = pdf_to_text(pdf)
     assert (text, pages) == ("old", 1)
 
 
 def test_string_escapes_in_content():
-    pdf = _minimal_pdf([r"a\(b\)c"])
+    pdf = write_text_pdf([r"a\(b\)c"])
     text, _ = pdf_to_text(pdf)
     assert text == "a(b)c"
 
@@ -120,7 +68,7 @@ def test_phantom_obj_inside_stream_body_does_not_clobber():
     # A stream body whose bytes happen to contain 'N G obj' (common in
     # compressed data) must not be parsed as a real object — last-write-
     # wins would overwrite the page object of that number.
-    pdf = _minimal_pdf(["real page text"])
+    pdf = write_text_pdf(["real page text"])
     # object 3 is the page; craft a decoy that would replace it with an
     # empty page if the scanner respected matches inside stream bodies
     decoy = b"\n3 0 obj\n<< /Type /Page /Parent 2 0 R >>\nendobj\n"
@@ -167,7 +115,7 @@ def _kernel_case(name: str) -> bytes:
     if name == "winansi_undefined_tail":
         # \201 (0x81) is undefined in cp1252: the run ends in an empty glyph
         # after a space, so the gapped show after it still inserts a space
-        return _minimal_pdf(
+        return write_text_pdf(
             [
                 b"BT /F1 12 Tf 72 700 Td (ab \\201) Tj 40 0 Td (cd) Tj "
                 b"(\\201) Tj 30 0 Td (ef\\201\\201) Tj 30 0 Td (g) Tj ET"
@@ -181,7 +129,7 @@ def _kernel_case(name: str) -> bytes:
             b"[65 /fi /emdash 97 /Aacute /uni263A /nosuchglyph /u1F600 /space] >> "
             b"/FirstChar 65 /Widths [600 1000] >>"
         )
-        return _minimal_pdf(
+        return write_text_pdf(
             [b"BT /F1 11 Tf 72 700 Td (ABabcde) Tj 20 0 Td (AxB\\223) Tj ET"], font=font
         )
     if name == "type0_tounicode_odd":
@@ -190,24 +138,24 @@ def _kernel_case(name: str) -> bytes:
             b"/DescendantFonts [<< /Type /Font /Subtype /CIDFontType2 /DW 900 "
             b"/W [1 [500 250] 3 5 400] >>] /ToUnicode 6 0 R >>"
         )
-        return _minimal_pdf(
+        return write_text_pdf(
             [
                 b"BT /F1 10 Tf 72 700 Td <000100020003000400050010001100200A> Tj "
                 b"(\\000\\001\\000) Tj 60 0 Td <0003 0004> Tj <0099> Tj "
                 b"20.5 0 Td <00> Tj <0001> Tj ET"
             ],
             font=font,
-            extra_objs=(_stream(_TO_UNICODE),),
+            extra_objs=(pdf_stream(_TO_UNICODE),),
         )
     if name == "tj_kerning":
-        return _minimal_pdf(
+        return write_text_pdf(
             [
                 b"BT /F1 12 Tf 72 700 Td [(Hel) 20 (lo) -400 (World) -250 (x) "
                 b"-301 (y) 2000 (z)] TJ [(a) -5000 () (b)] TJ 0 -14 Td [(n) -900 (m)] TJ ET"
             ]
         )
     if name == "spacing_operators":
-        return _minimal_pdf(
+        return write_text_pdf(
             [
                 b"BT /F1 10 Tf 72 700 Td (a b) Tj 15.5 0 Td 1.5 Tc (c d) Tj "
                 b"19 0 Td 4 Tw (e f) Tj 21 0 Td 50 Tz (g h) Tj 16 0 Td 100 Tz 0 Tc 0 Tw "
@@ -215,14 +163,14 @@ def _kernel_case(name: str) -> bytes:
             ]
         )
     if name == "empty_show":
-        return _minimal_pdf(
+        return write_text_pdf(
             [
                 b"BT () Tj /F1 12 Tf 72 700 Td () Tj (ab) Tj 40 0 Td () Tj (cd) Tj "
                 b"() Tj 10 0 Td () Tj 30 0 Td [() -900 ()] TJ (ef) Tj 0 -20 Td () Tj (g) Tj ET"
             ]
         )
     if name == "literal_string_escapes":
-        return _minimal_pdf(
+        return write_text_pdf(
             [
                 b"BT /F1 12 Tf 72 700 Td (a(b(c)d)e \\101\\1010\\7\\53x \\\\ \\( \\q "
                 b"li\\\nne con\\\r\ntinued \\n\\t.) Tj ET"
@@ -249,8 +197,8 @@ def test_interpreter_goldens(name: str):
 
 
 _BUCKET_DOCS = {
-    "a": _minimal_pdf([f"a{i}" for i in range(5)]),
-    "b": _minimal_pdf([f"b{i}" for i in range(6)]),
+    "a": write_text_pdf([f"a{i}" for i in range(5)]),
+    "b": write_text_pdf([f"b{i}" for i in range(6)]),
     "junk": b"%PDF-1.4 not really a pdf",
 }
 

@@ -17,15 +17,14 @@ import pytest
 from ocr_service_spark.extraction import extract_document
 
 GOLDEN_DIR = Path(__file__).resolve().parent / "golden"
-REFERENCE_DOCS = Path("/root/reference/ocr_service/tests/resources/docs")
 
 FIXTURES = sorted(p.name[: -len(".out.txt")] for p in GOLDEN_DIR.glob("*.out.txt"))
 
 
 @pytest.mark.parametrize("name", FIXTURES)
-def test_byte_identical_to_golden(name: str) -> None:
+def test_byte_identical_to_golden(name: str, fixture_bytes) -> None:
     rel = name.replace("__", "/")
-    payload = (REFERENCE_DOCS / rel).read_bytes()
+    payload = fixture_bytes(rel)
     row = extract_document(payload, f"https://fixtures.test/{Path(rel).name}")
 
     golden_text = (GOLDEN_DIR / f"{name}.out.txt").read_text(encoding="utf-8")

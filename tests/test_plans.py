@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from ocr_service_spark.plans.job import run_extraction
 from ocr_service_spark.plans.manifest import completed_parts, resume_filter, with_part_hash
 from ocr_service_spark.operators.relational import q02_revenue_by_region
-from ocr_service_spark.sources.pages import generate_pages
+from ocr_service_spark.sources.pages import REFERENCE_DOCS, generate_pages
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -287,7 +287,10 @@ def test_plan_hygiene_all_driver_queries(spark):
                    # 1-row raw-sum normalizer crossJoins (HITS
                    # sum-normalization, 4 per two rounds)
                    "q141_hits_scores"}
+    skip = set() if REFERENCE_DOCS.is_dir() else em.NEEDS_REFERENCE
     for name, fn in em.queries().items():
+        if name in skip:
+            continue
         plan = _formatted_plan(fn(spark, SF_DIR))
         assert "CartesianProduct" not in plan, name
         if name not in nlj_allowed:

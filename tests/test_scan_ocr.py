@@ -22,7 +22,6 @@ import pytest
 from ocr_service_spark.extraction.glyph_ocr import GlyphOcrEngine
 from ocr_service_spark.extraction.image_codecs import decode_image_luma
 
-FIXTURE = Path("/root/reference/ocr_service/tests/resources/docs/generic/pat_id_1.png")
 GOLDEN_TXT = Path(__file__).resolve().parent / "golden/generic__pat_id_1.txt.out.txt"
 
 # the reference DOCS gate text, verbatim incl. its line-continuation
@@ -54,8 +53,8 @@ def lev_similarity(s: str, t: str) -> float:
 
 
 @pytest.fixture(scope="module")
-def scan_result():
-    payload = FIXTURE.read_bytes()
+def scan_result(fixture_bytes):
+    payload = fixture_bytes("generic/pat_id_1.png")
     return GlyphOcrEngine().recognize(payload)
 
 
@@ -100,8 +99,8 @@ def test_scan_recognition_reads_key_content(scan_result):
         assert token in text, f"missing {token!r}"
 
 
-def test_scan_path_is_deterministic():
-    payload = FIXTURE.read_bytes()
+def test_scan_path_is_deterministic(fixture_bytes):
+    payload = fixture_bytes("generic/pat_id_1.png")
     eng = GlyphOcrEngine()
     assert eng.recognize(payload) == eng.recognize(payload)
 

@@ -4,12 +4,11 @@ and the checkpoint manifest must make runs resumable."""
 
 from __future__ import annotations
 
-from pathlib import Path
-
 import pytest
 from pyspark.sql import functions as F
 
 from ocr_service_spark.extraction import extract_document
+from ocr_service_spark.operators.extract import BUCKET_PAGES
 from ocr_service_spark.plans.job import run_extraction
 from ocr_service_spark.plans.manifest import (
     completed_parts,
@@ -18,13 +17,13 @@ from ocr_service_spark.plans.manifest import (
     run_with_checkpoint,
     with_part_hash,
 )
+from ocr_service_spark.sources import pages as pages_mod
 from ocr_service_spark.sources.pages import (
+    REFERENCE_DOCS,
     decode_payload_ladder,
     generate_pages,
     load_fixture_pages,
 )
-
-REFERENCE_DOCS = Path("/root/reference/ocr_service/tests/resources/docs")
 
 
 @pytest.fixture(scope="module")
@@ -35,6 +34,7 @@ def fixture_results(spark):
     return {r["url"]: r for r in res.collect()}
 
 
+@pytest.mark.requires_reference
 def test_spark_matches_pure_python(fixture_results):
     checked = 0
     for url, row in fixture_results.items():
@@ -52,6 +52,7 @@ def test_spark_matches_pure_python(fixture_results):
     assert checked >= 20
 
 
+@pytest.mark.requires_reference
 def test_salted_path_used_for_big_pdf(fixture_results):
     row = fixture_results["https://fixtures.test/pdf/ex1.pdf"]
     assert row["pages"] == 10
@@ -61,10 +62,16 @@ def test_salted_path_used_for_big_pdf(fixture_results):
     assert row["elapsed_ms"] is None
 
 
-def test_null_and_empty_rows(fixture_results):
-    null_row = fixture_results["https://fixtures.test/null-payload"]
+def test_null_and_empty_rows(spark):
+    pages = spark.createDataFrame(
+        [("https://fixtures.test/null-payload", None),
+         ("https://fixtures.test/empty-payload", bytearray(b""))],
+        "url string, html binary",
+    )
+    rows = {r["url"]: r for r in run_extraction(pages, salt_min_bytes=100_000).collect()}
+    null_row = rows["https://fixtures.test/null-payload"]
     assert null_row["success"] is True and null_row["ocr_skipped"] is True
-    empty_row = fixture_results["https://fixtures.test/empty-payload"]
+    empty_row = rows["https://fixtures.test/empty-payload"]
     assert empty_row["success"] is False
 
 
@@ -89,13 +96,12 @@ def test_payload_ladder(spark):
     assert bytes(out["json_text"]["html"]) == b"plain text payload"
 
 
+@pytest.mark.requires_reference
 def test_nifi_record_payload(spark):
     # the reference's NiFi-record shape (tests/test_process.py:169-256):
     # a JSON ARRAY wrapping {binary_data, footer}; the ladder takes
     # record[0] (api/process.py:56-57) and base64-decodes binary_data
-    body = Path(
-        "/root/reference/ocr_service/tests/resources/payloads/sample_base64_record_nifi.json"
-    ).read_text()
+    body = (REFERENCE_DOCS.parent / "payloads/sample_base64_record_nifi.json").read_text()
     df = spark.createDataFrame([("nifi", body)], "url string, body string")
     decoded = decode_payload_ladder(df, "body")
     row = run_extraction(decoded.select("url", "html")).collect()[0]
@@ -110,6 +116,43 @@ def test_generator_deterministic(spark):
     assert a == b
     classes = {r["url"].rsplit(".", 1)[-1] for r in a}
     assert {"html", "txt", "rtf", "xml", "docx", "pdf", "png", "bin"} <= classes
+
+
+def test_generator_embeds_reference_payloads(spark, tmp_path, monkeypatch):
+    # where the reference exists its bytes are used as they are, so the
+    # driver's q41/q42 outputs do not depend on the stand-ins
+    payloads = pages_mod._REFERENCE_PAYLOADS
+    for rel in payloads.values():
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_bytes(b"S:" + rel.encode())
+    monkeypatch.setattr(pages_mod, "REFERENCE_DOCS", tmp_path)
+    rows = generate_pages(spark, 1000, seed=3, skew_every=10).filter(
+        F.length("html") < 64
+    ).collect()
+    embedded = {bytes(r["html"]).decode()[2:]: r["url"] for r in rows}
+    assert set(embedded) == set(payloads.values())
+    # each under its kind's url extension, without the "_big" suffix
+    for kind, rel in payloads.items():
+        assert embedded[rel].endswith("." + kind.removesuffix("_big"))
+
+
+def test_generator_stand_ins_route_like_the_reference(tmp_path, monkeypatch):
+    monkeypatch.setattr(pages_mod, "REFERENCE_DOCS", tmp_path / "absent")
+    payloads = pages_mod._fixture_payloads()
+    # generate_pages' url extension: the kind, without the "_big" suffix
+    rows = {k: extract_document(v, f"u.{k.removesuffix('_big')}") for k, v in payloads.items()}
+    for kind in ("docx", "docx_big"):
+        assert rows[kind]["doc_class"] == "office" and rows[kind]["success"] is True
+    assert rows["pdf"]["doc_class"] == "pdf" and rows["pdf"]["success"] is True
+    assert rows["pdf_big"]["success"] is True and rows["pdf_big"]["pages"] > BUCKET_PAGES
+    assert rows["png"]["doc_class"] == "image" and rows["png"]["ocr_skipped"] is True
+    assert rows["encrypted"]["doc_class"] == "encrypted_office"
+
+
+def test_fixture_loader_fails_loudly_without_reference(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(pages_mod, "REFERENCE_DOCS", tmp_path / "absent")
+    with pytest.raises(FileNotFoundError, match="absent"):
+        load_fixture_pages(spark)
 
 
 def test_generated_pages_extract(spark):

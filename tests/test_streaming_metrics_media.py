@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_service_spark.operators.metrics import ExtractionMetrics
@@ -160,6 +161,7 @@ def test_extraction_metrics_accumulators(spark):
     assert 0 < snap["empty_text"] < snap["docs"]
 
 
+@pytest.mark.requires_reference
 def test_frame_sampling_and_resize_plumbing(spark):
     from ocr_service_spark.operators.multimodal import resize_images, sample_frames
 
@@ -204,6 +206,7 @@ def test_resize_is_real_pixels(spark):
     assert list(out) == list(expect)
 
 
+@pytest.mark.requires_reference
 def test_media_feature_plumbing(spark):
     pages = load_fixture_pages(spark).filter(F.col("html").isNotNull())
     feats = extract_media_features(pages).collect()

@@ -6,9 +6,9 @@ previously dimension-probed only."""
 from __future__ import annotations
 
 import hashlib
+import io
 import random
 import zipfile
-from pathlib import Path
 
 import pytest
 
@@ -18,10 +18,6 @@ from ocr_service_spark.extraction.image_codecs import (
     _tiff_lzw,
     decode_image_luma,
     encode_tiff_gray,
-)
-
-REF_TIFF_ZIP = Path(
-    "/root/reference/ocr_service/tests/resources/docs/invalid/tiff_multipage_spp2.tiff.zip"
 )
 
 VARIANTS = [
@@ -59,10 +55,11 @@ def test_tiff_lzw_rejects_garbage():
     assert _tiff_lzw(bytes([0xFF] * 8), 64) is None  # out-of-table codes
 
 
-def test_reference_multipage_spp2_fixture_decodes():
+def test_reference_multipage_spp2_fixture_decodes(fixture_bytes):
     """The invalid/tiff_multipage_spp2.tiff fixture (gray+alpha,
     2550x3300, 6 pages): first page now pixel-decodes; hash pinned."""
-    data = zipfile.ZipFile(REF_TIFF_ZIP).read("tiff_multipage_spp2.tiff")
+    zipped = io.BytesIO(fixture_bytes("invalid/tiff_multipage_spp2.tiff.zip"))
+    data = zipfile.ZipFile(zipped).read("tiff_multipage_spp2.tiff")
     out = _tiff_luma(data)
     assert out is not None
     w, h, luma = out

@@ -8,11 +8,10 @@ from __future__ import annotations
 
 import struct
 
-from cfb_builder import build_cfb
-
 from ocr_service_spark.extraction.pipeline import extract_document
 from ocr_service_spark.extraction.ppt_text import extract_ppt_text
 from ocr_service_spark.extraction.xls_text import extract_xls_text
+from ocr_service_spark.sources.pages import build_cfb
 
 
 def _rec(rtype: int, payload: bytes) -> bytes:

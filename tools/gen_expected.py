@@ -83,6 +83,12 @@ def build_q40_from_goldens() -> pd.DataFrame:
 
 
 def main() -> None:
+    from ocr_service_spark.sources.pages import REFERENCE_DOCS
+
+    # without it generate_pages falls back to stand-in payloads, which
+    # would silently rewrite q41/q42 against other inputs
+    if not REFERENCE_DOCS.is_dir():
+        sys.exit(f"gen_expected: reference test documents not found: {REFERENCE_DOCS}")
     out = GOLDEN / "q40_expected.parquet"
     pdf = build_q40_from_goldens()
     pdf.to_parquet(out, index=False)

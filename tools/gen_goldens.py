@@ -20,8 +20,8 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from ocr_service_spark.extraction import extract_document  # noqa: E402
+from ocr_service_spark.sources.pages import REFERENCE_DOCS  # noqa: E402
 
-REFERENCE_DOCS = Path("/root/reference/ocr_service/tests/resources/docs")
 GOLDEN_DIR = Path(__file__).resolve().parents[1] / "tests" / "golden"
 
 FIXTURES = [
@@ -57,6 +57,8 @@ def golden_name(rel: str) -> str:
 
 
 def main() -> None:
+    if not REFERENCE_DOCS.is_dir():
+        sys.exit(f"gen_goldens: reference test documents not found: {REFERENCE_DOCS}")
     GOLDEN_DIR.mkdir(parents=True, exist_ok=True)
     for rel in FIXTURES:
         payload = (REFERENCE_DOCS / rel).read_bytes()

@@ -35,9 +35,10 @@ exactly as before (``sum``/``fsum`` would change the rounding).
 Open once, extract many ranges: ``OpenedPdf`` is the one parse path
 (object scan, decryption, page tree); ``pdf_page_texts`` and
 ``pdf_to_text`` open a document and interpret a page range of it. An
-open document caches the streams pages share (object streams,
-ToUnicode CMaps) but not page content, which is decoded per page, so
-keeping it open costs no more memory as more pages are interpreted.
+open document caches what pages share (object streams, ToUnicode
+CMaps, one ``_Font`` per font object) but not page content, which is
+decoded per page, so keeping it open costs no more memory as more
+pages are interpreted.
 
 Encrypted documents raise ``PdfEncryptedError`` (the reference's
 pdfium would equally fail without a password); the pipeline maps this
@@ -1107,16 +1108,24 @@ def _interpret_page(doc: _Document, content: bytes, fonts: dict[str, _Font]) -> 
 # ---------------------------------------------------------------------------
 
 
-def _page_fonts(doc: _Document, page: dict) -> dict[str, _Font]:
+def _page_fonts(doc: _Document, page: dict, built: dict[int, _Font | None]) -> dict[str, _Font]:
+    """The page's font resources by name. ``built`` caches each font by
+    the identity of its resolved font object, which the document keeps
+    alive, so pages sharing a font share one ``_Font`` (None: failed)."""
     res = doc.resolve(page.get("Resources")) or {}
     fonts_dict = doc.resolve(res.get("Font")) if isinstance(res, dict) else {}
     fonts: dict[str, _Font] = {}
     if isinstance(fonts_dict, dict):
         for name, fref in fonts_dict.items():
-            try:
-                fonts[str(name)] = _Font(doc, fref)
-            except Exception:
-                continue
+            fdict = doc.resolve(fref)
+            key = id(fdict)
+            if key not in built:
+                try:
+                    built[key] = _Font(doc, fdict)
+                except Exception:
+                    built[key] = None
+            if built[key] is not None:
+                fonts[str(name)] = built[key]
     return fonts
 
 
@@ -1146,28 +1155,33 @@ def _parse(stream: bytes, password: bytes = b"") -> tuple[_Document, list[dict]]
 
 class OpenedPdf:
     """A parsed document, ready to interpret any page range: the open
-    step of ``pdf_page_texts``. The salted bucket stage keeps one open
-    for a consecutive run of a document's bucket rows instead of
-    re-parsing it for every bucket.
+    step of ``pdf_page_texts``. The salted slice stage keeps one open
+    for a consecutive run of a document's slice rows and reads the
+    page count from it.
 
     ``password`` unlocks standard-security-handler documents; with the
     default empty password, docs that verify against the empty user
     password decrypt transparently (pdfium behavior) and others raise
     PdfEncryptedError. A non-PDF or an empty page tree raises PdfError."""
 
-    __slots__ = ("_doc", "_pages")
+    __slots__ = ("_doc", "_pages", "_fonts")
 
     def __init__(self, stream: bytes, password: bytes = b"") -> None:
         self._doc, self._pages = _parse(stream, password)
         if not self._pages:
             raise PdfError("no pages")
+        self._fonts: dict[int, _Font | None] = {}
+
+    @property
+    def page_count(self) -> int:
+        return len(self._pages)
 
     def page_texts(self, start: int = 0, stop: int | None = None) -> list[str]:
         """Per-page text of the half-open page range [start, stop)."""
         doc = self._doc
         texts = []
         for page in self._pages[start:stop]:
-            fonts = _page_fonts(doc, page)
+            fonts = _page_fonts(doc, page, self._fonts)
             content = _page_content(doc, page)
             texts.append(_interpret_page(doc, content, fonts))
         return texts

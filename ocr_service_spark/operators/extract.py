@@ -4,17 +4,18 @@ Three operators compose the extraction job (plans/job.py):
 
 - ``extract_documents``    — single-pass: one pages row in, one results
   row out; the whole reference request lifecycle per Arrow batch.
-- ``explode_pdf_buckets``  — stage A of the skew path: big PDFs are
-  fanned out to (url, bucket, payload) rows so a 500-page document
-  spreads across tasks ("salting on (url, page_range)" per the north
-  rule). Page count is parsed once here.
-- ``extract_pdf_buckets``  — stage B: per-bucket raw page-range text.
-  A task parses a document once per consecutive run of its rows
-  (``pdf_text.OpenedPdf``), not once per bucket; the page interpreter
-  handles each shown string as one glyph run (see ``pdf_text``).
-  ``reassemble_pdf_results`` then re-aggregates with an ordered concat
-  (array_sort over (bucket, txt) structs) — deterministic page order,
-  unlike the reference's ``imap_unordered`` pool (converter.py:170-175).
+- ``explode_pdf_buckets``  — the skew path's explode, pure Column logic
+  in the scan stage: each big PDF becomes a few (url, slice) rows, so a
+  500-page document spreads across tasks ("salting on (url, page_range)"
+  per the north rule) at one payload copy per slice.
+- ``extract_pdf_buckets``  — the slice stage: raw text of one page slice
+  per row. A task parses a document once per consecutive run of its
+  rows (``pdf_text.OpenedPdf``) and learns the page count there; the
+  page interpreter handles each shown string as one glyph run (see
+  ``pdf_text``). ``reassemble_pdf_results`` then re-aggregates with an
+  ordered concat (array_sort over (bucket, txt) structs) — deterministic
+  page order, unlike the reference's ``imap_unordered`` pool
+  (converter.py:170-175).
 
 Everything stays JVM-side except the extraction itself, which is
 Arrow-batched (no per-row Python round trips).
@@ -41,6 +42,7 @@ from pyspark.sql.types import (
 
 from ocr_service_spark.extraction.pdf_text import OpenedPdf
 from ocr_service_spark.extraction.pipeline import extract_document
+from ocr_service_spark.plans.parallelism import fan_out_width
 
 RESULT_SCHEMA = StructType(
     [
@@ -61,11 +63,19 @@ RESULT_SCHEMA = StructType(
     ]
 )
 
-# pages per salted bucket: one stage-B row extracts this many pages
+# pages per salted bucket: the unit a slice's page range is cut in
 BUCKET_PAGES = 16
-# stage-A output: one row per (url, page bucket); payload rides along
-_EXPLODE_SCHEMA = "url string, bucket int, n_buckets int, page_count int, payload binary"
-# stage-B output: raw (unfinalized) text per bucket
+# Most slices per salted PDF. Every slice parses the whole document
+# once (44 ms for pdfskew's 2.1 MB, 453-page giant, 4-core box) and
+# interprets its share of the page text (170 ms in all), so a slice
+# takes about 44 + 170/n ms: 86 ms at 4 slices, 65 ms at 8 for twice the
+# parses and payload copies. Beyond about 4-8 slices one more adds a
+# parse of CPU and saves almost no time, and the fan-out width alone
+# would be 8000 parses of every giant at 1000 executors x 8 cores.
+MAX_SLICES = 4
+# slice-stage output: raw (unfinalized) text per slice, ``bucket`` being
+# the slice index (slices are consecutive page ranges, so slice order is
+# page order); page_count -1 when the document does not open
 _BUCKET_TEXT_SCHEMA = "url string, bucket int, page_count int, txt string, error boolean"
 
 
@@ -141,49 +151,25 @@ def extract_documents(
 def explode_pdf_buckets(
     big_pdfs: DataFrame, payload_col: str = "html", bucket_pages: int = BUCKET_PAGES
 ) -> DataFrame:
-    """Stage A: parse page count once, emit one row per page bucket.
+    """The salted explode: each big PDF becomes ``n`` rows (url, slice,
+    n_slices, payload), ``n = min(fan-out width, MAX_SLICES)``.
 
-    Payload bytes are duplicated per bucket — bounded by
-    ceil(pages / bucket_pages) and only for the rare huge documents the
-    router sends here; the win is page-level parallelism on exactly the
-    skew that would otherwise straggle a task.
+    Pure Column logic, so it runs JVM-side in the scan stage; no page
+    count is parsed here. The payload is copied once per slice, and the
+    slice stage cuts the page buckets of ``bucket_pages`` pages (the
+    parameter only keeps the signature) into ``n`` consecutive ranges.
     """
-    from ocr_service_spark.extraction.pdf_text import pdf_page_count
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict[str, list] = {
-                "url": [],
-                "bucket": [],
-                "n_buckets": [],
-                "page_count": [],
-                "payload": [],
-            }
-            for url, payload in zip(batch["url"], batch["payload"]):
-                payload = bytes(payload)
-                try:
-                    count = pdf_page_count(payload)
-                except Exception:
-                    count = -1  # parse failure: single error bucket
-                n_buckets = max(1, -(-max(count, 1) // bucket_pages)) if count >= 0 else 1
-                for bucket in range(n_buckets):
-                    out["url"].append(url)
-                    out["bucket"].append(bucket)
-                    out["n_buckets"].append(n_buckets)
-                    out["page_count"].append(count)
-                    out["payload"].append(payload)
-            frame = pd.DataFrame(out)
-            frame["bucket"] = frame["bucket"].astype("int32")
-            frame["n_buckets"] = frame["n_buckets"].astype("int32")
-            frame["page_count"] = frame["page_count"].astype("int32")
-            yield frame
-
-    narrowed = big_pdfs.select("url", F.col(payload_col).alias("payload"))
-    return narrowed.mapInPandas(run, schema=_EXPLODE_SCHEMA)
+    n = min(fan_out_width(big_pdfs.sparkSession), MAX_SLICES)
+    return big_pdfs.select(
+        "url",
+        F.explode(F.sequence(F.lit(0), F.lit(n - 1))).alias("slice"),
+        F.lit(n).alias("n_slices"),
+        F.col(payload_col).alias("payload"),
+    )
 
 
 def _bucket_texts(batches: Iterator[pd.DataFrame], bucket_pages: int) -> Iterator[pd.DataFrame]:
-    """The body of ``extract_pdf_buckets``: one text row per bucket row."""
+    """The body of ``extract_pdf_buckets``: one text row per slice row."""
     open_url: str | None = None
     opened: OpenedPdf | None = None  # None: open_url failed to open
     for batch in batches:
@@ -194,30 +180,30 @@ def _bucket_texts(batches: Iterator[pd.DataFrame], bucket_pages: int) -> Iterato
             "txt": [],
             "error": [],
         }
-        for url, bucket, page_count, payload in zip(
-            batch["url"], batch["bucket"], batch["page_count"], batch["payload"]
+        for url, j, n, payload in zip(
+            batch["url"], batch["slice"], batch["n_slices"], batch["payload"]
         ):
-            txt, error = "", False
-            if page_count < 0:
-                error = True
-            else:
-                if open_url is None or url != open_url:
-                    open_url = url
-                    try:
-                        opened = OpenedPdf(bytes(payload))
-                    except Exception:
-                        opened = None
-                if opened is None:
+            if url != open_url:
+                open_url = url
+                try:
+                    opened = OpenedPdf(bytes(payload))
+                except Exception:
+                    opened = None
+            txt, error, page_count = "", opened is None, -1
+            j, n = int(j), int(n)
+            if opened is not None:
+                page_count = opened.page_count
+                n_buckets = -(-page_count // bucket_pages)
+                # slice j of n: buckets [n_buckets*j//n, n_buckets*(j+1)//n)
+                start = n_buckets * j // n * bucket_pages
+                stop = n_buckets * (j + 1) // n * bucket_pages
+                try:
+                    txt = "".join(opened.page_texts(start, stop))
+                except Exception:
                     error = True
-                else:
-                    try:
-                        start = int(bucket) * bucket_pages
-                        txt = "".join(opened.page_texts(start, start + bucket_pages))
-                    except Exception:
-                        error = True
             out["url"].append(url)
-            out["bucket"].append(int(bucket))
-            out["page_count"].append(int(page_count))
+            out["bucket"].append(j)
+            out["page_count"].append(page_count)
             out["txt"].append(txt)
             out["error"].append(error)
         frame = pd.DataFrame(out)
@@ -227,20 +213,19 @@ def _bucket_texts(batches: Iterator[pd.DataFrame], bucket_pages: int) -> Iterato
 
 
 def extract_pdf_buckets(buckets: DataFrame, bucket_pages: int = BUCKET_PAGES) -> DataFrame:
-    """Stage B: extract the raw text of one page bucket per row.
+    """The slice stage: extract the raw text of one page slice per row.
 
     A task parses a document once per consecutive run of that url's
     rows: the last opened document is kept while consecutive rows share
     its ``url`` (across Arrow batches), and a failed open marks every
-    bucket of the run ``error`` without parsing again. No sort is added,
-    so a task still holds one bucket's payload at a time.
+    slice of the run ``error`` (page_count -1) without parsing again.
+    The open also gives the page count, so slice ``j`` of ``n`` learns
+    its buckets there; a slice left without buckets (a document of
+    fewer buckets than slices) does no page work. No sort is added, so
+    a task holds one slice's payload at a time.
 
-    How long the runs are depends on the shuffle, not on this stage.
-    ``plans/job.py`` hash-partitions buckets on (url, bucket), so each
-    reducer block holds about one bucket per url. A task that reads one
-    salted document (pdfskew's single giant) sees one run and parses it
-    once. A task whose reducer blocks mix several big PDFs reads them
-    interleaved and reopens on almost every row, as before the reuse.
+    ``plans/job.py`` deals the slice rows round-robin, so one giant's
+    slices land on distinct tasks and each slice pays one parse.
     """
     return buckets.mapInPandas(
         partial(_bucket_texts, bucket_pages=bucket_pages), schema=_BUCKET_TEXT_SCHEMA
@@ -250,11 +235,11 @@ def extract_pdf_buckets(buckets: DataFrame, bucket_pages: int = BUCKET_PAGES) ->
 def reassemble_pdf_results(bucket_texts: DataFrame) -> DataFrame:
     """Ordered re-agg: page-order concat, then finalize + result columns.
 
-    ``array_sort(collect_list(struct(bucket, txt)))`` sorts by bucket
-    (struct ordering is field order), so the concatenation is
-    deterministic page order — the explicit fix for the reference's
-    completion-order quirk (SURVEY.md §2.3 C4). Any bucket error
-    reproduces the reference's swallowed-exception empty result.
+    ``array_sort(collect_list(struct(bucket, txt)))`` sorts by bucket,
+    the slice index (struct ordering is field order), so the
+    concatenation is deterministic page order — the explicit fix for the
+    reference's completion-order quirk (SURVEY.md §2.3 C4). Any slice
+    error reproduces the reference's swallowed-exception empty result.
     """
     @F.pandas_udf(StringType())
     def finalize_udf(raw: pd.Series) -> pd.Series:

@@ -12,10 +12,11 @@ exercised identically on local[N]:
 3. **Size-skew repartition**: the single-pass branch repartitions by a
    hash of (url) after filtering; Arrow batches are bounded so one
    task never holds too many big payloads (AQE handles residual skew).
-4. **Salted branch**: page-count parse -> explode (url, page-bucket)
-   -> per-bucket extraction -> ordered re-agg (array_sort concat) —
-   the north rule's "salting on (url, page_range) with explode/re-agg
-   ordered concat".
+4. **Salted branch**: explode (url, page slice) JVM-side in the scan
+   stage -> round-robin fan-out -> per-slice extraction (one parse per
+   slice, which also counts the pages) -> ordered re-agg (array_sort
+   concat) — the north rule's "salting on (url, page_range) with
+   explode/re-agg ordered concat", at one payload copy per slice.
 5. **Union** both branches (unionByName) into the results schema.
 
 Checkpoint/lineage (resume_*) lives in plans/manifest.py.
@@ -33,6 +34,7 @@ from ocr_service_spark.operators.extract import (
     extract_pdf_buckets,
     reassemble_pdf_results,
 )
+from ocr_service_spark.plans.parallelism import fan_out
 
 # Payloads above this byte size that sniff as PDF go to the salted path.
 SALT_MIN_BYTES = 2 * 1024 * 1024
@@ -111,24 +113,16 @@ def run_extraction(
 
     # Salted branch: filter at FULL scan width (a coalesce here would
     # collapse the scan itself to a few tasks — a non-starter when the
-    # scan is 100 TB), then shuffle the survivors by url. Big PDFs are
-    # rare by construction, so the shuffle moves only a sliver of bytes
-    # and AQE coalesces its read side into a few dense partitions —
-    # which is what keeps the page-count parse stage from paying
-    # per-task Python-worker overhead on dozens of near-empty
-    # partitions. The bucket explode then re-spreads the real work by
-    # (url, bucket).
+    # scan is 100 TB) and explode each big PDF into its slices in that
+    # same stage. The keyless fan-out deals the slice rows round-robin
+    # at an explicit width, so one giant's consecutive slice rows land
+    # on distinct tasks (its local sort keeps retries deterministic).
     # filter(big) (not coalesce(big, false)): SQL filters keep only
     # TRUE rows, so the semantics are identical, and the bare
     # conjunction lets Catalyst split + push the size conjunct into
     # the parquet scan (coalesce() is an opaque wrapper the optimizer
     # will not decompose)
-    salted = pages.filter(big).repartition("url")
-    buckets = explode_pdf_buckets(salted, payload_col, bucket_pages)
-    if repartition:
-        buckets = buckets.repartition(repartition, "url", "bucket")
-    else:
-        buckets = buckets.repartition("url", "bucket")  # AQE coalesces when tiny
-    salted_results = reassemble_pdf_results(extract_pdf_buckets(buckets, bucket_pages))
+    slices = fan_out(explode_pdf_buckets(pages.filter(big), payload_col, bucket_pages))
+    salted_results = reassemble_pdf_results(extract_pdf_buckets(slices, bucket_pages))
 
     return normal_results.unionByName(salted_results)

@@ -33,11 +33,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 
 
+def fan_out_width(spark: SparkSession) -> int:
+    """The task count ``fan_out`` spreads to: ``defaultParallelism``."""
+    return spark.sparkContext.defaultParallelism
+
+
 def fan_out(df: DataFrame, *keys: str | Column) -> DataFrame:
-    """Repartition ``df`` to ``defaultParallelism`` tasks: round-robin
-    when keyless, hash-partitioned by ``keys`` otherwise (see the
-    module docstring for the rule and its cost)."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
+    """Repartition ``df`` to ``fan_out_width`` tasks: round-robin when
+    keyless, hash-partitioned by ``keys`` otherwise (see the module
+    docstring for the rule and its cost)."""
+    return df.repartition(fan_out_width(df.sparkSession), *keys)
 
 
 def documents(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:

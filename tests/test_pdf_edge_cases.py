@@ -201,59 +201,50 @@ _BUCKET_DOCS = {
     "b": write_text_pdf([f"b{i}" for i in range(6)]),
     "junk": b"%PDF-1.4 not really a pdf",
 }
+_SLICE_COLS = ["url", "slice", "n_slices", "payload"]
 
 
-def _bucket_rows(order: list[tuple[str, int]]) -> list[tuple]:
-    return [
-        (url, bucket, 3, 0 if url == "junk" else 3, _BUCKET_DOCS[url]) for url, bucket in order
-    ]
+def _slice_rows(
+    order: list[tuple[str, int]], n_slices: int = 3, docs: dict = _BUCKET_DOCS
+) -> list[tuple]:
+    return [(url, j, n_slices, docs[url]) for url, j in order]
 
 
-def _expected_bucket_texts(order: list[tuple[str, int]], bucket_pages: int) -> list[tuple]:
+def _expected_slice_texts(
+    order: list[tuple[str, int]], bucket_pages: int, n_slices: int = 3
+) -> list[tuple]:
+    # slice j of n holds buckets [nb*j//n, nb*(j+1)//n), nb the bucket count
     want = []
-    for url, bucket in order:
+    for url, j in order:
         if url == "junk":
-            want.append((url, bucket, 0, "", True))
-        else:
-            start = bucket * bucket_pages
-            txt = "".join(pdf_page_texts(_BUCKET_DOCS[url], start, start + bucket_pages))
-            want.append((url, bucket, 3, txt, False))
+            want.append((url, j, -1, "", True))
+            continue
+        pages = pdf_page_texts(_BUCKET_DOCS[url])
+        nb = -(-len(pages) // bucket_pages)
+        buckets = range(nb * j // n_slices, nb * (j + 1) // n_slices)
+        txt = "".join("".join(pages[b * bucket_pages : (b + 1) * bucket_pages]) for b in buckets)
+        want.append((url, j, len(pages), txt, False))
     return want
 
 
-def test_bucket_stage_text_and_errors_with_interleaved_urls_across_arrow_batches(spark):
-    # two multi-bucket PDFs and a %PDF- junk payload in one partition, their
-    # bucket rows interleaved: a task that keeps the last opened document
-    # must reopen whenever the url changes, also across Arrow batches
-    from ocr_service_spark.operators.extract import extract_pdf_buckets
-
-    bucket_pages = 2
-    order = [("a", 0), ("b", 0), ("a", 1), ("junk", 0), ("b", 1), ("b", 2), ("a", 2), ("junk", 0)]
-    rows = _bucket_rows(order)
-    frame = spark.createDataFrame(
-        rows, "url string, bucket int, n_buckets int, page_count int, payload binary"
-    ).coalesce(1)
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, "3")
-    try:
-        got = [tuple(r) for r in extract_pdf_buckets(frame, bucket_pages).collect()]
-    finally:
-        spark.conf.set(key, saved)
-
-    want = _expected_bucket_texts(order, bucket_pages)
-    assert got == want
-    assert want[0][3] == "a0a1" and want[5][3] == "b4b5"
-
-
-def test_bucket_stage_opens_each_document_once_per_run_of_its_rows(monkeypatch):
-    # the stage body in-process, with the opens counted: one open per
-    # consecutive run of a url's rows, also when a run spans Arrow batches,
-    # and none more for the rest of a run whose open failed
+def _run_slice_stage(batches: list[list[tuple]], bucket_pages: int) -> list[tuple]:
+    """The slice stage's body in-process, one Arrow batch per list."""
     import pandas as pd
 
-    from ocr_service_spark.extraction.pdf_text import OpenedPdf
     from ocr_service_spark.operators.extract import _bucket_texts
+
+    frames = [pd.DataFrame(rows, columns=_SLICE_COLS) for rows in batches]
+    return [
+        tuple(row)
+        for frame in _bucket_texts(iter(frames), bucket_pages)
+        for row in frame.itertuples(index=False)
+    ]
+
+
+@pytest.fixture
+def opens(monkeypatch) -> list[bytes]:
+    """The payload of every ``OpenedPdf`` opened, in order."""
+    from ocr_service_spark.extraction.pdf_text import OpenedPdf
 
     opened: list[bytes] = []
     real_init = OpenedPdf.__init__
@@ -263,23 +254,100 @@ def test_bucket_stage_opens_each_document_once_per_run_of_its_rows(monkeypatch):
         real_init(self, stream, password)
 
     monkeypatch.setattr(OpenedPdf, "__init__", counting_init)
+    return opened
 
+
+def test_bucket_stage_text_and_errors_with_interleaved_urls_across_arrow_batches(spark):
+    # two multi-bucket PDFs and a %PDF- junk payload in one partition, their
+    # slice rows interleaved: a task that keeps the last opened document
+    # must reopen whenever the url changes, also across Arrow batches
+    from ocr_service_spark.operators.extract import extract_pdf_buckets
+
+    bucket_pages = 2
+    order = [("a", 0), ("b", 0), ("a", 1), ("junk", 0), ("b", 1), ("b", 2), ("a", 2), ("junk", 1)]
+    frame = spark.createDataFrame(
+        _slice_rows(order), "url string, slice int, n_slices int, payload binary"
+    ).coalesce(1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = [tuple(r) for r in extract_pdf_buckets(frame, bucket_pages).collect()]
+    finally:
+        spark.conf.set(key, saved)
+
+    want = _expected_slice_texts(order, bucket_pages)
+    assert got == want
+    assert want[0][3] == "a0a1" and want[5][3] == "b4b5"
+
+
+def test_bucket_stage_opens_each_document_once_per_run_of_its_rows(opens):
+    # one open per consecutive run of a url's rows, also when a run spans
+    # Arrow batches, and none more for the rest of a run whose open failed
     bucket_pages = 2
     batches = [
         [("a", 0), ("a", 1)],
         [("a", 2), ("b", 0)],
-        [("b", 1), ("junk", 0), ("junk", 0)],
-        [("junk", 0), ("b", 2), ("a", 0)],
+        [("b", 1), ("junk", 0), ("junk", 1)],
+        [("junk", 2), ("b", 2), ("a", 0)],
     ]
-    cols = ["url", "bucket", "n_buckets", "page_count", "payload"]
-    frames = [pd.DataFrame(_bucket_rows(order), columns=cols) for order in batches]
-    got = [
-        tuple(row)
-        for frame in _bucket_texts(iter(frames), bucket_pages)
-        for row in frame.itertuples(index=False)
-    ]
+    got = _run_slice_stage([_slice_rows(order) for order in batches], bucket_pages)
 
     docs = _BUCKET_DOCS
-    assert opened == [docs["a"], docs["b"], docs["junk"], docs["b"], docs["a"]]
+    assert opens == [docs["a"], docs["b"], docs["junk"], docs["b"], docs["a"]]
     order = [key for batch in batches for key in batch]
-    assert got == _expected_bucket_texts(order, bucket_pages)
+    assert got == _expected_slice_texts(order, bucket_pages)
+
+
+def test_slices_past_the_last_bucket_do_no_page_work(opens, monkeypatch):
+    # "a" has 5 pages, 3 buckets of 2: of 7 slices, 4 get no bucket, and
+    # every page is interpreted exactly once over the run
+    from ocr_service_spark.extraction import pdf_text
+
+    interpreted = []
+    real = pdf_text._interpret_page
+    monkeypatch.setattr(
+        pdf_text, "_interpret_page", lambda *a: interpreted.append(1) or real(*a)
+    )
+    got = _run_slice_stage([_slice_rows([("a", j) for j in range(7)], 7)], 2)
+
+    assert [row[3] for row in got] == ["", "", "a0a1", "", "a2a3", "", "a4"]
+    assert {row[2] for row in got} == {5} and not any(row[4] for row in got)
+    assert len(opens) == 1 and len(interpreted) == 5
+
+
+def test_zero_page_pdf_slices_are_errors():
+    # an empty page tree does not open: every slice is an error row
+    # with page_count -1, which the re-agg turns into the empty result
+    docs = {"empty": write_text_pdf([])}
+    got = _run_slice_stage([_slice_rows([("empty", j) for j in range(3)], docs=docs)], 2)
+    assert got == [("empty", j, -1, "", True) for j in range(3)]
+
+
+@pytest.mark.parametrize("n_slices", [1, 3, 4, 7])
+def test_slice_texts_in_order_equal_pdf_to_text(n_slices: int):
+    pdf = write_text_pdf([f"p{i} " for i in range(37)])
+    rows = _slice_rows([("long", j) for j in range(n_slices)], n_slices, {"long": pdf})
+    got = _run_slice_stage([rows], 4)
+    assert [row[1] for row in got] == list(range(n_slices))
+    assert "".join(row[3] for row in got) == pdf_to_text(pdf)[0]
+    assert {row[2] for row in got} == {37}
+
+
+def test_one_font_per_font_object_per_open(monkeypatch):
+    # ten pages share one font object: one _Font for the whole document,
+    # not one per page, and one more for a second open
+    from ocr_service_spark.extraction import pdf_text
+
+    built = []
+    real_init = pdf_text._Font.__init__
+
+    def counting_init(self, doc, fdict):
+        built.append(fdict)
+        real_init(self, doc, fdict)
+
+    monkeypatch.setattr(pdf_text._Font, "__init__", counting_init)
+    pdf = write_text_pdf([f"p{i}" for i in range(10)])
+    opened = pdf_text.OpenedPdf(pdf)
+    assert "".join(opened.page_texts(0, 4) + opened.page_texts(4)) == pdf_to_text(pdf)[0]
+    assert len(built) == 2

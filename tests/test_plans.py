@@ -5,6 +5,8 @@ the resume anti-join."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -79,6 +81,62 @@ def test_salted_scan_stays_wide(spark, pages_path):
     pages = spark.read.parquet(pages_path)
     plan = _formatted_plan(run_extraction(pages))
     assert "Coalesce" not in plan, plan
+
+
+def _salted_corpus() -> tuple[list[tuple[str, bytes]], int]:
+    """Three giant PDFs (one with fewer page buckets than slices), a %PDF
+    junk payload and an empty page tree above a lowered salt threshold,
+    plus HTML pages and a small PDF below it: (docs, salt_min_bytes)."""
+    from ocr_service_spark.sources.pages import write_text_pdf
+
+    pad = lambda payload: payload + b"%" + b"x" * 3000 + b"\n"
+    docs = [
+        (f"https://salted.test/giant{n}.pdf",
+         write_text_pdf([f"giant {n} page {i} says hello" for i in range(n)]))
+        for n in (70, 41, 20)
+    ]
+    docs += [
+        ("https://salted.test/junk.pdf", pad(b"%PDF-1.4 not really a pdf")),
+        ("https://salted.test/empty.pdf", pad(write_text_pdf([]))),
+        ("https://salted.test/small.pdf", write_text_pdf(["below the threshold"])),
+    ]
+    docs += [
+        (f"https://salted.test/{i}.html",
+         f"<html><body><p>page {i} of the salted corpus</p></body></html>".encode())
+        for i in range(12)
+    ]
+    return docs, 2000
+
+
+def test_salted_path_matches_extract_document(spark):
+    """The salted slices reassemble to ``extract_document``'s row on the
+    fields perfbench compares, for giants, junk and an empty page tree."""
+    import sys
+    from pathlib import Path
+
+    from ocr_service_spark.extraction.pipeline import extract_document
+
+    sys.path.append(str(Path(__file__).resolve().parents[1] / "perfbench"))
+    from workloads import gate_rows
+
+    docs, salt_min_bytes = _salted_corpus()
+    assert sum(len(p) > salt_min_bytes and p[:4] == b"%PDF" for _, p in docs) == 5
+    pages = spark.createDataFrame(docs, "url string, html binary")
+    got = run_extraction(pages, salt_min_bytes=salt_min_bytes).toPandas()
+    expected = [extract_document(p, u, "NO_OCR") for u, p in docs]
+    assert gate_rows(got, expected) == (len(docs), [])
+
+
+def test_salted_branch_explodes_in_the_jvm(spark):
+    """The salted branch explodes JVM-side and deals the slices
+    round-robin: two MapInPandas nodes (single-pass, slice stage), no
+    Python explode."""
+    docs, salt_min_bytes = _salted_corpus()
+    pages = spark.createDataFrame(docs, "url string, html binary")
+    plan = _formatted_plan(run_extraction(pages, salt_min_bytes=salt_min_bytes))
+    assert re.search(r"\) Generate\nInput .*\nArguments: explode\(", plan), plan
+    assert "Arguments: RoundRobinPartitioning(" in plan, plan
+    assert len(re.findall(r"(?m)^\(\d+\) MapInPandas$", plan)) == 2, plan
 
 
 def test_dim_joins_are_broadcast(spark):

@@ -72,3 +72,17 @@ def test_diff_names_only_new_outliers():
     }
     now = {RELATIONAL: 1.5, PYTHON: 2.1, "q03": 0.25, "q04": 0.3}
     assert _tool().diff(prev, now) == [RELATIONAL]
+
+
+def test_diff_ignores_same_code_noise_above_the_line():
+    # a second sweep of identical code (PREV median 0.505 s, line 2.02 s)
+    # moved q37/q38/q90/q100 across 4x the median at 1.22-1.41x their own
+    # PREV times: within the noise band, none is named. A 3x regression
+    # over the line is.
+    noisy = {"q37": (1.90, 2.47), "q38": (1.80, 2.37), "q90": (1.61, 2.27), "q100": (1.81, 2.21)}
+    filler = {f"f{i}": 0.505 for i in range(9)}
+    prev = {"queries": {**filler, "q01": 0.7, **{q: b for q, (b, _) in noisy.items()}}}
+    now = {**filler, "q01": 0.7, **{q: a for q, (_, a) in noisy.items()}}
+    tool = _tool()
+    assert tool.diff(prev, now) == []
+    assert tool.diff(prev, {**now, "q01": 2.1}) == ["q01"]

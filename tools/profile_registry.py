@@ -33,7 +33,10 @@ One JSON report goes to stdout; progress and the diff table go to
 stderr. A query that raises is recorded under ``errors`` and the sweep
 goes on. A query is flagged when its wall time exceeds ``FLAG_RATIO``
 times the median. ``--diff`` names the queries that now exceed
-``FLAG_RATIO`` times PREV's median and that PREV did not flag: PREV's
+``FLAG_RATIO`` times PREV's median, that PREV did not flag and that are
+slower than their own PREV time by more than ``NOISE_RATIO``, the
+same-code noise band (identical code swept twice moved one query
+2.04x, and four queries near 4x the median across the line): PREV's
 median is the yardstick, so a run over a few queries can be diffed
 against a full-registry baseline (for a full sweep the two medians
 agree to within noise). Diff only against reports this tool wrote, such
@@ -62,6 +65,10 @@ from bench import CPUS, SF_DIR  # noqa: E402
 from workloads import PY_RUN, PYTHON_NODE, noop, set_phase  # noqa: E402
 
 FLAG_RATIO = 4.0
+# Same-code noise band: two sf0.01 sweeps of identical code (local[4])
+# put one query at up to 2.04x its own earlier time, so --diff names a
+# new outlier only when it is also slower than its PREV time by more.
+NOISE_RATIO = 2.04
 
 
 def measured_rep(phase: str | None) -> str | None:
@@ -123,7 +130,9 @@ def query_costs(log_dir: Path, walls: dict[str, float], reps: int) -> dict[str, 
 
 def diff(prev: dict, now: dict[str, float]) -> list[str]:
     """Print each query's wall ratio against PREV (stderr); return the
-    queries now above FLAG_RATIO x PREV's median that PREV did not flag."""
+    queries now above FLAG_RATIO x PREV's median that PREV did not flag
+    and that are slower than their own PREV time by more than
+    NOISE_RATIO (a query PREV did not time counts as slower)."""
     before = prev.get("queries", {})
     ratios = {q: now[q] / before[q] for q in now if before.get(q)}
     for q, r in sorted(ratios.items(), key=lambda kv: -kv[1]):
@@ -133,11 +142,14 @@ def diff(prev: dict, now: dict[str, float]) -> list[str]:
         print(f"ratio median {statistics.median(values):.3f} over {len(values)} queries; "
               f"min {values[0]:.3f} max {values[-1]:.3f}", file=sys.stderr)
     threshold = FLAG_RATIO * statistics.median(before.values()) if before else float("inf")
+    flagged = prev.get("flagged_over_ratio", {})
     entrants = sorted(
-        (q for q, v in now.items() if v > threshold and q not in prev.get("flagged_over_ratio", {})),
+        (q for q, v in now.items() if v > threshold and q not in flagged
+         and ratios.get(q, float("inf")) > NOISE_RATIO),
         key=lambda q: -now[q],
     )
-    print(f"new above {FLAG_RATIO:g}x PREV median: {entrants or 'none'}", file=sys.stderr)
+    print(f"new above {FLAG_RATIO:g}x PREV median and {NOISE_RATIO:g}x own PREV: "
+          f"{entrants or 'none'}", file=sys.stderr)
     return entrants
 
 

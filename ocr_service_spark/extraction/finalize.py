@@ -23,12 +23,17 @@ MULTI_WHITESPACE = re.compile(r"[ \t]+")  # converter.py:37
 MULTI_NEWLINES = re.compile(r"\n{3,}")  # converter.py:38
 
 
+def utf8_replace(text: str) -> str:
+    """Step 4: what UTF-8 cannot encode (a lone surrogate) becomes ``?``."""
+    return text.encode("utf-8", errors="replace").decode("utf-8")
+
+
 def finalize_output_text(output_text: str) -> str:
     """converter.py:58-68."""
     output_text = output_text.replace("\r\n", "\n").replace("\r", "\n")
     output_text = MULTI_WHITESPACE.sub(" ", output_text)
     output_text = MULTI_NEWLINES.sub("\n\n", output_text)
-    return output_text.encode("utf-8", errors="replace").decode("utf-8").strip()
+    return utf8_replace(output_text).strip()
 
 
 def success_and_log(text: str, allow_empty_text: bool, log_message: str = "") -> tuple[bool, str]:

@@ -9,10 +9,12 @@ hash stub:
 
 - a 5x7 dot-matrix font (original patterns, defined below) with a
   fixed 6px advance and 10px line pitch;
-- ``render_text_png`` rasterizes text in that font (via the
-  from-scratch PNG codec) — the test corpus generator;
-- ``GlyphOcrEngine`` decodes any PNG (not just ones this module
-  rendered), binarizes at mid-gray, splits ink rows into line bands,
+- ``render_text_luma`` rasterizes text in that font to a ``Raster``
+  (the OCR branch's PDF page fallback); ``render_text_png`` encodes
+  that with the from-scratch PNG codec — the test corpus generator;
+- ``GlyphOcrEngine`` takes a ``Raster`` as is or decodes any image
+  (not just ones this module rendered), then recognizes the pixels:
+  it binarizes at mid-gray, splits ink rows into line bands,
   segments glyphs on empty columns, and classifies each glyph by
   minimum Hamming distance against the font templates over the 5x7
   cell grid. Confidence per glyph = (1 - hamming/35) * 100; page
@@ -22,11 +24,13 @@ hash stub:
 On a clean render the engine is exact (distance 0, confidence 100).
 On arbitrary scanned/antialiased images it degrades gracefully: it
 still returns its best low-confidence guess, like any OCR engine on
-out-of-model input. Non-PNG inputs yield ("", 0.0) — the empty-page
-contract (reference ocr_engine.py:37).
+out-of-model input. Undecodable inputs yield ("", 0.0) — the
+empty-page contract (reference ocr_engine.py:37).
 """
 
 from __future__ import annotations
+
+from ocr_service_spark.extraction.ocr_engine import Raster
 
 # 5 columns x 7 rows; 'X' = ink. Original dot-matrix designs.
 _RAW_FONT = {
@@ -129,14 +133,12 @@ FONT: dict[str, frozenset[tuple[int, int]]] = {
 }
 
 
-def render_text_png(text: str, ink: int = 0, paper: int = 255) -> bytes:
-    """Rasterize ``text`` (multi-line) in the 5x7 font -> PNG bytes.
+def render_text_luma(text: str, ink: int = 0, paper: int = 255) -> Raster:
+    """Rasterize ``text`` (multi-line) in the 5x7 font -> its pixels.
 
     Case-exact (the font carries both cases); unknown characters render
     as blank cells.
     """
-    from ocr_service_spark.extraction.png_codec import encode_png_gray
-
     lines = text.splitlines() or [""]
     width = 2 * MARGIN + max(1, max(len(ln) for ln in lines)) * ADVANCE
     height = 2 * MARGIN + len(lines) * LINE_PITCH
@@ -150,7 +152,15 @@ def render_text_png(text: str, ink: int = 0, paper: int = 255) -> bytes:
             x0 = MARGIN + ci * ADVANCE
             for r, c in cells:
                 px[(y0 + r) * width + (x0 + c)] = ink
-    return encode_png_gray(width, height, bytes(px))
+    return Raster(width, height, bytes(px))
+
+
+def render_text_png(text: str, ink: int = 0, paper: int = 255) -> bytes:
+    """``render_text_luma`` encoded as a grayscale PNG."""
+    from ocr_service_spark.extraction.png_codec import encode_png_gray
+
+    raster = render_text_luma(text, ink, paper)
+    return encode_png_gray(raster.width, raster.height, raster.luma)
 
 
 def _line_bands(ink_rows: list[bool]) -> list[tuple[int, int]]:
@@ -226,15 +236,20 @@ class GlyphOcrEngine:
     """Real pixel-level OCR for the 5x7 dot-matrix font (see module
     docstring). Satisfies the OcrEngine protocol."""
 
-    def recognize(self, image_bytes: bytes) -> tuple[str, float]:
+    def recognize(self, image: bytes | Raster) -> tuple[str, float]:
+        if isinstance(image, Raster):
+            return self._recognize_luma(image.width, image.height, image.luma)
         from ocr_service_spark.extraction.image_codecs import decode_image_luma
 
-        decoded = decode_image_luma(image_bytes)
+        decoded = decode_image_luma(image)
         if decoded is None:
             # undecodable input: the empty-page contract (reference
             # ocr_engine.py:37 — denominator max(len,1) -> 0.0)
             return "", 0.0
-        width, height, luma = decoded
+        return self._recognize_luma(*decoded)
+
+    def _recognize_luma(self, width: int, height: int, luma: bytes) -> tuple[str, float]:
+        """Recognition on decoded row-major 8-bit grayscale pixels."""
         ink = [luma[i] < 128 for i in range(width * height)]
         row_has = [any(ink[y * width : (y + 1) * width]) for y in range(height)]
 

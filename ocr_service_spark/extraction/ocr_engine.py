@@ -21,12 +21,24 @@ the *engine contract* real, and stubs only the recognition call:
 Engine instances are executor singletons: created once per Python
 worker and reused across Arrow batches (the reference re-creates the
 tesseract API per image, a known inefficiency noted in SURVEY §4).
+
+Rasterizer contract: ``open_pdf_for_raster`` parses a PDF once and
+``rasterize_pdf_page`` renders page ``k`` of that open document to a
+``Raster`` — decoded 8-bit grayscale pixels, handed to
+``OcrEngine.recognize`` as they are. No page is encoded to an image
+format and decoded again between the two, as the reference hands
+pdfium's PIL image straight to tesseract (converter.py:135-181,
+ocr_engine.py:30-41). ``recognize`` still takes encoded image bytes
+too: scans and the page-level OCR operator (operators/ocr.py) carry
+PNG/JPEG/... payloads.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Protocol
+from typing import Any, NamedTuple, Protocol
+
+from ocr_service_spark.extraction.pdf_text import OpenedPdf, PdfError
 
 # Reference-pinned config (reference file:line in module docstring)
 OCR_LANGUAGE = "eng"
@@ -36,17 +48,29 @@ OCR_PAGE_TIMEOUT_S = 30
 OMP_THREAD_LIMIT = "1"
 
 
+class Raster(NamedTuple):
+    """One decoded page: ``width * height`` bytes of row-major 8-bit
+    grayscale (0 ink, 255 paper)."""
+
+    width: int
+    height: int
+    luma: bytes
+
+
 class OcrEngine(Protocol):
-    def recognize(self, image_bytes: bytes) -> tuple[str, float]:
-        """image bytes -> (utf-8 text, mean word confidence 0..100)."""
+    def recognize(self, image: bytes | Raster) -> tuple[str, float]:
+        """encoded image bytes or a ``Raster`` -> (utf-8 text, mean word
+        confidence 0..100)."""
         ...
 
 
 class StubOcrEngine:
     """Deterministic stand-in (NOT real OCR — clearly marked stub)."""
 
-    def recognize(self, image_bytes: bytes) -> tuple[str, float]:
-        digest = hashlib.sha256(image_bytes).hexdigest()
+    def recognize(self, image: bytes | Raster) -> tuple[str, float]:
+        if isinstance(image, Raster):
+            image = b"%dx%d:" % image[:2] + image.luma
+        digest = hashlib.sha256(image).hexdigest()
         words = [f"w{digest[i : i + 4]}" for i in range(0, 16, 4)]
         confidence = 50.0 + (int(digest[:4], 16) % 5000) / 100.0
         return " ".join(words), confidence
@@ -92,20 +116,23 @@ class TesseractEngine:
             kwargs["path"] = tessdata
         return PyTessBaseAPI(**kwargs)
 
-    def _recognize_sync(self, image_bytes: bytes) -> tuple[str, float]:
+    def _recognize_sync(self, image: bytes | Raster) -> tuple[str, float]:
         from io import BytesIO
 
         from PIL import Image  # noqa: PLC0415
 
-        with Image.open(BytesIO(image_bytes)) as img:
-            self._api.SetImage(img.copy())
+        if isinstance(image, Raster):
+            self._api.SetImage(Image.frombytes("L", (image.width, image.height), image.luma))
+        else:
+            with Image.open(BytesIO(image)) as img:
+                self._api.SetImage(img.copy())
         text = self._api.GetUTF8Text()
         confidences = self._api.AllWordConfidences()
         # reference: empty page -> denominator 1 -> 0.0 (ocr_engine.py:37)
         mean_conf = sum(confidences) / max(len(confidences), 1)
         return text, float(mean_conf)
 
-    def recognize(self, image_bytes: bytes) -> tuple[str, float]:
+    def recognize(self, image: bytes | Raster) -> tuple[str, float]:
         # raises concurrent.futures.TimeoutError past the pinned page
         # budget, like the reference's result.get(timeout=...) — the
         # document-level swallow turns it into the empty failure row.
@@ -116,7 +143,7 @@ class TesseractEngine:
         # a fresh single-use API per worker is the thread analog).
         from concurrent.futures import TimeoutError as FuturesTimeout  # noqa: PLC0415
 
-        fut = self._pool.submit(self._recognize_sync, image_bytes)
+        fut = self._pool.submit(self._recognize_sync, image)
         try:
             return fut.result(timeout=OCR_PAGE_TIMEOUT_S)
         except (TimeoutError, FuturesTimeout):  # separate classes on <=3.10
@@ -158,8 +185,9 @@ def get_engine() -> OcrEngine:
     batches in a reused Python worker).
 
     Engine ladder: tesseract when the executor image ships it, else the
-    from-scratch glyph-matching engine (extraction/glyph_ocr.py — real
-    PNG decode + template recognition, always constructible). The hash
+    from-scratch glyph-matching engine (extraction/glyph_ocr.py — pixel
+    recognition on a ``Raster`` or a decoded image, always
+    constructible). The hash
     stub remains available for tests that need schema-only plumbing.
     """
     global _ENGINE
@@ -177,8 +205,26 @@ def get_engine() -> OcrEngine:
     return _ENGINE
 
 
-def rasterize_pdf_page(pdf_bytes: bytes, page_no: int) -> bytes:
-    """PDF page -> PNG bytes.
+def open_pdf_for_raster(pdf_bytes: bytes) -> tuple[Any, int]:
+    """Parse a PDF once for ``rasterize_pdf_page``: (document, page
+    count). The document is a pdfium ``PdfDocument`` when pdfium is on
+    the executor image (the reference's per-worker document,
+    converter.py:121-133), else an ``OpenedPdf``. Raises when the bytes
+    do not open or the page tree is empty."""
+    try:
+        import pypdfium2 as pdfium  # noqa: PLC0415
+    except ImportError:
+        opened = OpenedPdf(pdf_bytes)
+        return opened, opened.page_count
+    doc = pdfium.PdfDocument(pdf_bytes)  # pragma: no cover
+    if not len(doc):
+        raise PdfError("no pages")
+    return doc, len(doc)
+
+
+def rasterize_pdf_page(doc: Any, page_no: int) -> Raster:
+    """Page ``page_no`` of a document from ``open_pdf_for_raster`` ->
+    its pixels.
 
     With pdfium on the executor image this is a geometric render at the
     pinned DPI/grayscale settings (reference converter.py:139-150).
@@ -186,16 +232,13 @@ def rasterize_pdf_page(pdf_bytes: bytes, page_no: int) -> bytes:
     in the glyph engine's font (extraction/glyph_ocr.py) — layout-free
     but pixel-real, so the OCR tier's full loop (parse -> rasterize ->
     binarize -> segment -> recognize -> ordered concat) runs on actual
-    images in any environment, and recognized text round-trips the text
+    pixels in any environment, and recognized text round-trips the text
     layer byte-exactly for in-font characters.
     """
-    try:
-        import pypdfium2 as pdfium  # noqa: PLC0415
-    except ImportError:
-        from ocr_service_spark.extraction.glyph_ocr import render_text_png
-        from ocr_service_spark.extraction.pdf_text import pdf_page_texts
+    if isinstance(doc, OpenedPdf):
+        from ocr_service_spark.extraction.glyph_ocr import render_text_luma
 
-        (text,) = pdf_page_texts(pdf_bytes, page_no, page_no + 1)
+        (text,) = doc.page_texts(page_no, page_no + 1)
         # wrap like a physical page would (A4 at this glyph pitch);
         # keeps the raster compact for arbitrarily long text runs
         wrapped: list[str] = []
@@ -204,18 +247,12 @@ def rasterize_pdf_page(pdf_bytes: bytes, page_no: int) -> bytes:
                 wrapped.append(line[:96])
                 line = line[96:]
             wrapped.append(line)
-        return render_text_png("\n".join(wrapped))
-    doc = pdfium.PdfDocument(pdf_bytes)  # pragma: no cover
-    page = doc.get_page(page_no)
-    bitmap = page.render(
+        return render_text_luma("\n".join(wrapped))
+    image = doc[page_no].render(  # pragma: no cover
         scale=OCR_DPI / 72,
         grayscale=OCR_GRAYSCALE,
         no_smoothtext=True,
         no_smoothimage=True,
         no_smoothpath=True,
-    )
-    from io import BytesIO
-
-    buf = BytesIO()
-    bitmap.to_pil().save(buf, format="PNG")
-    return buf.getvalue()
+    ).to_pil()
+    return Raster(image.width, image.height, image.tobytes())

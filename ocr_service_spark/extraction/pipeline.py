@@ -256,34 +256,34 @@ def _process(stream: bytes, url: str, mode: str = "NO_OCR") -> tuple[str, dict[s
                         stream, cls, meta, reason="converted_pdf_handling_failed"
                     )
         else:
-            # OCR mode: rasterize -> recognize per page; rasterizer
-            # failure is swallowed exactly like _preprocess_pdf_to_img
+            # OCR mode: one open of the PDF gives the page count and
+            # every page; each page goes to the engine as decoded pixels
+            # (a Raster), never through an image encoding. A failed
+            # open, an empty page tree or a failure on any page is
+            # swallowed exactly like _preprocess_pdf_to_img
             # (converter.py:213-225): empty page set, no pages metadata
             images_present = False
             try:
                 from ocr_service_spark.extraction.ocr_engine import (
                     get_engine,
+                    open_pdf_for_raster,
                     rasterize_pdf_page,
                 )
-                from ocr_service_spark.extraction.pdf_text import pdf_page_count
 
-                n_pages = pdf_page_count(pdf_stream)
+                doc, n_pages = open_pdf_for_raster(pdf_stream)
                 engine = get_engine()
                 texts, confs = [], []
                 for page_no in range(n_pages):
-                    png = rasterize_pdf_page(pdf_stream, page_no)
-                    text, conf = engine.recognize(png)
+                    text, conf = engine.recognize(rasterize_pdf_page(doc, page_no))
                     texts.append(text)
                     confs.append(conf)
-                images_present = n_pages > 0
+                images_present = True
                 output_text = "".join(texts)  # submission order (ocr_engine.py:67)
-                if images_present:
-                    # reference: pages metadata comes from image_count
-                    # (ocr_engine.py:80) — a rasterizer that produced no
-                    # images leaves the key unset (converter.py:213-225)
-                    meta["pages"] = n_pages
-                if confs:
-                    meta["confidence"] = round(sum(confs) / len(confs), 4)
+                # reference: pages metadata comes from image_count
+                # (ocr_engine.py:80) — a rasterizer that produced no
+                # images leaves the key unset (converter.py:213-225)
+                meta["pages"] = n_pages
+                meta["confidence"] = round(sum(confs) / len(confs), 4)
             except Exception:
                 pass
             if text_fallback_allowed and not output_text and not images_present:

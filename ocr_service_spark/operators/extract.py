@@ -40,6 +40,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ocr_service_spark.extraction.finalize import utf8_replace
 from ocr_service_spark.extraction.pdf_text import OpenedPdf
 from ocr_service_spark.extraction.pipeline import extract_document
 from ocr_service_spark.plans.parallelism import fan_out_width
@@ -198,7 +199,11 @@ def _bucket_texts(batches: Iterator[pd.DataFrame], bucket_pages: int) -> Iterato
                 start = n_buckets * j // n * bucket_pages
                 stop = n_buckets * (j + 1) // n * bucket_pages
                 try:
-                    txt = "".join(opened.page_texts(start, stop))
+                    # finalize_output_text's UTF-8 replace, here so a lone
+                    # surrogate (a ToUnicode bfrange into D800-DFFF) never
+                    # reaches Arrow; it is per character, so per slice it
+                    # equals the replace on the reassembled text
+                    txt = utf8_replace("".join(opened.page_texts(start, stop)))
                 except Exception:
                     error = True
             out["url"].append(url)

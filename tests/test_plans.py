@@ -127,6 +127,23 @@ def test_salted_path_matches_extract_document(spark):
     assert gate_rows(got, expected) == (len(docs), [])
 
 
+def test_salted_lone_surrogate_matches_extract_document(spark):
+    """A ToUnicode bfrange into D800-DFFF decodes to a lone surrogate:
+    the salted row gets ``extract_document``'s UTF-8 replace, not an
+    Arrow encode failure in the slice stage."""
+    from ocr_service_spark.extraction.pipeline import extract_document
+    from ocr_service_spark.sources.pages import pdf_stream, write_text_pdf
+
+    cmap = b"begincmap\n1 beginbfrange\n<41> <41> <D800>\nendbfrange\nendcmap"
+    font = b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /ToUnicode 8 0 R >>"
+    pdf = write_text_pdf(["ABC", "xyz"], font=font, extra_objs=(pdf_stream(cmap),))
+    pages = spark.createDataFrame([("u.pdf", pdf)], "url string, html binary")
+    (row,) = run_extraction(pages, salt_min_bytes=10).collect()
+    want = extract_document(pdf, "u.pdf", "NO_OCR")
+    assert want["extracted_text"] == "?BCxyz"
+    assert (row["extracted_text"], row["pages"], row["success"]) == ("?BCxyz", 2, True)
+
+
 def test_salted_branch_explodes_in_the_jvm(spark):
     """The salted branch explodes JVM-side and deals the slices
     round-robin: two MapInPandas nodes (single-pass, slice stage), no

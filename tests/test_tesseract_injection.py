@@ -1,7 +1,9 @@
 """Prove the tesseract production rung of the engine ladder by
 injection: a fake ``tesserocr``/``PIL`` pair (shipped to executors via
 addPyFile) drives ocr_engine.TesseractEngine end-to-end through
-ocr_pages/run_ocr_pages, pinning the reference's config pass-through —
+ocr_pages/run_ocr_pages and the OCR-mode PDF branch (a ``Raster`` page
+becomes an ``Image.frombytes("L", ...)`` of its size and pixels),
+pinning the reference's config pass-through —
 lang (settings.py:33), TESSDATA_PREFIX path (settings.py:31/169,
 ocr_engine.py:26), OMP_THREAD_LIMIT=1 (docker-compose.base.yml:35),
 the 30 s per-page timeout (settings.py:32, ocr_engine.py:66), the
@@ -60,8 +62,10 @@ class PyTessBaseAPI:
 
 FAKE_PIL_IMAGE = '''
 class _Img:
-    def __init__(self, data):
+    def __init__(self, data, mode=None, size=None):
         self.data = data
+        self.mode = mode
+        self.size = size
 
     def copy(self):
         return self
@@ -75,6 +79,10 @@ class _Img:
 
 def open(fp):
     return _Img(fp.read())
+
+
+def frombytes(mode, size, data):
+    return _Img(bytes(data), mode, size)
 '''
 
 DRIVER = '''
@@ -114,6 +122,28 @@ assert os.environ["OMP_THREAD_LIMIT"] == "1"
 text, conf = eng.recognize(b"EMPTYPAGE")
 assert conf == 0.0, conf
 assert "lang=eng" in text and "path=/fake/tessdata" in text and "omp=1" in text, text
+
+# --- decoded pages: a Raster becomes an "L" image of its size/pixels ---
+raster = ocr_engine.Raster(3, 2, bytes([0, 50, 100, 150, 200, 250]))
+text, conf = eng.recognize(raster)
+img = eng._api._img
+assert (img.mode, img.size, img.data) == ("L", (3, 2), raster.luma), vars(img)
+assert text.endswith(hashlib.sha256(raster.luma).hexdigest()[:8] + "\\n"), text
+
+# --- OCR-mode PDF: one open, every page as a Raster ---
+from ocr_service_spark.extraction.pdf_text import OpenedPdf
+from ocr_service_spark.extraction.pipeline import extract_document
+from ocr_service_spark.sources.pages import write_text_pdf
+
+pdf = write_text_pdf(["FIRST", "SECOND"])
+opened = OpenedPdf(pdf)
+lumas = [ocr_engine.rasterize_pdf_page(opened, k).luma for k in range(2)]
+row = extract_document(pdf, "u.pdf", "OCR")
+assert row["pages"] == 2 and row["confidence"] == 91.0, row
+assert row["extracted_text"] == "\\n".join(
+    "[lang=eng|path=/fake/tessdata|omp=1]%s" % hashlib.sha256(luma).hexdigest()[:8]
+    for luma in lumas
+), row
 
 # --- per-page timeout (settings.py:32) ---
 ocr_engine.OCR_PAGE_TIMEOUT_S = 0.3

@@ -23,6 +23,12 @@ from ocr_service_spark.extraction import sniff
 from ocr_service_spark.extraction.sniff import DOCUMENT_EXTS, IMAGE_EXTS, FileType
 
 
+# extensions at which a payload that fails its own branch falls back to
+# the office-zip/raw text (converter.py:469); the salted router keeps
+# these urls single-pass
+OFFICE_ZIP_FALLBACK_EXTS = ("docx", "odt")
+
+
 @dataclass(frozen=True)
 class Classification:
     doc_class: str  # encrypted_office|pdf|xml|html|rtf|office|epub|image|media|plain|unknown
@@ -41,7 +47,7 @@ class Classification:
     @property
     def has_office_zip_fallback(self) -> bool:
         """converter.py:469."""
-        return self.ext in ("docx", "odt")
+        return self.ext in OFFICE_ZIP_FALLBACK_EXTS
 
     @property
     def has_office_text_fallback(self) -> bool:

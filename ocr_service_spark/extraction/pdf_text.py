@@ -806,8 +806,19 @@ def _parse_tounicode(cmap: bytes) -> dict[int, str]:
         ):
             lo_i, hi_i = int(lo, 16), int(hi, 16)
             base = int(dst, 16)
+            if len(dst) <= 4:
+                for k in range(hi_i - lo_i + 1):
+                    out[lo_i + k] = chr(base + k)
+                continue
+            # a multi-unit destination (a surrogate pair, a ligature):
+            # the code k past lo gets the destination plus k as one
+            # big-endian number, decoded like a bfchar. Past a last byte
+            # of xxFF that carries into the earlier bytes; PDF 32000
+            # §9.10.3 bounds a range so that its last byte never wraps.
+            width = -(-len(dst) // 2)
+            mask = (1 << 8 * width) - 1
             for k in range(hi_i - lo_i + 1):
-                out[lo_i + k] = chr(base + k)
+                out[lo_i + k] = hex_to_str(((base + k) & mask).to_bytes(width, "big").hex())
         for lo, arr in re.findall(r"<([0-9A-Fa-f]+)>\s*<[0-9A-Fa-f]+>\s*\[(.*?)\]", body, re.S):
             lo_i = int(lo, 16)
             for k, dm in enumerate(re.findall(r"<([0-9A-Fa-f]+)>", arr)):

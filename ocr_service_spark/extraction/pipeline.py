@@ -19,6 +19,8 @@ lifecycle as a pure function.
 
 The function is Spark-agnostic: the mapInPandas operator in
 ``operators/extract.py`` calls it per payload inside Arrow batches.
+Its response half, ``result_row``, is the one place a results row is
+built; the salted big-PDF re-agg builds its rows through it too.
 """
 
 from __future__ import annotations
@@ -35,22 +37,6 @@ from ocr_service_spark.extraction.finalize import finalize_output_text, success_
 from ocr_service_spark.extraction.pdf_text import pdf_to_text
 from ocr_service_spark.extraction.transfer import decode_transfer_encoding
 from ocr_service_spark.extraction.xml_text import xml_iter_text
-
-# Metadata keys promoted to typed result columns; the rest stay in the
-# map<string,string> tail (FIXTURES.md A2).
-RESULT_FIELDS = (
-    "url",
-    "extracted_text",
-    "content_type",
-    "pages",
-    "confidence",
-    "success",
-    "ocr_skipped",
-    "fallback_reason",
-    "doc_class",
-    "metadata",
-)
-
 
 def _apply_text_fallback(
     stream: bytes, cls: Classification, meta: dict[str, Any], reason: str
@@ -320,6 +306,14 @@ def extract_document(
             # processor.py:93-96 — swallowed, best-effort empty output
             output_text, meta = "", {}
 
+    return result_row(url, output_text, meta)
+
+
+def result_row(url: str, output_text: str, meta: dict[str, Any]) -> dict[str, Any]:
+    """Finalized text + ``_process`` metadata -> one results-table row
+    (utils/utils.py:154-197): the typed columns are promoted out of
+    ``meta`` and the rest stays in the map<string,string> tail
+    (FIXTURES.md A2). ``meta`` is consumed."""
     ocr_skipped = bool(meta.get("ocr_skipped"))
     # Reference nuance: for empty/None streams HTTP status is 200 but
     # build_response(success) is still driven by allow_empty_text=ocr_skipped

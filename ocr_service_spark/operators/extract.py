@@ -12,13 +12,14 @@ Three operators compose the extraction job (plans/job.py):
   per row. A task parses a document once per consecutive run of its
   rows (``pdf_text.OpenedPdf``) and learns the page count there; the
   page interpreter handles each shown string as one glyph run (see
-  ``pdf_text``). ``reassemble_pdf_results`` then re-aggregates with an
-  ordered concat (array_sort over (bucket, txt) structs) — deterministic
-  page order, unlike the reference's ``imap_unordered`` pool
-  (converter.py:170-175).
+  ``pdf_text``). ``reassemble_pdf_results`` then re-aggregates each
+  document in one grouped Python step: an ordered concat by slice index
+  — deterministic page order, unlike the reference's ``imap_unordered``
+  pool (converter.py:170-175) — and the row from
+  ``pipeline.result_row``, the same code as the single-pass row.
 
-Everything stays JVM-side except the extraction itself, which is
-Arrow-batched (no per-row Python round trips).
+Everything stays JVM-side except the extraction itself and the
+re-agg's row, which are Arrow-batched (no per-row Python round trips).
 """
 
 from __future__ import annotations
@@ -40,9 +41,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ocr_service_spark.extraction.finalize import utf8_replace
+from ocr_service_spark.extraction.finalize import finalize_output_text, utf8_replace
 from ocr_service_spark.extraction.pdf_text import OpenedPdf
-from ocr_service_spark.extraction.pipeline import extract_document
+from ocr_service_spark.extraction.pipeline import extract_document, result_row
 from ocr_service_spark.plans.parallelism import fan_out_width
 
 RESULT_SCHEMA = StructType(
@@ -76,32 +77,35 @@ BUCKET_PAGES = 16
 MAX_SLICES = 4
 # slice-stage output: raw (unfinalized) text per slice, ``bucket`` being
 # the slice index (slices are consecutive page ranges, so slice order is
-# page order); page_count -1 when the document does not open
-_BUCKET_TEXT_SCHEMA = "url string, bucket int, page_count int, txt string, error boolean"
-
-
-_RESULT_COLS = (
-    "url",
-    "extracted_text",
-    "content_type",
-    "pages",
-    "confidence",
-    "success",
-    "ocr_skipped",
-    "fallback_reason",
-    "doc_class",
-    "elapsed_ms",
-    "metadata",
-    "footer",
+# page order); page_count -1 when the document does not open, footer
+# the echoed envelope footer, nbytes the payload's size and ms the
+# slice's extraction time
+_BUCKET_TEXT_SCHEMA = (
+    "url string, bucket int, page_count int, txt string, error boolean,"
+    " footer map<string,string>, nbytes bigint, ms double"
 )
 
 
 def _result_frame(rows: list[dict]) -> pd.DataFrame:
     # columnar construction: pandas from list-of-dicts walks every cell
     # through per-row inference — measurably slower in the hot path
-    frame = pd.DataFrame({c: [r.get(c) for r in rows] for c in _RESULT_COLS})
+    frame = pd.DataFrame({c: [r.get(c) for r in rows] for c in RESULT_SCHEMA.fieldNames()})
     frame["pages"] = frame["pages"].astype("Int32")
     return frame
+
+
+def _stamp(row: dict, footer, nbytes: int, elapsed_ms: float, metrics) -> dict:
+    """The per-document tail of both paths: latency, the echoed footer
+    and the ``metrics`` accumulators."""
+    row["elapsed_ms"] = round(elapsed_ms, 3)
+    row["footer"] = footer  # echoed verbatim per the reference
+    if metrics is not None:
+        metrics.docs.add(1)
+        metrics.bytes_in.add(nbytes)
+        metrics.wall_ms.add(elapsed_ms)
+        if not row["extracted_text"]:
+            metrics.empty_text.add(1)
+    return row
 
 
 def extract_documents(
@@ -126,15 +130,8 @@ def extract_documents(
                     None if payload is None else bytes(payload), url, mode
                 )
                 elapsed = (time.perf_counter() - start) * 1e3
-                row["elapsed_ms"] = round(elapsed, 3)
-                row["footer"] = footer  # echoed verbatim per the reference
-                rows.append(row)
-                if metrics is not None:
-                    metrics.docs.add(1)
-                    metrics.bytes_in.add(0 if payload is None else len(payload))
-                    metrics.wall_ms.add(elapsed)
-                    if not row["extracted_text"]:
-                        metrics.empty_text.add(1)
+                nbytes = 0 if payload is None else len(payload)
+                rows.append(_stamp(row, footer, nbytes, elapsed, metrics))
             yield _result_frame(rows)
 
     cols = ["url", F.col(payload_col).alias("payload")]
@@ -153,19 +150,26 @@ def explode_pdf_buckets(
     big_pdfs: DataFrame, payload_col: str = "html", bucket_pages: int = BUCKET_PAGES
 ) -> DataFrame:
     """The salted explode: each big PDF becomes ``n`` rows (url, slice,
-    n_slices, payload), ``n = min(fan-out width, MAX_SLICES)``.
+    n_slices, payload, footer), ``n = min(fan-out width, MAX_SLICES)``.
 
     Pure Column logic, so it runs JVM-side in the scan stage; no page
     count is parsed here. The payload is copied once per slice, and the
     slice stage cuts the page buckets of ``bucket_pages`` pages (the
     parameter only keeps the signature) into ``n`` consecutive ranges.
+    The ``footer`` column (null when the pages table has none) rides
+    along for the re-agg to echo.
     """
     n = min(fan_out_width(big_pdfs.sparkSession), MAX_SLICES)
+    if "footer" in big_pdfs.columns:
+        footer = F.col("footer")
+    else:
+        footer = F.lit(None).cast("map<string,string>").alias("footer")
     return big_pdfs.select(
         "url",
         F.explode(F.sequence(F.lit(0), F.lit(n - 1))).alias("slice"),
         F.lit(n).alias("n_slices"),
         F.col(payload_col).alias("payload"),
+        footer,
     )
 
 
@@ -180,10 +184,14 @@ def _bucket_texts(batches: Iterator[pd.DataFrame], bucket_pages: int) -> Iterato
             "page_count": [],
             "txt": [],
             "error": [],
+            "footer": list(batch["footer"]),
+            "nbytes": [],
+            "ms": [],
         }
         for url, j, n, payload in zip(
             batch["url"], batch["slice"], batch["n_slices"], batch["payload"]
         ):
+            t0 = time.perf_counter()
             if url != open_url:
                 open_url = url
                 try:
@@ -211,6 +219,8 @@ def _bucket_texts(batches: Iterator[pd.DataFrame], bucket_pages: int) -> Iterato
             out["page_count"].append(page_count)
             out["txt"].append(txt)
             out["error"].append(error)
+            out["nbytes"].append(len(payload))
+            out["ms"].append((time.perf_counter() - t0) * 1e3)
         frame = pd.DataFrame(out)
         frame["bucket"] = frame["bucket"].astype("int32")
         frame["page_count"] = frame["page_count"].astype("int32")
@@ -227,7 +237,9 @@ def extract_pdf_buckets(buckets: DataFrame, bucket_pages: int = BUCKET_PAGES) ->
     The open also gives the page count, so slice ``j`` of ``n`` learns
     its buckets there; a slice left without buckets (a document of
     fewer buckets than slices) does no page work. No sort is added, so
-    a task holds one slice's payload at a time.
+    a task holds one slice's payload at a time. Each row carries the
+    payload's byte size and the slice's extraction milliseconds (its
+    share of the open included) for the re-agg's row and accumulators.
 
     ``plans/job.py`` deals the slice rows round-robin, so one giant's
     slices land on distinct tasks and each slice pays one parse.
@@ -237,63 +249,37 @@ def extract_pdf_buckets(buckets: DataFrame, bucket_pages: int = BUCKET_PAGES) ->
     )
 
 
-def reassemble_pdf_results(bucket_texts: DataFrame) -> DataFrame:
-    """Ordered re-agg: page-order concat, then finalize + result columns.
+def reassemble_pdf_results(bucket_texts: DataFrame, metrics=None) -> DataFrame:
+    """Ordered re-agg: one grouped Python step per document that joins
+    its slice texts in slice order and builds the row with
+    ``pipeline.result_row``, the row code of ``extract_document``.
 
-    ``array_sort(collect_list(struct(bucket, txt)))`` sorts by bucket,
-    the slice index (struct ordering is field order), so the
-    concatenation is deterministic page order — the explicit fix for the
-    reference's completion-order quirk (SURVEY.md §2.3 C4). Any slice
-    error reproduces the reference's swallowed-exception empty result.
+    Sorting by ``bucket``, the slice index, makes the concatenation
+    deterministic page order — the explicit fix for the reference's
+    completion-order quirk (SURVEY.md §2.3 C4). Any slice error
+    reproduces the reference's swallowed-exception empty result.
+    ``metrics`` counts each document as ``extract_documents`` does.
     """
-    @F.pandas_udf(StringType())
-    def finalize_udf(raw: pd.Series) -> pd.Series:
-        from ocr_service_spark.extraction.finalize import finalize_output_text
 
-        return raw.map(finalize_output_text)
+    def assemble(key: tuple[str], slices: pd.DataFrame) -> pd.DataFrame:
+        start = time.perf_counter()
+        (url,) = key
+        slices = slices.sort_values("bucket")
+        if slices["error"].any():
+            row = result_row(url, "", {})
+        else:
+            # the router passes only %PDF payloads, which ``classify``
+            # calls pdf: extract_document's pdf branch with these values
+            # (no text fallback: the router keeps .docx/.odt urls out)
+            meta = {
+                "content-type": "application/pdf",
+                "doc_class": "pdf",
+                "pages": int(slices["page_count"].iloc[0]),
+            }
+            row = result_row(url, finalize_output_text("".join(slices["txt"])), meta)
+        footer = slices["footer"].iloc[0]
+        elapsed = slices["ms"].sum() + (time.perf_counter() - start) * 1e3
+        nbytes = int(slices["nbytes"].iloc[0])
+        return _result_frame([_stamp(row, footer, nbytes, float(elapsed), metrics)])
 
-    agg = bucket_texts.groupBy("url").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("bucket", "txt"))),
-                lambda s: s["txt"],
-            ),
-            "",
-        ).alias("raw_text"),
-        F.max("page_count").alias("page_count"),
-        F.max("error").alias("error"),
-    )
-    text = F.when(F.col("error"), F.lit("")).otherwise(finalize_udf(F.col("raw_text")))
-    meta_ok = F.create_map(
-        F.lit("log_message"),
-        F.when(F.length("extracted_text") > 0, F.lit("")).otherwise(
-            F.lit("No text has been generated.")
-        ),
-    )
-    meta_err = F.create_map(
-        F.lit("log_message"), F.lit("No text has been generated.")
-    )
-    return (
-        agg.withColumn("extracted_text", text)
-        .select(
-            "url",
-            "extracted_text",
-            F.when(F.col("error"), F.lit(None).cast("string"))
-            .otherwise(F.lit("application/pdf"))
-            .alias("content_type"),
-            F.when(F.col("error"), F.lit(None).cast("int"))
-            .otherwise(F.col("page_count"))
-            .alias("pages"),
-            F.lit(None).cast("double").alias("confidence"),
-            (F.length("extracted_text") > 0).alias("success"),
-            F.lit(False).alias("ocr_skipped"),
-            F.lit(None).cast("string").alias("fallback_reason"),
-            F.when(F.col("error"), F.lit(None).cast("string"))
-            .otherwise(F.lit("pdf"))
-            .alias("doc_class"),
-            F.lit(None).cast("double").alias("elapsed_ms"),
-            F.when(F.col("error"), meta_err).otherwise(meta_ok).alias("metadata"),
-            # the salted path serves raw pages tables (no ingest envelope)
-            F.lit(None).cast("map<string,string>").alias("footer"),
-        )
-    )
+    return bucket_texts.groupBy("url").applyInPandas(assemble, RESULT_SCHEMA)

@@ -6,17 +6,19 @@ exercised identically on local[N]:
 1. **Scan** the pages table with column pruning (url + payload only
    reach the extraction stage; Catalyst prunes the rest).
 2. **Route** declaratively: payloads that are big AND carry the PDF
-   magic take the salted page-range path; everything else takes the
-   single-pass path. The predicate is pure Column logic, evaluated
-   JVM-side at the scan.
+   magic, at a url without ``.docx``/``.odt``, take the salted
+   page-range path; everything else takes the single-pass path. The
+   predicate is pure Column logic, evaluated JVM-side at the scan.
 3. **Size-skew repartition**: the single-pass branch repartitions by a
    hash of (url) after filtering; Arrow batches are bounded so one
    task never holds too many big payloads (AQE handles residual skew).
 4. **Salted branch**: explode (url, page slice) JVM-side in the scan
    stage -> round-robin fan-out -> per-slice extraction (one parse per
-   slice, which also counts the pages) -> ordered re-agg (array_sort
-   concat) — the north rule's "salting on (url, page_range) with
-   explode/re-agg ordered concat", at one payload copy per slice.
+   slice, which also counts the pages) -> ordered re-agg (one grouped
+   Python step per document: slice-order concat, then the row from
+   ``pipeline.result_row``) — the north rule's "salting on
+   (url, page_range) with explode/re-agg ordered concat", at one
+   payload copy per slice.
 5. **Union** both branches (unionByName) into the results schema.
 
 Checkpoint/lineage (resume_*) lives in plans/manifest.py.
@@ -27,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ocr_service_spark.extraction.classify import OFFICE_ZIP_FALLBACK_EXTS
 from ocr_service_spark.operators.extract import (
     BUCKET_PAGES,
     explode_pdf_buckets,
@@ -56,14 +59,25 @@ def is_big_pdf(
     PushedFilters and the salted scan skips every row group whose max
     size is under the threshold — at 100 TB that turns the second scan
     from a full read into a touch of the rare big-document row groups.
+
+    A url with an ``OFFICE_ZIP_FALLBACK_EXTS`` extension (``.docx``,
+    ``.odt``) stays single-pass: there ``extract_document`` falls back
+    to the office/raw text when the PDF fails or yields no text, which
+    the salted path cannot. ``classify.url_extension``'s extension is a
+    substring of the lowered url, so this keeps out every such document
+    and the salted row equals ``extract_document``'s.
     """
     col = F.col(payload_col)
     size = F.col(size_col) if size_col else F.octet_length(col)
-    return (
+    url = F.lower(F.col("url"))
+    pred = (
         col.isNotNull()
         & (size > F.lit(salt_min_bytes))
         & (F.substring(col, 1, 4) == F.lit(PDF_MAGIC))
     )
+    for ext in OFFICE_ZIP_FALLBACK_EXTS:
+        pred &= ~url.contains(f".{ext}")
+    return pred
 
 
 def run_extraction(
@@ -123,6 +137,6 @@ def run_extraction(
     # the parquet scan (coalesce() is an opaque wrapper the optimizer
     # will not decompose)
     slices = fan_out(explode_pdf_buckets(pages.filter(big), payload_col, bucket_pages))
-    salted_results = reassemble_pdf_results(extract_pdf_buckets(slices, bucket_pages))
+    salted_results = reassemble_pdf_results(extract_pdf_buckets(slices, bucket_pages), metrics)
 
     return normal_results.unionByName(salted_results)

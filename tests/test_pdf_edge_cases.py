@@ -147,6 +147,11 @@ def _kernel_case(name: str) -> bytes:
             font=font,
             extra_objs=(pdf_stream(_TO_UNICODE),),
         )
+    if name in ("tounicode_bfrange_surrogate_pair", "tounicode_bfrange_ligature"):
+        dst = b"<41> <42> <D83DDE00>" if name.endswith("pair") else b"<41> <41> <00660069>"
+        cmap = b"begincmap\n1 beginbfrange\n" + dst + b"\nendbfrange\nendcmap"
+        font = b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /ToUnicode 6 0 R >>"
+        return write_text_pdf(["ABC"], font=font, extra_objs=(pdf_stream(cmap),))
     if name == "tj_kerning":
         return write_text_pdf(
             [
@@ -188,6 +193,10 @@ _KERNEL_GOLDENS = {
     "spacing_operators": "a bc de fg h i\r\nj k\r\nlm\r\nn",
     "empty_show": "ab cd ef\r\ng",
     "literal_string_escapes": "a(b(c)d)e AA0\x07+x \\ ( q line continued \n\t.",
+    # a bfrange destination of two UTF-16 units is incremented per code
+    # (PDF 32000 §9.10.3), so B maps to the next emoji
+    "tounicode_bfrange_surrogate_pair": "😀😁C",
+    "tounicode_bfrange_ligature": "fiBC",
 }
 
 
@@ -201,13 +210,13 @@ _BUCKET_DOCS = {
     "b": write_text_pdf([f"b{i}" for i in range(6)]),
     "junk": b"%PDF-1.4 not really a pdf",
 }
-_SLICE_COLS = ["url", "slice", "n_slices", "payload"]
+_SLICE_COLS = ["url", "slice", "n_slices", "payload", "footer"]
 
 
 def _slice_rows(
     order: list[tuple[str, int]], n_slices: int = 3, docs: dict = _BUCKET_DOCS
 ) -> list[tuple]:
-    return [(url, j, n_slices, docs[url]) for url, j in order]
+    return [(url, j, n_slices, docs[url], None) for url, j in order]
 
 
 def _expected_slice_texts(
@@ -216,15 +225,24 @@ def _expected_slice_texts(
     # slice j of n holds buckets [nb*j//n, nb*(j+1)//n), nb the bucket count
     want = []
     for url, j in order:
+        nbytes = len(_BUCKET_DOCS[url])
         if url == "junk":
-            want.append((url, j, -1, "", True))
+            want.append((url, j, -1, "", True, None, nbytes))
             continue
         pages = pdf_page_texts(_BUCKET_DOCS[url])
         nb = -(-len(pages) // bucket_pages)
         buckets = range(nb * j // n_slices, nb * (j + 1) // n_slices)
         txt = "".join("".join(pages[b * bucket_pages : (b + 1) * bucket_pages]) for b in buckets)
-        want.append((url, j, len(pages), txt, False))
+        want.append((url, j, len(pages), txt, False, None, nbytes))
     return want
+
+
+def _without_ms(rows) -> list[tuple]:
+    """Slice-stage rows without their last column, the slice's
+    extraction milliseconds, which must be a time."""
+    rows = [tuple(row) for row in rows]
+    assert all(row[-1] >= 0 for row in rows)
+    return [row[:-1] for row in rows]
 
 
 def _run_slice_stage(batches: list[list[tuple]], bucket_pages: int) -> list[tuple]:
@@ -234,11 +252,11 @@ def _run_slice_stage(batches: list[list[tuple]], bucket_pages: int) -> list[tupl
     from ocr_service_spark.operators.extract import _bucket_texts
 
     frames = [pd.DataFrame(rows, columns=_SLICE_COLS) for rows in batches]
-    return [
-        tuple(row)
+    return _without_ms(
+        row
         for frame in _bucket_texts(iter(frames), bucket_pages)
         for row in frame.itertuples(index=False)
-    ]
+    )
 
 
 @pytest.fixture
@@ -266,13 +284,14 @@ def test_bucket_stage_text_and_errors_with_interleaved_urls_across_arrow_batches
     bucket_pages = 2
     order = [("a", 0), ("b", 0), ("a", 1), ("junk", 0), ("b", 1), ("b", 2), ("a", 2), ("junk", 1)]
     frame = spark.createDataFrame(
-        _slice_rows(order), "url string, slice int, n_slices int, payload binary"
+        _slice_rows(order),
+        "url string, slice int, n_slices int, payload binary, footer map<string,string>",
     ).coalesce(1)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     saved = spark.conf.get(key)
     spark.conf.set(key, "3")
     try:
-        got = [tuple(r) for r in extract_pdf_buckets(frame, bucket_pages).collect()]
+        got = _without_ms(extract_pdf_buckets(frame, bucket_pages).collect())
     finally:
         spark.conf.set(key, saved)
 
@@ -321,7 +340,7 @@ def test_zero_page_pdf_slices_are_errors():
     # with page_count -1, which the re-agg turns into the empty result
     docs = {"empty": write_text_pdf([])}
     got = _run_slice_stage([_slice_rows([("empty", j) for j in range(3)], docs=docs)], 2)
-    assert got == [("empty", j, -1, "", True) for j in range(3)]
+    assert got == [("empty", j, -1, "", True, None, len(docs["empty"])) for j in range(3)]
 
 
 @pytest.mark.parametrize("n_slices", [1, 3, 4, 7])

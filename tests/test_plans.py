@@ -83,10 +83,16 @@ def test_salted_scan_stays_wide(spark, pages_path):
     assert "Coalesce" not in plan, plan
 
 
-def _salted_corpus() -> tuple[list[tuple[str, bytes]], int]:
+_SALTED_PAGES = "url string, html binary, footer map<string,string>"
+_SALTED_GIANTS = ["empty.pdf", "giant20.pdf", "giant41.pdf", "giant70.pdf", "junk.pdf"]
+
+
+def _salted_corpus() -> tuple[list[tuple[str, bytes, dict | None]], int]:
     """Three giant PDFs (one with fewer page buckets than slices), a %PDF
     junk payload and an empty page tree above a lowered salt threshold,
-    plus HTML pages and a small PDF below it: (docs, salt_min_bytes)."""
+    junk and empty pages at a .docx and an .ODT url (whose office text
+    fallback keeps them single-pass), plus HTML pages and a small PDF
+    below it: (docs as (url, payload, footer), salt_min_bytes)."""
     from ocr_service_spark.sources.pages import write_text_pdf
 
     pad = lambda payload: payload + b"%" + b"x" * 3000 + b"\n"
@@ -98,6 +104,8 @@ def _salted_corpus() -> tuple[list[tuple[str, bytes]], int]:
     docs += [
         ("https://salted.test/junk.pdf", pad(b"%PDF-1.4 not really a pdf")),
         ("https://salted.test/empty.pdf", pad(write_text_pdf([]))),
+        ("https://salted.test/j.docx", pad(b"%PDF-1.4 not really a pdf")),
+        ("https://salted.test/e.ODT", pad(write_text_pdf(["", "", ""]))),
         ("https://salted.test/small.pdf", write_text_pdf(["below the threshold"])),
     ]
     docs += [
@@ -105,26 +113,53 @@ def _salted_corpus() -> tuple[list[tuple[str, bytes]], int]:
          f"<html><body><p>page {i} of the salted corpus</p></body></html>".encode())
         for i in range(12)
     ]
-    return docs, 2000
+    # the footer is echoed verbatim on both paths; giant20 carries none
+    footer = lambda url: None if "giant20" in url else {"doc": url.rsplit("/", 1)[1]}
+    return [(url, payload, footer(url)) for url, payload in docs], 2000
 
 
 def test_salted_path_matches_extract_document(spark):
-    """The salted slices reassemble to ``extract_document``'s row on the
-    fields perfbench compares, for giants, junk and an empty page tree."""
-    import sys
-    from pathlib import Path
-
+    """The salted slices reassemble to ``extract_document``'s row on
+    every result field but ``elapsed_ms``, for giants, junk and an empty
+    page tree; the same failures at .docx/.odt urls stay single-pass."""
     from ocr_service_spark.extraction.pipeline import extract_document
-
-    sys.path.append(str(Path(__file__).resolve().parents[1] / "perfbench"))
-    from workloads import gate_rows
+    from ocr_service_spark.operators.extract import RESULT_SCHEMA
+    from ocr_service_spark.plans.job import is_big_pdf
 
     docs, salt_min_bytes = _salted_corpus()
-    assert sum(len(p) > salt_min_bytes and p[:4] == b"%PDF" for _, p in docs) == 5
-    pages = spark.createDataFrame(docs, "url string, html binary")
-    got = run_extraction(pages, salt_min_bytes=salt_min_bytes).toPandas()
-    expected = [extract_document(p, u, "NO_OCR") for u, p in docs]
-    assert gate_rows(got, expected) == (len(docs), [])
+    assert sum(len(p) > salt_min_bytes and p[:4] == b"%PDF" for _, p, _ in docs) == 7
+    pages = spark.createDataFrame(docs, _SALTED_PAGES)
+    routed = pages.filter(is_big_pdf(salt_min_bytes=salt_min_bytes)).select("url").collect()
+    assert sorted(r.url.rsplit("/", 1)[1] for r in routed) == _SALTED_GIANTS
+
+    rows = run_extraction(pages, salt_min_bytes=salt_min_bytes).collect()
+    assert sorted(r.url for r in rows) == sorted(url for url, _, _ in docs)
+    got = {r.url: r.asDict() for r in rows}
+    fields = [f for f in RESULT_SCHEMA.fieldNames() if f != "elapsed_ms"]
+    for url, payload, footer in docs:
+        want = {**extract_document(payload, url, "NO_OCR"), "footer": footer}
+        assert {f: got[url][f] for f in fields} == {f: want[f] for f in fields}, url
+        assert got[url]["elapsed_ms"] > 0, url
+    assert got["https://salted.test/j.docx"]["fallback_reason"] == "converted_pdf_handling_failed"
+    assert got["https://salted.test/e.ODT"]["fallback_reason"] == "converted_pdf_handling_failed"
+
+
+def test_salted_documents_are_counted_in_the_metrics(spark):
+    """The extraction accumulators count the salted giants as the
+    single-pass branch counts its documents: one doc per row, every
+    payload byte once, and the slices' time as the giants' latency."""
+    from ocr_service_spark.operators.metrics import ExtractionMetrics
+
+    docs, salt_min_bytes = _salted_corpus()
+    metrics = ExtractionMetrics.create(spark)
+    pages = spark.createDataFrame(docs, _SALTED_PAGES)
+    rows = run_extraction(pages, salt_min_bytes=salt_min_bytes, metrics=metrics).collect()
+    snap = metrics.snapshot()
+    assert snap["docs"] == len(rows) == len(docs)
+    assert snap["bytes_in"] == sum(len(p) for _, p, _ in docs)
+    assert snap["empty_text"] == sum(not r.extracted_text for r in rows)
+    # elapsed_ms is rounded to the microsecond per row
+    assert snap["wall_ms"] == pytest.approx(sum(r.elapsed_ms for r in rows), abs=1e-3 * len(rows))
 
 
 def test_salted_lone_surrogate_matches_extract_document(spark):
@@ -149,7 +184,7 @@ def test_salted_branch_explodes_in_the_jvm(spark):
     round-robin: two MapInPandas nodes (single-pass, slice stage), no
     Python explode."""
     docs, salt_min_bytes = _salted_corpus()
-    pages = spark.createDataFrame(docs, "url string, html binary")
+    pages = spark.createDataFrame(docs, _SALTED_PAGES)
     plan = _formatted_plan(run_extraction(pages, salt_min_bytes=salt_min_bytes))
     assert re.search(r"\) Generate\nInput .*\nArguments: explode\(", plan), plan
     assert "Arguments: RoundRobinPartitioning(" in plan, plan

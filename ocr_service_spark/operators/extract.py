@@ -45,6 +45,7 @@ from ocr_service_spark.extraction.finalize import finalize_output_text, utf8_rep
 from ocr_service_spark.extraction.pdf_text import OpenedPdf
 from ocr_service_spark.extraction.pipeline import extract_document, result_row
 from ocr_service_spark.plans.parallelism import fan_out_width
+from ocr_service_spark.plans.session import drop_zip_finders
 
 RESULT_SCHEMA = StructType(
     [
@@ -121,6 +122,7 @@ def extract_documents(
     has_footer = "footer" in pages.columns
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for batch in batches:
             rows = []
             footers = batch["footer"] if has_footer else [None] * len(batch)
@@ -175,6 +177,7 @@ def explode_pdf_buckets(
 
 def _bucket_texts(batches: Iterator[pd.DataFrame], bucket_pages: int) -> Iterator[pd.DataFrame]:
     """The body of ``extract_pdf_buckets``: one text row per slice row."""
+    drop_zip_finders()
     open_url: str | None = None
     opened: OpenedPdf | None = None  # None: open_url failed to open
     for batch in batches:
@@ -262,6 +265,7 @@ def reassemble_pdf_results(bucket_texts: DataFrame, metrics=None) -> DataFrame:
     """
 
     def assemble(key: tuple[str], slices: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_finders()
         start = time.perf_counter()
         (url,) = key
         slices = slices.sort_values("bucket")

@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ocr_service_spark.plans.session import drop_zip_finders
+
 _PAGE_OCR_SCHEMA = "url string, page_no int, text string, confidence double"
 
 
@@ -28,6 +30,7 @@ def ocr_pages(page_images: DataFrame) -> DataFrame:
     """(url, page_no, png binary) -> per-page (text, confidence)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         from ocr_service_spark.extraction.ocr_engine import get_engine
 
         engine = get_engine()  # executor singleton (O1)

@@ -30,6 +30,8 @@ empty-page contract (reference ocr_engine.py:37).
 
 from __future__ import annotations
 
+import re
+
 from ocr_service_spark.extraction.ocr_engine import Raster
 
 # 5 columns x 7 rows; 'X' = ink. Original dot-matrix designs.
@@ -132,27 +134,34 @@ FONT: dict[str, frozenset[tuple[int, int]]] = {
     for ch, rows in _RAW_FONT.items()
 }
 
+# template -> its GLYPH_H pixel rows across one ADVANCE-wide cell
+# (the glyph plus its gap column), 1 = ink, 0 = paper
+_GLYPH_ROWS: dict[str, tuple[bytes, ...]] = {
+    ch: tuple(bytes((r, c) in cells for c in range(ADVANCE)) for r in range(GLYPH_H))
+    for ch, cells in FONT.items()
+}
+_BLANK_CELL = (bytes(ADVANCE),) * GLYPH_H
+
 
 def render_text_luma(text: str, ink: int = 0, paper: int = 255) -> Raster:
     """Rasterize ``text`` (multi-line) in the 5x7 font -> its pixels.
 
     Case-exact (the font carries both cases); unknown characters render
-    as blank cells.
+    as blank cells. Each text line is painted as its GLYPH_H pixel rows,
+    each row joined from its glyphs' cell rows; the page is painted in
+    0/1 and mapped to ``paper``/``ink`` once at the end.
     """
     lines = text.splitlines() or [""]
     width = 2 * MARGIN + max(1, max(len(ln) for ln in lines)) * ADVANCE
     height = 2 * MARGIN + len(lines) * LINE_PITCH
-    px = bytearray([paper]) * (width * height)
+    px = bytearray(width * height)
     for li, line in enumerate(lines):
-        y0 = MARGIN + li * LINE_PITCH
-        for ci, ch in enumerate(line):
-            cells = FONT.get(ch)
-            if not cells:
-                continue
-            x0 = MARGIN + ci * ADVANCE
-            for r, c in cells:
-                px[(y0 + r) * width + (x0 + c)] = ink
-    return Raster(width, height, bytes(px))
+        at = (MARGIN + li * LINE_PITCH) * width + MARGIN
+        for row in map(b"".join, zip(*(_GLYPH_ROWS.get(ch, _BLANK_CELL) for ch in line))):
+            px[at : at + len(row)] = row
+            at += width
+    colors = bytes.maketrans(b"\x00\x01", bytes((paper, ink)))
+    return Raster(width, height, bytes(px.translate(colors)))
 
 
 def render_text_png(text: str, ink: int = 0, paper: int = 255) -> bytes:
@@ -163,17 +172,9 @@ def render_text_png(text: str, ink: int = 0, paper: int = 255) -> bytes:
     return encode_png_gray(raster.width, raster.height, raster.luma)
 
 
-def _line_bands(ink_rows: list[bool]) -> list[tuple[int, int]]:
-    bands, start = [], None
-    for y, has in enumerate(ink_rows):
-        if has and start is None:
-            start = y
-        elif not has and start is not None:
-            bands.append((start, y))
-            start = None
-    if start is not None:
-        bands.append((start, len(ink_rows)))
-    return bands
+# binarization at mid-gray: byte v -> 1 if ink (v < 128) else 0
+_BINARIZE = bytes(v < 128 for v in range(256))
+_RUNS = re.compile(rb"[^\x00]+")  # runs of inked rows / columns
 
 
 def _classify(cells: frozenset[tuple[int, int]]) -> tuple[str, int]:
@@ -249,9 +250,22 @@ class GlyphOcrEngine:
         return self._recognize_luma(*decoded)
 
     def _recognize_luma(self, width: int, height: int, luma: bytes) -> tuple[str, float]:
-        """Recognition on decoded row-major 8-bit grayscale pixels."""
-        ink = [luma[i] < 128 for i in range(width * height)]
-        row_has = [any(ink[y * width : (y + 1) * width]) for y in range(height)]
+        """Recognition on decoded row-major 8-bit grayscale pixels.
+
+        Works on whole pixel rows, never per pixel: one binarizing
+        translate, inked rows by byte search, a line band's column
+        projection as the OR of its rows, glyph segments as regex runs.
+        Each distinct glyph bitmap is matched once per page; the memo
+        holds at most one entry per glyph on the page and ends with it.
+        """
+        n = width * height
+        if len(luma) < n:  # a truncated page fails, as any short read
+            raise IndexError(f"luma holds {len(luma)} of {n} pixels")
+        bits = luma[:n].translate(_BINARIZE)
+        rows = [bits[y * width : (y + 1) * width] for y in range(height)]
+        bands = [
+            m.span() for m in _RUNS.finditer(bytes(b"\x01" in row for row in rows))
+        ]
 
         # dispatch: pages rendered in this engine's own font have line
         # bands at most GLYPH_H (7) rows tall; anything taller is an
@@ -259,47 +273,38 @@ class GlyphOcrEngine:
         # (extraction/scan_ocr.py: Otsu, underline strip, size-class
         # template matching). No ink at the fixed threshold also defers
         # to that path, whose Otsu normalization may still find text.
-        bands_probe = _line_bands(row_has)
-        if not bands_probe or any(y1 - y0 > 9 for y0, y1 in bands_probe):
+        if not bands or any(y1 - y0 > 9 for y0, y1 in bands):
             from ocr_service_spark.extraction.scan_ocr import recognize_scan
 
             return recognize_scan(width, height, luma)
 
+        matched: dict[tuple[int, bytes], tuple[str, float]] = {}
         out_lines: list[str] = []
         confs: list[float] = []
-        for y0, y1 in _line_bands(row_has):
-            col_has = [
-                any(ink[y * width + x] for y in range(y0, y1)) for x in range(width)
-            ]
-            # glyph segments: runs of non-empty columns
-            segs, start = [], None
-            for x, has in enumerate(col_has):
-                if has and start is None:
-                    start = x
-                elif not has and start is not None:
-                    segs.append((start, x))
-                    start = None
-            if start is not None:
-                segs.append((start, width))
-
+        for y0, y1 in bands:
+            band = rows[y0:y1]
+            cols = 0
+            for row in band:  # 0/1 bytes: OR never carries across columns
+                cols |= int.from_bytes(row, "big")
             chars: list[str] = []
             prev_end = None
-            for x0, x1 in segs:
+            # glyph segments: runs of non-empty columns
+            for seg in _RUNS.finditer(cols.to_bytes(width, "big")):
+                x0, x1 = seg.span()
                 # inter-glyph gaps are at most ADVANCE-1 empty columns
                 # (widest trailing+leading template whitespace); a space
                 # adds a full ADVANCE per blank cell
                 if prev_end is not None and x0 - prev_end >= ADVANCE:
                     chars.append(" " * ((x0 - prev_end - 1) // ADVANCE))
                 prev_end = x1
-                cells = [
-                    (y - y0, x - x0)
-                    for y in range(y0, y1)
-                    for x in range(x0, x1)
-                    if ink[y * width + x]
-                ]
-                ch, conf = _match_glyph(cells)
-                chars.append(ch)
-                confs.append(conf)
+                w = x1 - x0
+                bitmap = b"".join(row[x0:x1] for row in band)
+                hit = matched.get((w, bitmap))
+                if hit is None:
+                    cells = [divmod(i, w) for i, v in enumerate(bitmap) if v]
+                    hit = matched[w, bitmap] = _match_glyph(cells)
+                chars.append(hit[0])
+                confs.append(hit[1])
             out_lines.append("".join(chars))
 
         text = "\n".join(out_lines)

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
+    MapType,
     StringType,
     StructField,
     StructType,
@@ -40,6 +41,13 @@ PAGES_SCHEMA = StructType(
     ]
 )
 
+# what read_pages reads: the input contract plus the optional envelope
+# footer that extraction echoes (a new StructType: ``StructType.add``
+# would extend PAGES_SCHEMA in place)
+_READ_SCHEMA = StructType(
+    [*PAGES_SCHEMA.fields, StructField("footer", MapType(StringType(), StringType()), True)]
+)
+
 REFERENCE_DOCS = Path("/root/reference/ocr_service/tests/resources/docs")
 
 # ground truth for the rendered OCR fixture in load_fixture_pages
@@ -49,8 +57,14 @@ GLYPH_FIXTURE_TEXT = "SCANNED PAGE 1\nPATIENT ID: 12345\nFINDINGS: NORMAL"
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
     """Parquet reader for a pages table (Iceberg catalogs plug in the
     same way via ``spark.read.format("iceberg").load`` when a catalog
-    is configured; parquet is the sandbox stand-in)."""
-    return spark.read.parquet(path)
+    is configured; parquet is the sandbox stand-in).
+
+    The schema is declared, so the read starts no job to infer it from
+    the files. It reads ``PAGES_SCHEMA`` plus a nullable ``footer``
+    map: a table without one reads ``footer`` as null, which extraction
+    treats as no footer, and any column outside these (e.g. bench.py's
+    ``payload_bytes``) is not read."""
+    return spark.read.schema(_READ_SCHEMA).parquet(path)
 
 
 def decode_payload_ladder(df: DataFrame, src_col: str = "body") -> DataFrame:

@@ -194,3 +194,172 @@ def test_codec_ladder_never_crashes_on_fuzz():
                 assert len(luma) == w * h
             text, conf = eng.recognize(bytes(data))
             assert isinstance(text, str) and 0.0 <= conf <= 100.0
+
+
+# ---------------------------------------------------------------------------
+# Row-bytes recognizer and rasterizer against per-pixel oracles
+# ---------------------------------------------------------------------------
+
+
+def _oracle_recognize_luma(width: int, height: int, luma: bytes) -> tuple[str, float]:
+    """The per-pixel recognizer the row-bytes kernel must reproduce."""
+    from ocr_service_spark.extraction.glyph_ocr import ADVANCE, _match_glyph
+    from ocr_service_spark.extraction.scan_ocr import recognize_scan
+
+    def line_bands(ink_rows):
+        bands, start = [], None
+        for y, has in enumerate(ink_rows):
+            if has and start is None:
+                start = y
+            elif not has and start is not None:
+                bands.append((start, y))
+                start = None
+        if start is not None:
+            bands.append((start, len(ink_rows)))
+        return bands
+
+    ink = [luma[i] < 128 for i in range(width * height)]
+    row_has = [any(ink[y * width : (y + 1) * width]) for y in range(height)]
+    bands = line_bands(row_has)
+    if not bands or any(y1 - y0 > 9 for y0, y1 in bands):
+        return recognize_scan(width, height, luma)
+    out_lines, confs = [], []
+    for y0, y1 in bands:
+        col_has = [any(ink[y * width + x] for y in range(y0, y1)) for x in range(width)]
+        segs, start = [], None
+        for x, has in enumerate(col_has):
+            if has and start is None:
+                start = x
+            elif not has and start is not None:
+                segs.append((start, x))
+                start = None
+        if start is not None:
+            segs.append((start, width))
+        chars, prev_end = [], None
+        for x0, x1 in segs:
+            if prev_end is not None and x0 - prev_end >= ADVANCE:
+                chars.append(" " * ((x0 - prev_end - 1) // ADVANCE))
+            prev_end = x1
+            cells = [
+                (y - y0, x - x0)
+                for y in range(y0, y1)
+                for x in range(x0, x1)
+                if ink[y * width + x]
+            ]
+            ch, conf = _match_glyph(cells)
+            chars.append(ch)
+            confs.append(conf)
+        out_lines.append("".join(chars))
+    return "\n".join(out_lines), round(sum(confs) / max(len(confs), 1), 4)
+
+
+def _random_text(rng) -> str:
+    alphabet = "".join(sorted(FONT)) + "    "
+    lines = [
+        "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 24)))
+        for _ in range(rng.randrange(1, 5))
+    ]
+    return "\n".join(lines)
+
+
+def _assert_parity(width, height, luma):
+    assert GlyphOcrEngine()._recognize_luma(width, height, luma) == _oracle_recognize_luma(
+        width, height, luma
+    )
+
+
+def test_recognizer_matches_per_pixel_oracle_on_renders():
+    import random
+
+    from ocr_service_spark.extraction.glyph_ocr import render_text_luma
+
+    rng = random.Random(16)
+    texts = ["", "a  b   c d", "A\n\nB", "     x"] + [_random_text(rng) for _ in range(40)]
+    for text in texts:
+        _assert_parity(*render_text_luma(text))
+
+
+def test_recognizer_matches_per_pixel_oracle_on_pixel_flips():
+    import random
+
+    from ocr_service_spark.extraction.glyph_ocr import render_text_luma
+
+    rng = random.Random(17)
+    for _ in range(60):
+        width, height, luma = render_text_luma(_random_text(rng))
+        px = bytearray(luma)
+        for _ in range(rng.randrange(1, 12)):
+            px[rng.randrange(len(px))] = rng.choice((0, 127, 128, 255))
+        _assert_parity(width, height, bytes(px))
+
+
+def test_recognizer_reads_only_the_first_width_times_height_bytes():
+    from ocr_service_spark.extraction.glyph_ocr import render_text_luma
+
+    width, height, luma = render_text_luma("Tail bytes\nignored")
+    longer = luma + bytes(3 * width)  # an ink band past the page
+    _assert_parity(width, height, longer)
+    assert GlyphOcrEngine()._recognize_luma(width, height, longer)[0] == "Tail bytes\nignored"
+
+
+def test_recognizer_sends_tall_bands_to_scan_path_with_original_luma(monkeypatch):
+    from ocr_service_spark.extraction import scan_ocr
+
+    width, height = 20, 16
+    px = bytearray([255]) * (width * height)
+    for y in range(2, 14):  # one 12-row band: taller than 9
+        px[y * width + 5] = 0
+    luma = bytes(px) + b"\x00\x00"
+    _assert_parity(width, height, luma)
+    seen = []
+    monkeypatch.setattr(scan_ocr, "recognize_scan", lambda *a: seen.append(a) or ("", 0.0))
+    assert GlyphOcrEngine()._recognize_luma(width, height, luma) == ("", 0.0)
+    blank = bytes([255]) * (width * height)
+    assert GlyphOcrEngine()._recognize_luma(width, height, blank) == ("", 0.0)
+    assert seen == [(width, height, luma), (width, height, blank)]
+
+
+def test_recognizer_raises_on_short_luma_like_the_oracle():
+    from ocr_service_spark.extraction.glyph_ocr import render_text_luma
+
+    width, height, luma = render_text_luma("short")
+    with pytest.raises(IndexError):
+        _oracle_recognize_luma(width, height, luma[:-1])
+    with pytest.raises(IndexError):
+        GlyphOcrEngine()._recognize_luma(width, height, luma[:-1])
+
+
+def _paint_per_cell(text: str, ink: int = 0, paper: int = 255):
+    """The one-pixel-per-cell painter the row rasterizer must match."""
+    from ocr_service_spark.extraction.glyph_ocr import ADVANCE, LINE_PITCH, MARGIN
+
+    lines = text.splitlines() or [""]
+    width = 2 * MARGIN + max(1, max(len(ln) for ln in lines)) * ADVANCE
+    height = 2 * MARGIN + len(lines) * LINE_PITCH
+    px = bytearray([paper]) * (width * height)
+    for li, line in enumerate(lines):
+        y0 = MARGIN + li * LINE_PITCH
+        for ci, ch in enumerate(line):
+            x0 = MARGIN + ci * ADVANCE
+            for r, c in FONT.get(ch, ()):
+                px[(y0 + r) * width + (x0 + c)] = ink
+    return width, height, bytes(px)
+
+
+@pytest.mark.parametrize(
+    "text,ink,paper",
+    [
+        ("".join(sorted(FONT)), 0, 255),
+        ("\n".join(sorted(FONT)), 0, 255),
+        ("ab ~ _\"é\tZ", 0, 255),  # characters outside the font stay blank
+        ("first line\n\n  third, line\nLAST", 0, 255),
+        ("", 0, 255),
+        ("Ink 200 on paper 17", 200, 17),
+        ("same\ncolor", 90, 90),
+        ("0/1 swapped", 1, 0),
+    ],
+)
+def test_render_text_luma_matches_per_cell_painter(text, ink, paper):
+    from ocr_service_spark.extraction.glyph_ocr import render_text_luma
+
+    assert tuple(render_text_luma(text, ink, paper)) == _paint_per_cell(text, ink, paper)

@@ -213,3 +213,57 @@ def test_checkpoint_resume(spark, tmp_path):
     # lineage counts reconcile with results
     total = manifest2.agg(F.sum("doc_count")).collect()[0][0]
     assert total == 120
+
+
+@pytest.mark.parametrize("with_footer", [False, True])
+def test_read_pages_declared_schema_matches_inferred_read(spark, tmp_path, with_footer):
+    """read_pages declares its schema instead of inferring it; the rows
+    extracted from it equal those of an inferred read, and a table with
+    an envelope footer keeps echoing it, on both the single-pass and
+    the salted path."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_service_spark.extraction.glyph_ocr import render_text_png
+    from ocr_service_spark.sources.pages import read_pages, write_text_pdf
+
+    docs = [
+        ("https://t.test/a.html", b"<html><body><p>declared schema</p></body></html>"),
+        ("https://t.test/b.png", render_text_png("SCAN\nPAGE 2")),
+        ("https://t.test/c.pdf", write_text_pdf(["one", "two", "three"])),
+        ("https://t.test/d.bin", None),
+    ]
+    columns = {
+        "url": pa.array([u for u, _ in docs], pa.string()),
+        "warc_ts": pa.array([dt.datetime(2026, 1, 1)] * len(docs), pa.timestamp("us")),
+        "html": pa.array([p for _, p in docs], pa.binary()),
+        "text": pa.array([None] * len(docs), pa.string()),
+        "lang": pa.array(["en"] * len(docs), pa.string()),
+        "extra": pa.array(range(len(docs)), pa.int64()),
+    }
+    footers = [[("src", u), ("n", str(i))] for i, (u, _) in enumerate(docs)]
+    if with_footer:
+        columns["footer"] = pa.array(footers, pa.map_(pa.string(), pa.string()))
+    path = tmp_path / "pages"
+    path.mkdir()
+    pq.write_table(pa.table(columns), path / "part-00000.parquet")
+
+    declared = read_pages(spark, str(path))
+    assert "extra" not in declared.columns
+    for mode in ("NO_OCR", "OCR"):
+        # salt_min_bytes=1 sends the PDF down the salted path
+        for salt in (10**9, 1):
+            got, want = (
+                sorted(
+                    tuple((k, v) for k, v in r.asDict(recursive=True).items() if k != "elapsed_ms")
+                    for r in run_extraction(df, mode=mode, salt_min_bytes=salt).collect()
+                )
+                for df in (declared, spark.read.parquet(str(path)))
+            )
+            assert got == want and len(got) == len(docs)
+            echoed = {dict(r)["url"]: dict(r)["footer"] for r in got}
+            assert echoed == {
+                u: (dict(f) if with_footer else None) for (u, _), f in zip(docs, footers)
+            }

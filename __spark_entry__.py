@@ -1157,8 +1157,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q49_event_funnel",
         # demoted round 4 for q86 (BPE merge learning, first driver
         # check): q47's explicit two-phase salted aggregation shape is
-        # reached in-window by q41's salted page-bucket extraction path
-        # (explode -> per-bucket work -> ordered re-agg) and the plain
+        # reached in-window by q41's salted page-slice extraction path
+        # (explode -> per-slice work -> ordered re-agg) and the plain
         # hot-key groupBy by a dozen in-window aggs; q47 is three-round
         # driver hash-green and stays under tools/check_oracles.py +
         # test_entry_oracle like the rest of the tail

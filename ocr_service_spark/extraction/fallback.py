@@ -15,7 +15,6 @@ and raw-decode arms) — an observable reference quirk we preserve.
 
 from __future__ import annotations
 
-import posixpath
 import zipfile
 from html import unescape
 from io import BytesIO
@@ -81,9 +80,3 @@ def extract_office_zip_text_fallback(stream: bytes, ext: str | None) -> str:
             return extract_text_fallback(archive.read(xml_path), is_xml=True)
     except Exception:
         return ""
-
-
-def basename_ext(name: str) -> str | None:
-    """Lowercased extension of a path basename (os.path.splitext shape)."""
-    ext = posixpath.splitext(posixpath.basename(name))[1].lower()
-    return ext or None

@@ -8,7 +8,7 @@ Three operators compose the extraction job (plans/job.py):
   in the scan stage: each big PDF becomes a few (url, slice) rows, so a
   500-page document spreads across tasks ("salting on (url, page_range)"
   per the north rule) at one payload copy per slice.
-- ``extract_pdf_buckets``  — the slice stage: raw text of one page slice
+- ``extract_pdf_slices``   — the slice stage: raw text of one page range
   per row. A task parses a document once per consecutive run of its
   rows (``pdf_text.OpenedPdf``) and learns the page count there; the
   page interpreter handles each shown string as one glyph run (see
@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import time
 from collections.abc import Iterator
-from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -66,8 +65,6 @@ RESULT_SCHEMA = StructType(
     ]
 )
 
-# pages per salted bucket: the unit a slice's page range is cut in
-BUCKET_PAGES = 16
 # Most slices per salted PDF. Every slice parses the whole document
 # once (44 ms for pdfskew's 2.1 MB, 453-page giant, 4-core box) and
 # interprets its share of the page text (170 ms in all), so a slice
@@ -76,13 +73,13 @@ BUCKET_PAGES = 16
 # parse of CPU and saves almost no time, and the fan-out width alone
 # would be 8000 parses of every giant at 1000 executors x 8 cores.
 MAX_SLICES = 4
-# slice-stage output: raw (unfinalized) text per slice, ``bucket`` being
+# slice-stage output: raw (unfinalized) text per slice, ``slice`` being
 # the slice index (slices are consecutive page ranges, so slice order is
 # page order); page_count -1 when the document does not open, footer
 # the echoed envelope footer, nbytes the payload's size and ms the
 # slice's extraction time
-_BUCKET_TEXT_SCHEMA = (
-    "url string, bucket int, page_count int, txt string, error boolean,"
+_SLICE_TEXT_SCHEMA = (
+    "url string, slice int, page_count int, txt string, error boolean,"
     " footer map<string,string>, nbytes bigint, ms double"
 )
 
@@ -149,17 +146,17 @@ def extract_documents(
 
 
 def explode_pdf_buckets(
-    big_pdfs: DataFrame, payload_col: str = "html", bucket_pages: int = BUCKET_PAGES
+    big_pdfs: DataFrame, payload_col: str = "html", bucket_pages: object = None
 ) -> DataFrame:
     """The salted explode: each big PDF becomes ``n`` rows (url, slice,
     n_slices, payload, footer), ``n = min(fan-out width, MAX_SLICES)``.
 
     Pure Column logic, so it runs JVM-side in the scan stage; no page
     count is parsed here. The payload is copied once per slice, and the
-    slice stage cuts the page buckets of ``bucket_pages`` pages (the
-    parameter only keeps the signature) into ``n`` consecutive ranges.
+    slice stage cuts the document's pages into ``n`` consecutive ranges.
     The ``footer`` column (null when the pages table has none) rides
-    along for the re-agg to echo.
+    along for the re-agg to echo. ``bucket_pages`` is ignored: the
+    parameter only keeps the signature of the benchmark's caller.
     """
     n = min(fan_out_width(big_pdfs.sparkSession), MAX_SLICES)
     if "footer" in big_pdfs.columns:
@@ -175,15 +172,15 @@ def explode_pdf_buckets(
     )
 
 
-def _bucket_texts(batches: Iterator[pd.DataFrame], bucket_pages: int) -> Iterator[pd.DataFrame]:
-    """The body of ``extract_pdf_buckets``: one text row per slice row."""
+def _slice_texts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The body of ``extract_pdf_slices``: one text row per slice row."""
     drop_zip_finders()
     open_url: str | None = None
     opened: OpenedPdf | None = None  # None: open_url failed to open
     for batch in batches:
         out: dict[str, list] = {
             "url": [],
-            "bucket": [],
+            "slice": [],
             "page_count": [],
             "txt": [],
             "error": [],
@@ -205,10 +202,7 @@ def _bucket_texts(batches: Iterator[pd.DataFrame], bucket_pages: int) -> Iterato
             j, n = int(j), int(n)
             if opened is not None:
                 page_count = opened.page_count
-                n_buckets = -(-page_count // bucket_pages)
-                # slice j of n: buckets [n_buckets*j//n, n_buckets*(j+1)//n)
-                start = n_buckets * j // n * bucket_pages
-                stop = n_buckets * (j + 1) // n * bucket_pages
+                start, stop = page_count * j // n, page_count * (j + 1) // n
                 try:
                     # finalize_output_text's UTF-8 replace, here so a lone
                     # surrogate (a ToUnicode bfrange into D800-DFFF) never
@@ -218,46 +212,45 @@ def _bucket_texts(batches: Iterator[pd.DataFrame], bucket_pages: int) -> Iterato
                 except Exception:
                     error = True
             out["url"].append(url)
-            out["bucket"].append(j)
+            out["slice"].append(j)
             out["page_count"].append(page_count)
             out["txt"].append(txt)
             out["error"].append(error)
             out["nbytes"].append(len(payload))
             out["ms"].append((time.perf_counter() - t0) * 1e3)
         frame = pd.DataFrame(out)
-        frame["bucket"] = frame["bucket"].astype("int32")
+        frame["slice"] = frame["slice"].astype("int32")
         frame["page_count"] = frame["page_count"].astype("int32")
         yield frame
 
 
-def extract_pdf_buckets(buckets: DataFrame, bucket_pages: int = BUCKET_PAGES) -> DataFrame:
-    """The slice stage: extract the raw text of one page slice per row.
+def extract_pdf_slices(slices: DataFrame) -> DataFrame:
+    """The slice stage: extract the raw text of one page range per row.
 
     A task parses a document once per consecutive run of that url's
     rows: the last opened document is kept while consecutive rows share
     its ``url`` (across Arrow batches), and a failed open marks every
     slice of the run ``error`` (page_count -1) without parsing again.
-    The open also gives the page count, so slice ``j`` of ``n`` learns
-    its buckets there; a slice left without buckets (a document of
-    fewer buckets than slices) does no page work. No sort is added, so
-    a task holds one slice's payload at a time. Each row carries the
-    payload's byte size and the slice's extraction milliseconds (its
-    share of the open included) for the re-agg's row and accumulators.
+    The open also gives the page count ``p``, so slice ``j`` of ``n``
+    learns its pages ``[p*j//n, p*(j+1)//n)`` there; a slice left
+    without pages (a document of fewer pages than slices) does no page
+    work. No sort is added, so a task holds one slice's payload at a
+    time. Each row carries the payload's byte size and the slice's
+    extraction milliseconds (its share of the open included) for the
+    re-agg's row and accumulators.
 
     ``plans/job.py`` deals the slice rows round-robin, so one giant's
     slices land on distinct tasks and each slice pays one parse.
     """
-    return buckets.mapInPandas(
-        partial(_bucket_texts, bucket_pages=bucket_pages), schema=_BUCKET_TEXT_SCHEMA
-    )
+    return slices.mapInPandas(_slice_texts, schema=_SLICE_TEXT_SCHEMA)
 
 
-def reassemble_pdf_results(bucket_texts: DataFrame, metrics=None) -> DataFrame:
+def reassemble_pdf_results(slice_texts: DataFrame, metrics=None) -> DataFrame:
     """Ordered re-agg: one grouped Python step per document that joins
     its slice texts in slice order and builds the row with
     ``pipeline.result_row``, the row code of ``extract_document``.
 
-    Sorting by ``bucket``, the slice index, makes the concatenation
+    Sorting by ``slice``, the slice index, makes the concatenation
     deterministic page order — the explicit fix for the reference's
     completion-order quirk (SURVEY.md §2.3 C4). Any slice error
     reproduces the reference's swallowed-exception empty result.
@@ -268,7 +261,7 @@ def reassemble_pdf_results(bucket_texts: DataFrame, metrics=None) -> DataFrame:
         drop_zip_finders()
         start = time.perf_counter()
         (url,) = key
-        slices = slices.sort_values("bucket")
+        slices = slices.sort_values("slice")
         if slices["error"].any():
             row = result_row(url, "", {})
         else:
@@ -286,4 +279,4 @@ def reassemble_pdf_results(bucket_texts: DataFrame, metrics=None) -> DataFrame:
         nbytes = int(slices["nbytes"].iloc[0])
         return _result_frame([_stamp(row, footer, nbytes, float(elapsed), metrics)])
 
-    return bucket_texts.groupBy("url").applyInPandas(assemble, RESULT_SCHEMA)
+    return slice_texts.groupBy("url").applyInPandas(assemble, RESULT_SCHEMA)

@@ -116,27 +116,6 @@ def _matrix_expr(rows: list[list[float]]):
     return F.from_json(F.lit(json.dumps(rows)), "array<array<double>>")
 
 
-def _planes_matrix():
-    return _matrix_expr(
-        [
-            [_plane_weight(p, i) for i in range(EMB_DIM)]
-            for p in range(LSH_BANDS * LSH_ROWS)
-        ]
-    )
-
-
-def _band_key(vec, band: int, planes):
-    """Integer bucket key for one band: LSH_ROWS sign bits packed."""
-    key = None
-    for j in range(LSH_ROWS):
-        p = band * LSH_ROWS + j
-        bit = F.when(
-            _dot(vec, F.element_at(planes, p + 1)) >= 0, F.lit(1 << j)
-        ).otherwise(F.lit(0))
-        key = bit if key is None else key + bit
-    return key
-
-
 def _round_half_up(x: float, digits: int) -> float:
     """Spark's F.round dialect for doubles, exactly: round the SHORTEST
     round-trip decimal representation (Java Double.toString == Python

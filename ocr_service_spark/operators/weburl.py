@@ -514,7 +514,7 @@ _Q140_ORACLE = f"""
 # -- q149: host-skew report + salting advisor ---------------------------------
 #
 # The diagnostic that DECIDES salting (q47's explicit two-phase agg,
-# q41's salted page buckets): how unequal is the per-host document
+# q41's salted page slices): how unequal is the per-host document
 # distribution, and which hosts need how many salt buckets? Planted
 # skew: a third of the corpus lands on one mega-host, the rest spreads
 # over 50 small hosts. All metrics integer: per-host share in basis

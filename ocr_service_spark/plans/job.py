@@ -9,9 +9,10 @@ exercised identically on local[N]:
    magic, at a url without ``.docx``/``.odt``, take the salted
    page-range path; everything else takes the single-pass path. The
    predicate is pure Column logic, evaluated JVM-side at the scan.
-3. **Size-skew repartition**: the single-pass branch repartitions by a
-   hash of (url) after filtering; Arrow batches are bounded so one
-   task never holds too many big payloads (AQE handles residual skew).
+3. **Single pass**: every other document goes through one
+   mapInPandas stage in the scan's own partitions, one results row per
+   pages row; Arrow batches are bounded so one task never holds too
+   many big payloads.
 4. **Salted branch**: explode (url, page slice) JVM-side in the scan
    stage -> round-robin fan-out -> per-slice extraction (one parse per
    slice, which also counts the pages) -> ordered re-agg (one grouped
@@ -31,10 +32,9 @@ from pyspark.sql import functions as F
 
 from ocr_service_spark.extraction.classify import OFFICE_ZIP_FALLBACK_EXTS
 from ocr_service_spark.operators.extract import (
-    BUCKET_PAGES,
     explode_pdf_buckets,
     extract_documents,
-    extract_pdf_buckets,
+    extract_pdf_slices,
     reassemble_pdf_results,
 )
 from ocr_service_spark.plans.parallelism import fan_out
@@ -84,30 +84,18 @@ def run_extraction(
     pages: DataFrame,
     payload_col: str = "html",
     salt_min_bytes: int = SALT_MIN_BYTES,
-    bucket_pages: int = BUCKET_PAGES,
-    repartition: int | None = None,
-    repartition_by_size: bool = False,
     metrics=None,
     mode: str = "NO_OCR",
     size_col: str | None = None,
+    *,
+    bucket_pages: object = None,
 ) -> DataFrame:
     """pages -> results DataFrame (operators.extract.RESULT_SCHEMA).
 
-    ``repartition`` spreads the single-pass branch by url hash;
-    ``repartition_by_size=True`` uses repartitionByRange on payload
-    byte-size instead — range partitioning clusters similar-sized
-    payloads, which makes per-task MEMORY predictable (an Arrow batch
-    of uniformly-sized payloads, no one giant doc inside a small-doc
-    batch). The tradeoff is WALL-CLOCK skew: equal-row ranges put the
-    heaviest sub-threshold docs together in the last partitions, and
-    AQE does NOT split user-specified repartitions (skew splitting
-    applies to joins/rebalance only) — so when per-doc cost scales
-    with size, plain hash repartition balances better and is the
-    default. Above the salt threshold the salted page-bucket path
-    dissolves the true giants either way. Requires ``repartition`` to
-    be set (the range needs an explicit width)."""
-    if repartition_by_size and not repartition:
-        raise ValueError("repartition_by_size requires an explicit repartition count")
+    ``bucket_pages`` is ignored. The salted path cuts a document's
+    pages straight into slices, but the benchmark's layer module reads
+    this parameter's default by name when it is imported, so the
+    parameter stays until that read goes."""
     if mode != "NO_OCR":
         # OCR tier: per-document engine recognition; the page-image
         # fan-out lives in operators/ocr.py for pre-rendered pages
@@ -116,13 +104,6 @@ def run_extraction(
     big = is_big_pdf(payload_col, salt_min_bytes, size_col)
 
     normal = pages.filter(~F.coalesce(big, F.lit(False)))
-    if repartition and repartition_by_size:
-        normal = normal.repartitionByRange(
-            repartition, F.octet_length(payload_col).asc_nulls_first(), F.col("url")
-        )
-    elif repartition:
-        # spread payloads across tasks; size skew beyond this is AQE's job
-        normal = normal.repartition(repartition, "url")
     normal_results = extract_documents(normal, payload_col, metrics=metrics)
 
     # Salted branch: filter at FULL scan width (a coalesce here would
@@ -136,7 +117,7 @@ def run_extraction(
     # conjunction lets Catalyst split + push the size conjunct into
     # the parquet scan (coalesce() is an opaque wrapper the optimizer
     # will not decompose)
-    slices = fan_out(explode_pdf_buckets(pages.filter(big), payload_col, bucket_pages))
-    salted_results = reassemble_pdf_results(extract_pdf_buckets(slices, bucket_pages), metrics)
+    slices = fan_out(explode_pdf_buckets(pages.filter(big), payload_col))
+    salted_results = reassemble_pdf_results(extract_pdf_slices(slices), metrics)
 
     return normal_results.unionByName(salted_results)

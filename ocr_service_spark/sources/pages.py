@@ -392,11 +392,10 @@ _REFERENCE_PAYLOADS = {
 def _fixture_payloads() -> dict[str, bytes]:
     """The reference's test documents when ``REFERENCE_DOCS`` exists,
     else stand-ins of the same kinds built from a fixed seed (the big
-    PDF spans more than one salted page bucket)."""
+    PDF has 20 pages, more than the salted path's slices)."""
     if REFERENCE_DOCS.is_dir():
         return {k: (REFERENCE_DOCS / rel).read_bytes() for k, rel in _REFERENCE_PAYLOADS.items()}
     from ocr_service_spark.extraction.glyph_ocr import render_text_png
-    from ocr_service_spark.operators.extract import BUCKET_PAGES
 
     rng = _lcg(0)
     noise = bytes(next(rng) % 256 for _ in range(256))
@@ -404,7 +403,7 @@ def _fixture_payloads() -> dict[str, bytes]:
         "docx": _synth_docx(rng, 20),
         "docx_big": _synth_docx(rng, 600),
         "pdf": write_text_pdf([_sentence(rng, 40)]),
-        "pdf_big": write_text_pdf([_sentence(rng, 80) for _ in range(BUCKET_PAGES + 4)]),
+        "pdf_big": write_text_pdf([_sentence(rng, 80) for _ in range(20)]),
         "png": render_text_png(GLYPH_FIXTURE_TEXT),
         "encrypted": build_cfb(
             {"EncryptionInfo": b"\x04\x00\x04\x00" + noise, "EncryptedPackage": noise}
@@ -426,8 +425,7 @@ def generate_pages(
     driver, so the generator itself scales with the cluster. Every
     ``skew_every``-th document embeds a large multi-page payload
     (mirrors the 20-page docx skew payload in FIXTURES.md) so the
-    salted PDF path and size-skew repartitioning have real work in
-    benchmarks.
+    salted PDF path has real work in benchmarks.
     """
     bc = spark.sparkContext.broadcast(_fixture_payloads())
     base_ts = dt.datetime(2026, 1, 1)

@@ -205,7 +205,7 @@ def test_interpreter_goldens(name: str):
     assert pdf_to_text(_kernel_case(name)) == (_KERNEL_GOLDENS[name], 1)
 
 
-_BUCKET_DOCS = {
+_SLICE_DOCS = {
     "a": write_text_pdf([f"a{i}" for i in range(5)]),
     "b": write_text_pdf([f"b{i}" for i in range(6)]),
     "junk": b"%PDF-1.4 not really a pdf",
@@ -214,26 +214,23 @@ _SLICE_COLS = ["url", "slice", "n_slices", "payload", "footer"]
 
 
 def _slice_rows(
-    order: list[tuple[str, int]], n_slices: int = 3, docs: dict = _BUCKET_DOCS
+    order: list[tuple[str, int]], n_slices: int = 3, docs: dict = _SLICE_DOCS
 ) -> list[tuple]:
     return [(url, j, n_slices, docs[url], None) for url, j in order]
 
 
-def _expected_slice_texts(
-    order: list[tuple[str, int]], bucket_pages: int, n_slices: int = 3
-) -> list[tuple]:
-    # slice j of n holds buckets [nb*j//n, nb*(j+1)//n), nb the bucket count
+def _expected_slice_texts(order: list[tuple[str, int]], n_slices: int = 3) -> list[tuple]:
+    # slice j of n holds pages [p*j//n, p*(j+1)//n), p the page count
     want = []
     for url, j in order:
-        nbytes = len(_BUCKET_DOCS[url])
+        nbytes = len(_SLICE_DOCS[url])
         if url == "junk":
             want.append((url, j, -1, "", True, None, nbytes))
             continue
-        pages = pdf_page_texts(_BUCKET_DOCS[url])
-        nb = -(-len(pages) // bucket_pages)
-        buckets = range(nb * j // n_slices, nb * (j + 1) // n_slices)
-        txt = "".join("".join(pages[b * bucket_pages : (b + 1) * bucket_pages]) for b in buckets)
-        want.append((url, j, len(pages), txt, False, None, nbytes))
+        pages = pdf_page_texts(_SLICE_DOCS[url])
+        p = len(pages)
+        txt = "".join(pages[p * j // n_slices : p * (j + 1) // n_slices])
+        want.append((url, j, p, txt, False, None, nbytes))
     return want
 
 
@@ -245,17 +242,15 @@ def _without_ms(rows) -> list[tuple]:
     return [row[:-1] for row in rows]
 
 
-def _run_slice_stage(batches: list[list[tuple]], bucket_pages: int) -> list[tuple]:
+def _run_slice_stage(batches: list[list[tuple]]) -> list[tuple]:
     """The slice stage's body in-process, one Arrow batch per list."""
     import pandas as pd
 
-    from ocr_service_spark.operators.extract import _bucket_texts
+    from ocr_service_spark.operators.extract import _slice_texts
 
     frames = [pd.DataFrame(rows, columns=_SLICE_COLS) for rows in batches]
     return _without_ms(
-        row
-        for frame in _bucket_texts(iter(frames), bucket_pages)
-        for row in frame.itertuples(index=False)
+        row for frame in _slice_texts(iter(frames)) for row in frame.itertuples(index=False)
     )
 
 
@@ -276,12 +271,11 @@ def opens(monkeypatch) -> list[bytes]:
 
 
 def test_bucket_stage_text_and_errors_with_interleaved_urls_across_arrow_batches(spark):
-    # two multi-bucket PDFs and a %PDF- junk payload in one partition, their
+    # two multi-page PDFs and a %PDF- junk payload in one partition, their
     # slice rows interleaved: a task that keeps the last opened document
     # must reopen whenever the url changes, also across Arrow batches
-    from ocr_service_spark.operators.extract import extract_pdf_buckets
+    from ocr_service_spark.operators.extract import extract_pdf_slices
 
-    bucket_pages = 2
     order = [("a", 0), ("b", 0), ("a", 1), ("junk", 0), ("b", 1), ("b", 2), ("a", 2), ("junk", 1)]
     frame = spark.createDataFrame(
         _slice_rows(order),
@@ -291,36 +285,35 @@ def test_bucket_stage_text_and_errors_with_interleaved_urls_across_arrow_batches
     saved = spark.conf.get(key)
     spark.conf.set(key, "3")
     try:
-        got = _without_ms(extract_pdf_buckets(frame, bucket_pages).collect())
+        got = _without_ms(extract_pdf_slices(frame).collect())
     finally:
         spark.conf.set(key, saved)
 
-    want = _expected_slice_texts(order, bucket_pages)
+    want = _expected_slice_texts(order)
     assert got == want
-    assert want[0][3] == "a0a1" and want[5][3] == "b4b5"
+    assert want[0][3] == "a0" and want[2][3] == "a1a2" and want[5][3] == "b4b5"
 
 
 def test_bucket_stage_opens_each_document_once_per_run_of_its_rows(opens):
     # one open per consecutive run of a url's rows, also when a run spans
     # Arrow batches, and none more for the rest of a run whose open failed
-    bucket_pages = 2
     batches = [
         [("a", 0), ("a", 1)],
         [("a", 2), ("b", 0)],
         [("b", 1), ("junk", 0), ("junk", 1)],
         [("junk", 2), ("b", 2), ("a", 0)],
     ]
-    got = _run_slice_stage([_slice_rows(order) for order in batches], bucket_pages)
+    got = _run_slice_stage([_slice_rows(order) for order in batches])
 
-    docs = _BUCKET_DOCS
+    docs = _SLICE_DOCS
     assert opens == [docs["a"], docs["b"], docs["junk"], docs["b"], docs["a"]]
     order = [key for batch in batches for key in batch]
-    assert got == _expected_slice_texts(order, bucket_pages)
+    assert got == _expected_slice_texts(order)
 
 
-def test_slices_past_the_last_bucket_do_no_page_work(opens, monkeypatch):
-    # "a" has 5 pages, 3 buckets of 2: of 7 slices, 4 get no bucket, and
-    # every page is interpreted exactly once over the run
+def test_slices_past_the_last_page_do_no_page_work(opens, monkeypatch):
+    # "a" has 5 pages: of 7 slices, 2 get no page, and every page is
+    # interpreted exactly once over the run
     from ocr_service_spark.extraction import pdf_text
 
     interpreted = []
@@ -328,9 +321,9 @@ def test_slices_past_the_last_bucket_do_no_page_work(opens, monkeypatch):
     monkeypatch.setattr(
         pdf_text, "_interpret_page", lambda *a: interpreted.append(1) or real(*a)
     )
-    got = _run_slice_stage([_slice_rows([("a", j) for j in range(7)], 7)], 2)
+    got = _run_slice_stage([_slice_rows([("a", j) for j in range(7)], 7)])
 
-    assert [row[3] for row in got] == ["", "", "a0a1", "", "a2a3", "", "a4"]
+    assert [row[3] for row in got] == ["", "a0", "a1", "", "a2", "a3", "a4"]
     assert {row[2] for row in got} == {5} and not any(row[4] for row in got)
     assert len(opens) == 1 and len(interpreted) == 5
 
@@ -339,18 +332,22 @@ def test_zero_page_pdf_slices_are_errors():
     # an empty page tree does not open: every slice is an error row
     # with page_count -1, which the re-agg turns into the empty result
     docs = {"empty": write_text_pdf([])}
-    got = _run_slice_stage([_slice_rows([("empty", j) for j in range(3)], docs=docs)], 2)
+    got = _run_slice_stage([_slice_rows([("empty", j) for j in range(3)], docs=docs)])
     assert got == [("empty", j, -1, "", True, None, len(docs["empty"])) for j in range(3)]
 
 
 @pytest.mark.parametrize("n_slices", [1, 3, 4, 7])
 def test_slice_texts_in_order_equal_pdf_to_text(n_slices: int):
-    pdf = write_text_pdf([f"p{i} " for i in range(37)])
-    rows = _slice_rows([("long", j) for j in range(n_slices)], n_slices, {"long": pdf})
-    got = _run_slice_stage([rows], 4)
-    assert [row[1] for row in got] == list(range(n_slices))
-    assert "".join(row[3] for row in got) == pdf_to_text(pdf)[0]
-    assert {row[2] for row in got} == {37}
+    # every slice holds floor(p/n) or ceil(p/n) of the p pages
+    for n_pages in (1, 10, 20, 37):
+        pdf = write_text_pdf([f"p{i} " for i in range(n_pages)])
+        rows = _slice_rows([("long", j) for j in range(n_slices)], n_slices, {"long": pdf})
+        got = _run_slice_stage([rows])
+        assert [row[1] for row in got] == list(range(n_slices))
+        assert "".join(row[3] for row in got) == pdf_to_text(pdf)[0]
+        assert {row[2] for row in got} == {n_pages}
+        held = [row[3].count("p") for row in got]
+        assert set(held) <= {n_pages // n_slices, -(-n_pages // n_slices)}, (n_pages, held)
 
 
 def test_one_font_per_font_object_per_open(monkeypatch):

@@ -88,11 +88,11 @@ _SALTED_GIANTS = ["empty.pdf", "giant20.pdf", "giant41.pdf", "giant70.pdf", "jun
 
 
 def _salted_corpus() -> tuple[list[tuple[str, bytes, dict | None]], int]:
-    """Three giant PDFs (one with fewer page buckets than slices), a %PDF
-    junk payload and an empty page tree above a lowered salt threshold,
-    junk and empty pages at a .docx and an .ODT url (whose office text
-    fallback keeps them single-pass), plus HTML pages and a small PDF
-    below it: (docs as (url, payload, footer), salt_min_bytes)."""
+    """Three giant PDFs of 70, 41 and 20 pages, a %PDF junk payload
+    and an empty page tree above a lowered salt threshold, junk and
+    empty pages at a .docx and an .ODT url (whose office text fallback
+    keeps them single-pass), plus HTML pages and a small PDF below it:
+    (docs as (url, payload, footer), salt_min_bytes)."""
     from ocr_service_spark.sources.pages import write_text_pdf
 
     pad = lambda payload: payload + b"%" + b"x" * 3000 + b"\n"
@@ -221,16 +221,6 @@ def test_bucketed_join_has_no_exchange(spark, pages_path):
         assert joined.count() > 0
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_size_range_repartition_appears_in_plan(spark, pages_path):
-    """repartition_by_size must plan a RANGE exchange keyed on payload
-    byte-size (north-star skew handling), and results stay complete."""
-    pages = spark.read.parquet(pages_path)
-    df = run_extraction(pages, repartition=8, repartition_by_size=True)
-    plan = _formatted_plan(df)
-    assert "rangepartitioning(octet_length" in plan.replace(" ", "").lower(), plan
-    assert df.count() == 200
 
 
 def test_resume_antijoin_is_broadcast(spark, pages_path):

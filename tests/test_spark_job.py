@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_service_spark.extraction import extract_document
-from ocr_service_spark.operators.extract import BUCKET_PAGES
+from ocr_service_spark.operators.extract import MAX_SLICES
 from ocr_service_spark.plans.job import is_big_pdf, run_extraction
 from ocr_service_spark.plans.manifest import (
     completed_parts,
@@ -149,7 +149,7 @@ def test_generator_stand_ins_route_like_the_reference(tmp_path, monkeypatch):
     for kind in ("docx", "docx_big"):
         assert rows[kind]["doc_class"] == "office" and rows[kind]["success"] is True
     assert rows["pdf"]["doc_class"] == "pdf" and rows["pdf"]["success"] is True
-    assert rows["pdf_big"]["success"] is True and rows["pdf_big"]["pages"] > BUCKET_PAGES
+    assert rows["pdf_big"]["success"] is True and rows["pdf_big"]["pages"] > MAX_SLICES
     assert rows["png"]["doc_class"] == "image" and rows["png"]["ocr_skipped"] is True
     assert rows["encrypted"]["doc_class"] == "encrypted_office"
 

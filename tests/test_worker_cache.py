@@ -72,9 +72,10 @@ def test_extraction_bodies_leave_no_zip_finders(spark):
         (f"https://cache.test/{i}.html", f"<html><body><p>page {i}</p></body></html>".encode())
         for i in range(200)
     ]
-    pages = spark.createDataFrame(docs, "url string, html binary")
+    # four tasks per core, so every worker runs an extraction body
+    pages = spark.createDataFrame(docs, "url string, html binary").repartition(4 * cores, "url")
     for _ in range(2):
-        assert run_extraction(pages, repartition=4 * cores).count() == len(docs)
+        assert run_extraction(pages).count() == len(docs)
 
     def probe(batches):
         import os

@@ -68,6 +68,7 @@ from ocr_service_spark.operators import (  # noqa: E402
     weburl,
 )
 from ocr_service_spark.plans.parallelism import documents, fan_out  # noqa: E402
+from ocr_service_spark.sources.tables import read_table  # noqa: E402
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -86,7 +87,7 @@ def _synthetic_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic pages table from a testdata documents table: each
     row wrapped into an html/rtf/xml payload by doc_id % 3 (the url
     embeds the format so oracles can reconstruct it)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     fmt_html = "<!DOCTYPE html>\n<html><head><title>t</title></head><body><p>%s</p></body></html>"
     fmt_rtf = "{\\rtf1\\ansi\\deff0{\\fonttbl{\\f0 Arial;}}%s\\par}"
     fmt_xml = '<?xml version="1.0"?><doc kind="synthetic">%s</doc>'
@@ -246,7 +247,7 @@ def _q60_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_service_spark.operators.multimodal import sample_frames
 
     docs = fan_out(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_table(spark, sf_dir, "documents")
         .select("doc_id")
         .filter(F.col("doc_id") < 300)  # deterministic subset (limit() is not)
     )
@@ -289,7 +290,7 @@ def _q61_mp4_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_service_spark.operators.multimodal import sample_frames
 
     docs = fan_out(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_table(spark, sf_dir, "documents")
         .select("doc_id")
         .filter(F.col("doc_id") < 300)
     )
@@ -494,7 +495,7 @@ def _q57_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="ocr_spark_q57_")
     path = f"{base}/docs"
     try:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        docs = read_table(spark, sf_dir, "documents")
         docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("append").parquet(path)
         docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(path)
         before = spark.read.parquet(path).agg(
@@ -825,7 +826,7 @@ def _q105_media_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_service_spark.plans.job import run_extraction
 
     docs = fan_out(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_table(spark, sf_dir, "documents")
         .select("doc_id")
         .filter(F.col("doc_id") < 300)
     )
@@ -901,7 +902,7 @@ def _q104_avc1_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     docs = fan_out(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_table(spark, sf_dir, "documents")
         .select("doc_id")
         .filter(F.col("doc_id") < 240)
     )

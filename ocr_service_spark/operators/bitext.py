@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_service_spark.sources.tables import read_table
+
 GC_SKIP = 60  # cost of leaving a paragraph unaligned (1-0 / 0-1)
 GC_MERGE = 8  # surcharge for a 2-1 / 1-2 unit on top of the length residual
 MAX_PARAS = 200  # per-edition paragraph cap: bounds the O(n*m) DP table
@@ -218,7 +220,7 @@ def q166_bitext_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join on the page key, then aligned by the integer-exact DP.
     The oracle replays the planting's expected alignment analytically.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     ds = d.cast("string")
     key = F.format_string("page-%s", ds)

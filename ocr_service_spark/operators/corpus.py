@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ocr_service_spark.functions.hashing import h32, h32_sql
 from ocr_service_spark.plans.parallelism import documents, fan_out
+from ocr_service_spark.sources.tables import read_table
 
 TOKEN_RE = r"\s+"
 
@@ -205,7 +206,7 @@ def q54_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     code_sum 0 in both engines (Spark's F.aggregate returns the init
     value over an empty array, the oracle coalesces DuckDB's NULL
     list_sum([]) to match) with NULL codes and scale params."""
-    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    emb = fan_out(read_table(spark, sf_dir, "embeddings"))
     v = F.transform("embedding", lambda x: x.cast("double"))
     mn = F.array_min(v)
     mx = F.array_max(v)
@@ -605,7 +606,7 @@ def export_jsonl_shards(
     (``shard=K/part-*.json``) and return the READ-BACK DataFrame —
     callers aggregate over what actually landed on storage, never over
     the pre-write plan."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id",
         "text",
         "lang",
@@ -1273,9 +1274,7 @@ ORACLES["q155_fuzzy_contamination"] = f"""
 # groupBy; AQE sizes the join (the distinct side is corpus-derived, so
 # no forced broadcast — the q51/q53 rule).
 def q159_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "source"
-    )
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "source")
     content = F.md5(F.concat(F.lit("payload-"), (F.col("doc_id") % 117).cast("string")))
     pages = docs.select("doc_id", "source", content.alias("content_hash"))
     holders = pages.select(
@@ -1336,9 +1335,7 @@ CALIB_GLOBAL_CUT = 800  # the naive global threshold it replaces
 
 
 def q160_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "source"
-    )
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "source")
     quality = F.pmod(h32(F.col("doc_id").cast("string"), "qual2"), F.lit(1000))
     scored = docs.select(
         "doc_id", "source", quality.cast("bigint").alias("quality")

@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 
 from ocr_service_spark.functions.hashing import h32, h32_sql
 from ocr_service_spark.plans.parallelism import documents
+from ocr_service_spark.sources.tables import read_table
 
 
 # -- exact dedup -----------------------------------------------------------------
@@ -1153,7 +1154,7 @@ def _para_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     50-slot pool by pid = (doc_id*3 + seq) % 50, so every paragraph
     recurs in ~30 documents at sf0.01 and first-occurrence election is
     exercised both within and across documents."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     pool = F.transform(
         F.sequence(F.lit(0), F.lit(2)),
         lambda j: F.format_string(

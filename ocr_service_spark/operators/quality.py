@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_service_spark.plans.parallelism import fan_out
+from ocr_service_spark.sources.tables import read_table
 
 TOKEN_RE = r"\s+"
 
@@ -85,7 +86,7 @@ def q95_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher's seven document-quality rules, one boolean per rule plus
     the combined keep verdict. Pure projection: zero shuffles."""
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .unionByName(
             spark.createDataFrame(
@@ -278,9 +279,7 @@ def q96_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     'javascript'; page keep = >= 5 kept sentences AND no 'lorem ipsum'
     AND no '{'. The kept text is pinned by md5. Map-only projection —
     the higher-order transform/filter run inside codegen, no Python."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     lines = _c4_lines()
     kept = _c4_kept(lines)
     full = F.array_join(lines, "\n")
@@ -407,7 +406,7 @@ def _scored_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern the oracle reconstructs: blocklist path segments
     (doc_id%11==0), deep paths (%19==0), digit-heavy host labels
     (%17==0), spam TLDs (%13==0)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     return docs.select("doc_id", _url_col(F.col("doc_id")).alias("url"))
 
 
@@ -552,7 +551,7 @@ def q112_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document readability: raw word/sentence/syllable counts,
     the scaled FK numerator, and the grade<=8 verdict."""
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .unionByName(
             spark.createDataFrame(
@@ -644,7 +643,7 @@ def q142_serving_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     real text. The oracle replays the planting and the rule — both are
     closed-form — so the marker dialect and precedence are pinned
     cross-engine."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     d = F.col("doc_id")
     title = F.when(
         d % 11 == 1, F.format_string("Error 404 Not Found - /e%s", d.cast("string"))
@@ -736,7 +735,7 @@ def q146_code_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Route planted pages: every 6th doc serves the code snippet, the
     rest their prose text. Signals and the verdict are all integers the
     oracle replays; at 100 TB this rides the scan — zero shuffles."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     d = F.col("doc_id")
     body = F.when(d % 6 == 0, F.lit(_CODE_SNIPPET)).otherwise(F.col("text"))
     pages = docs.select("doc_id", body.alias("body"))
@@ -826,7 +825,7 @@ def _q152_body():
 def q152_repetition_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the battery is compute-bound per doc: fan out (doc_id, text) first
     docs = fan_out(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text"),
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"),
         "doc_id",
     )
     pages = docs.select("doc_id", _q152_body().alias("body"))
@@ -1083,7 +1082,7 @@ def q164_filter_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan out before the battery: the four verdicts cost dozens of
     # regex passes per doc
     docs = fan_out(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .unionByName(
             spark.createDataFrame(

@@ -16,9 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from ocr_service_spark.sources.tables import read_table
 
 
 def cents(col) -> F.Column:
@@ -27,7 +25,7 @@ def cents(col) -> F.Column:
 
 # -- q01: scan + partial-agg groupBy (TPC-H Q1 shape) -----------------------
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -44,10 +42,10 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- q02: multi-join with broadcast dims ------------------------------------
 def q02_revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    orders = read_table(spark, sf_dir, "orders")
+    customer = read_table(spark, sf_dir, "customer")
+    nation = read_table(spark, sf_dir, "nation")
+    region = read_table(spark, sf_dir, "region")
     return (
         orders.join(customer, orders["o_custkey"] == customer["c_custkey"])
         .join(F.broadcast(nation), customer["c_nationkey"] == nation["n_nationkey"])
@@ -63,7 +61,7 @@ def q02_revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- q03: window top-k per group ---------------------------------------------
 def q03_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
     )
@@ -81,7 +79,7 @@ def q03_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- q04: filter + grouped distinct count -------------------------------------
 def q04_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return (
         orders.filter(F.col("o_orderstatus") != "X")
         .groupBy("o_orderpriority")
@@ -94,7 +92,7 @@ def q04_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- q08: grouping sets / rollup ------------------------------------------------
 def q08_rollup_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return (
         orders.rollup("o_orderpriority", "o_orderstatus")
         .agg(
@@ -106,7 +104,7 @@ def q08_rollup_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- q09: set operations (intersect / except) -------------------------------------
 def q09_customer_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     y = F.year("o_orderdate")
     first = orders.filter(y <= 1997).select("o_custkey").distinct()
     second = orders.filter(y >= 1998).select("o_custkey").distinct()
@@ -121,7 +119,7 @@ def q09_customer_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- q05: time bucketing -------------------------------------------------------
 def q05_events_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     return (
         events.groupBy(
             F.date_format("ts", "yyyy-MM-dd").alias("day"),
@@ -139,7 +137,7 @@ SESSION_GAP_S = 1800
 
 
 def q06_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
     new_session = F.when(gap.isNull() | (gap > SESSION_GAP_S), 1).otherwise(0)
@@ -155,7 +153,7 @@ def q06_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- q07: global top-k by aggregate --------------------------------------------
 def q07_top_purchasers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     totals = (
         events.filter(F.col("event_type") == "purchase")
         .groupBy("user_id")
@@ -184,7 +182,7 @@ def q47_salted_hot_key_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts under a skewed key, where every distinct value would
     otherwise ship to the hot key's single reducer). Counts and sums
     reassemble exactly; the oracle is the plain one-phase SQL."""
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     salted = events.withColumn(
         "salt", F.pmod(F.xxhash64("event_id"), F.lit(SALT_BUCKETS))
     )
@@ -207,7 +205,7 @@ def q45_json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the right move is extracting once into a typed column at
     ingest; this query is the probe that the extraction semantics
     match a second engine's JSON parser."""
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("bigint")
     return (
         events.select("event_type", k.alias("k"))

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_service_spark.sources.tables import read_table
+
 RETRIEVAL_TERMS = ("table", "hash", "merge")
 TOP_K = 10
 
@@ -54,7 +56,7 @@ def build_postings(docs: DataFrame, terms: tuple[str, ...] | None = None) -> Dat
 
 
 def _postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     return build_postings(docs, RETRIEVAL_TERMS)
 
 
@@ -172,7 +174,7 @@ def q145_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Docs containing the exact phrase ``PHRASE`` (adjacent tokens, in
     order), ranked by occurrence count desc (doc_id asc tie-break),
     top-k, with the first occurrence position for snippeting."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     p = positional_postings(docs, PHRASE)
     cur = p.filter(F.col("term") == PHRASE[0]).select(
         "doc_id", F.col("pos").alias("start_pos"), F.col("pos").alias("pos")

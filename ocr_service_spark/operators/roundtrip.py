@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ocr_service_spark.operators.extract import extract_documents
 from ocr_service_spark.plans.parallelism import documents, fan_out
+from ocr_service_spark.sources.tables import read_table
 
 
 def _extract_wrapped(docs: DataFrame, fmt: str, ext: str) -> DataFrame:
@@ -317,7 +318,7 @@ def _warc_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan out BY SHARD: each shard's WARC blob (the expensive part)
     # builds in its own task and groupBy("shard") reuses the partitioning
     docs = fan_out(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_table(spark, sf_dir, "documents")
         .select("doc_id")
         .withColumn("shard", F.expr(f"doc_id div {WARC_SHARD_DOCS}")),
         "shard",

@@ -79,6 +79,7 @@ from ocr_service_spark.operators.dedup import (
     posting_pair_structs,
 )
 from ocr_service_spark.plans.parallelism import fan_out
+from ocr_service_spark.sources.tables import read_table
 
 TOPK = 10
 QUERY_VEC_ID = 0
@@ -215,7 +216,7 @@ def _stacked_keys(emb: DataFrame) -> DataFrame:
 
 # -- q20: brute-force cosine top-k --------------------------------------------
 def q20_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet")).withColumn(
+    emb = fan_out(read_table(spark, sf_dir, "embeddings")).withColumn(
         "vec", F.col("embedding").cast("array<double>")
     )
     query = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(F.col("vec").alias("qvec"))
@@ -235,7 +236,7 @@ def q20_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q21: LSH bucket index ------------------------------------------------------
 def q21_lsh_ann_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded SRP-LSH bucket stats: one row per (band, bucket_key)."""
-    stacked = _stacked_keys(fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet")))
+    stacked = _stacked_keys(fan_out(read_table(spark, sf_dir, "embeddings")))
     return stacked.groupBy("band", "bucket_key").agg(
         F.count(F.lit(1)).alias("n_vectors"),
         F.countDistinct("label").alias("n_labels"),
@@ -255,7 +256,7 @@ def q19_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-identical embeddings (boilerplate pages) land in one bucket,
     and an uncapped bucket is a single-task quadratic explode — see
     dedup._cap_bucket for the recall argument."""
-    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet")).select(
+    emb = fan_out(read_table(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     )
     stacked = _stacked_keys(emb.select("vec_id", F.col("vec").alias("embedding")))
@@ -379,7 +380,7 @@ def q24_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF cell stats: one row per centroid cell. The assign is pure
     map-side (IVF_CELLS folds per row); the agg groups into at most
     IVF_CELLS rows — partial-agg combines do nearly all of it."""
-    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet")).select(
+    emb = fan_out(read_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("vec")
     )
     return (
@@ -399,7 +400,7 @@ def q25_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     <=IVF_NPROBE-row DataFrame carrying the query vector, so the prune
     is a broadcast EQUI join on cell (never a nested-loop join) and
     the final top-k is orderBy().limit() = TakeOrderedAndProject."""
-    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet")).select(
+    emb = fan_out(read_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("vec")
     )
     assigned = _with_cell(emb)
@@ -453,7 +454,7 @@ def q46_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-stage filter before exact re-ranking: the packed table is
     16 bytes/vector and the scan is SIMD-friendly bit math, with the
     final top-k planned as TakeOrderedAndProject."""
-    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet")).select(
+    emb = fan_out(read_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("vec")
     )
     packed = emb.select(
@@ -490,7 +491,7 @@ def q85_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     join on ``cell`` (bounded groups — the SemDeDup trick), the
     filter applies to the ROUNDED cosine so both engines cut on
     identical values, and the keeper election is one min-struct agg."""
-    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet")).select(
+    emb = fan_out(read_table(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     )
     assigned = _with_cell(emb).select("vec_id", "vec", "cell")
@@ -548,7 +549,7 @@ def q85_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_neardup_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs scorer — small-n VERIFICATION BASELINE ONLY (O(n^2);
     tests use it to measure q19's LSH recall). Never the scale path."""
-    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet")).select(
+    emb = fan_out(read_table(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     )
     a = emb.select(F.col("vec_id").alias("vec_a"), F.col("vec").alias("va"))
@@ -573,7 +574,7 @@ def _km_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectors as integer codes (round(x*KM_SCALE)): every distance and
     every comparison downstream is integer arithmetic, so assignment is
     bit-stable across engines — no float-sum ordering hazards."""
-    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    emb = fan_out(read_table(spark, sf_dir, "embeddings"))
     return emb.select(
         "vec_id",
         F.transform(

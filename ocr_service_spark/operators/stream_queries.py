@@ -30,6 +30,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_service_spark.sources.tables import read_table
 from ocr_service_spark.streaming.stream_job import (
     SESSION_GAP_MIN,
     stream_user_sessions,
@@ -76,7 +77,7 @@ def q58_stream_extract_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     pages_dir, results_dir, ckpt = f"{base}/pages", f"{base}/results", f"{base}/ckpt"
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     pages = docs.select(
         F.format_string("doc://%s.html", F.col("doc_id").cast("string")).alias("url"),
         F.lit(None).cast("timestamp").alias("warc_ts"),
@@ -132,7 +133,7 @@ def q59_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     events_dir, out_dir, ckpt = f"{base}/events", f"{base}/sessions", f"{base}/ckpt"
 
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").select("user_id", "ts")
+    events = read_table(spark, sf_dir, "events").select("user_id", "ts")
     # ONE file -> one data micro-batch: every gap split happens inline
     # and only each user's final session reaches the state store, so
     # the trailing no-data batch's timeout sweep is the single
@@ -203,7 +204,7 @@ def q163_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_dir, out_dir, ckpt = f"{base}/events", f"{base}/counts", f"{base}/ckpt"
     os.makedirs(events_dir)
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     ontime = docs.select(
         (d % 8).cast("bigint").alias("user_id"),
@@ -344,9 +345,7 @@ def q101_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     in_dir, out_dir, ckpt = f"{base}/docs", f"{base}/dedup", f"{base}/ckpt"
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs.repartition(6).write.parquet(in_dir)
     clones = docs.filter(F.col("doc_id") < STREAM_DUP_CLONES).select(
         (F.col("doc_id") + STREAM_DUP_OFFSET).alias("doc_id"), "text"

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ocr_service_spark.sources.tables import read_table
+
 CONVERSION_WINDOW_US = 3600 * 1_000_000  # 1 hour, integer microseconds
 
 
@@ -43,7 +45,7 @@ def _events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ts is TIMESTAMP_NTZ: timestampdiff is tz-free on NTZ (unix_micros
     # would force a session-timezone cast and diverge from DuckDB's
     # naive epoch_us)
-    return spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    return read_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
         "event_type",
@@ -140,9 +142,7 @@ def q50_running_user_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROWS UNBOUNDED PRECEDING frame. One shuffle on user_id; the frame
     is a single sequential pass within each sorted partition (no
     re-scan per row)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").filter(
-        F.col("event_type") == "purchase"
-    )
+    ev = read_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     sel = ev.select(
         "user_id",
         "event_id",

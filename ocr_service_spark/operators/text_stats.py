@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ocr_service_spark.functions.hashing import h32, h32_sql
 from ocr_service_spark.plans.parallelism import documents
+from ocr_service_spark.sources.tables import read_table
 
 
 TOKEN_RE = r"\s+"
@@ -711,7 +712,7 @@ def q144_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoder over them."""
     import pandas as pd
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     word = F.element_at(F.array(*[F.lit(w) for w in BPE_LEXICON]), (d % 8 + 1).cast("int"))
     words = docs.select("doc_id", word.alias("word"))

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ocr_service_spark.functions.hashing import h32, h32_sql
 from ocr_service_spark.plans.parallelism import documents
+from ocr_service_spark.sources.tables import read_table
 
 # Dialect-portable regexes (same semantics in Java regex and RE2).
 _RE_FRAGMENT = r"#.*$"
@@ -97,7 +98,7 @@ def _messy_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalization hazard appears in a closed-form pattern the
     oracle reconstructs (mixed case, trailing host dot, default and
     explicit ports, duplicate slashes, tracking params, fragments)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     scheme = F.when(d % 2 == 0, F.lit("HTTP")).otherwise(F.lit("https"))
     host = F.concat(
@@ -468,7 +469,7 @@ def q140_crawl_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression of the same BFS, min-depth over all paths of length <=
     BFS_MAX_DEPTH. Depths 0..8 all occur; 37 of the 64 hosts sit
     beyond the horizon and report -1."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     k = (F.col("doc_id") % _BFS_HOSTS).cast("bigint")
     ghost = lambda expr: F.format_string("g%s.test", expr.cast("string"))  # noqa: E731
     e_a = docs.select(ghost(k).alias("src"), ghost((2 * k + 1) % _BFS_HOSTS).alias("dst"))
@@ -571,7 +572,7 @@ def host_skew_report(per_host: DataFrame) -> DataFrame:
 
 
 def q149_host_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     host = F.when(d % 3 == 0, F.lit("h0.big")).otherwise(
         F.format_string("h%s.test", (d % 50).cast("string"))
@@ -598,7 +599,7 @@ def q151_mirror_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per host: docs, docs whose content also lives on ANOTHER host
     (mirrored), docs where this host is the cluster's canonical (min
     host string), and the mirrored share in basis points."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     pages = docs.select(
         "doc_id",
@@ -671,7 +672,7 @@ def q153_text_citations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Planted citations: every 5th doc cites one URL mid-prose (with
     a trailing period to exercise the strip), every 15th a second
     bare-http one. Output: one row per citation in document order."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     d = F.col("doc_id")
     body = F.concat(
         F.col("text"),
@@ -1084,7 +1085,7 @@ def q157_typosquat_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (position 1 + d%5). Output: every edit-1 host pair, oriented victim
     (more docs; tie -> lexicographic smaller) vs squat, with both doc
     counts and the verified distance."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     brand = F.format_string("brand%s.com", (d % 20).cast("string"))
     squat = F.concat(
@@ -1212,7 +1213,7 @@ def _snapshot(spark: SparkSession, sf_dir: str, which: str) -> DataFrame:
     "a" lacks doc_id%11==0 (later "added"), "b" lacks doc_id%13==0
     ("deleted"); docs with doc_id%5==0 change content between the two.
     content_hash is md5 of a closed-form string, identical in DuckDB."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     url = F.concat(
         F.lit("https://site"), (d % 10).cast("string"),
@@ -1286,7 +1287,7 @@ def _fetch_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic fresh-fetch batch: snapshot "b"'s rows plus a
     ``gone`` flag (doc_id%17==0 — fetches that came back 404/410 and
     must DELETE their store row). Mirrors :func:`_snapshot`."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     return docs.filter(d % 13 != 0).select(
         F.concat(
@@ -1433,7 +1434,7 @@ def _robots_corpus(spark: SparkSession, sf_dir: str):
     group for our agent. Paths cycle through six rungs including the
     prefix-subtlety rung /private/pubx (matches /private/ but NOT
     /private/pub/)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     host = F.concat(F.lit("crawl"), (d % 10).cast("string"), F.lit(".example.com"))
     ds = d.cast("string")
@@ -1520,7 +1521,7 @@ def _anchor_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pages whose anchor texts are closed-form: doc d links a news
     host with anchor "breaking story <w4[d%4]>" and a shop host with
     anchor "buy <w3[d%3]> deal"."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     ds = d.cast("string")
     w4 = (
@@ -1667,7 +1668,7 @@ def _redirect_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hops = rung, no table-boundary hazard since doc_id-rung >= 0),
     a self-redirect (%16==8 — the http->https misconfig loop), and an
     off-crawl Location (%16==12). Everything else is a 200."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     r = d % 16
     status = (
@@ -1764,7 +1765,7 @@ def _sitemap_corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
     d%5==0 carry an entity-escaped query string the parser must
     unescape for the join to line up, and every declared entry has a
     closed-form lastmod."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     url = F.concat(
         F.lit("https://cov"), (d % 10).cast("string"), F.lit(".example.com/p/"),
@@ -2400,7 +2401,7 @@ def _capture_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     spellings (scheme case, www prefix, trailing host dot, default
     port, duplicate path slashes, fragments) that all canonicalize to
     the same SURT; the capture timestamp is closed-form in doc_id."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     p = d % 200
     scheme = F.when(d % 2 == 0, F.lit("HTTP")).otherwise(F.lit("https"))
@@ -2505,7 +2506,7 @@ def _host_expr(d: Column) -> Column:
 
 def _blocklist_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic host corpus (see _host_expr)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     return docs.select("doc_id", _host_expr(F.col("doc_id")).alias("host"))
 
 
@@ -2579,9 +2580,7 @@ def q119_host_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the dashboard bit-for-bit."""
     from ocr_service_spark.operators.quality import fk_signals
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     sig = fk_signals(F.col("text"))
     sigs = docs.select(
         "doc_id",
@@ -2798,7 +2797,7 @@ def q132_registrable_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     blogspot.com over com), the implicit-* fallback for an unlisted
     TLD, and a host that IS a suffix (registers nothing). Map-only,
     zero shuffles at any scale (plan pinned in tests)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     ds = d.cast("string")
     host = (
@@ -2897,7 +2896,7 @@ def q134_feed_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     only distractors (hreflang + a text/html AMP alternate) — zero
     rows — and %4==3 pins case/quote robustness (REL/TYPE uppercase,
     single quotes, relative href)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     ds = d.cast("string")
     page_url = F.format_string("http://h%s.example.com/p%s.html", (d % 40).cast("string"), ds)
@@ -3004,7 +3003,7 @@ def q135_sitemap_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolve against) and ordinary allow/disallow noise, %3==2 declares
     none. The group-independence rule is pinned: %3==0's second record
     sits INSIDE a user-agent group and must still be found."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     ds = d.cast("string")
     robots_txt = (
@@ -3218,7 +3217,7 @@ def q137_recrawl_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     points) so the oracle replays them exactly."""
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     k = (d % 4 + 1).cast("bigint")
     snaps = docs.select(
@@ -3329,7 +3328,7 @@ def q138_trap_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the first agg's."""
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     ds = d.cast("string")
     host = F.format_string("t%s.test", (d % 20).cast("string"))

@@ -1,9 +1,10 @@
 """The fan-out rule: one definition of how a compute-bound builder gets
 its task count.
 
-Every corpus table (``documents.parquet``, ``embeddings.parquet``) lands
-as ONE small parquet file, i.e. one input split, so a map-only plan over
-a scan runs on a single task however many cores the cluster has. A
+Every corpus table (``documents.parquet``, ``embeddings.parquet``, read
+through ``sources.tables.read_table``) lands as ONE small parquet file,
+i.e. one input split, so a map-only plan over a scan runs on a single
+task however many cores the cluster has. A
 builder whose per-row work is expensive (regex batteries, page or media
 synthesis feeding a real parser, hashing, vector kernels) therefore
 spreads its input to ``defaultParallelism`` tasks first.
@@ -32,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from ocr_service_spark.sources.tables import read_table
+
 
 def fan_out_width(spark: SparkSession) -> int:
     """The task count ``fan_out`` spreads to: ``defaultParallelism``."""
@@ -49,5 +52,5 @@ def documents(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
     """The documents table, narrowed to ``cols`` when any are given,
     fanned out. The projection runs before the exchange, so only the
     selected columns are shuffled."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return fan_out(docs.select(*cols) if cols else docs)

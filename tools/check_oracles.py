@@ -22,10 +22,6 @@ import duckdb
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
 
 def main() -> int:
     argv = sys.argv[1:]
@@ -53,6 +49,7 @@ def main() -> int:
 
     import __spark_entry__ as em
     from ocr_service_spark.sources.pages import REFERENCE_DOCS
+    from ocr_service_spark.sources.tables import SCHEMAS
 
     qs, oracles = em.queries(), em.oracle_sql()
     # without the reference checkout q40/q43 cannot run, and q41/q42 run
@@ -60,7 +57,7 @@ def main() -> int:
     # their mismatches are listed apart (REF), not as failures
     unchecked = set() if REFERENCE_DOCS.is_dir() else em.REFERENCE_EXPECTED
     con = duckdb.connect()
-    for t in TABLES:
+    for t in SCHEMAS:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     failed = []

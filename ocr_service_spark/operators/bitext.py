@@ -30,7 +30,7 @@ planting):
 
 Scale shape: the edition pairing is ONE equi-join on the page key
 (AQE-sized, never forced broadcast — the q51/q53 rule); the DP runs
-inside an Arrow-batched mapInPandas whose output is capped by
+inside one per-row ``map_rows`` stage whose output is capped by
 MAX_PARAS per pair. No n^2 anything: candidate pairs come from the
 hreflang key, never from content comparison.
 """
@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_service_spark.plans.rows import map_rows
 from ocr_service_spark.sources.tables import read_table
 
 GC_SKIP = 60  # cost of leaving a paragraph unaligned (1-0 / 0-1)
@@ -138,39 +139,21 @@ def align_editions(
     len_a / len_b carry the aligned paragraphs' character counts (-1
     on the skipped side) so downstream filters can drop high-residual
     units without re-reading the text."""
-    import pandas as pd
 
-    def run(batches):
-        for batch in batches:
-            rows: dict[str, list] = {
-                "page_key": [], "a_idx": [], "b_idx": [], "op": [],
-                "len_a": [], "len_b": [],
-            }
-            for key, ta, tb in zip(
-                batch[key_col], batch[text_a_col], batch[text_b_col]
-            ):
-                pa = (ta or "").split("\n\n")[:MAX_PARAS]
-                pb = (tb or "").split("\n\n")[:MAX_PARAS]
-                la = [len(p) for p in pa]
-                lb = [len(p) for p in pb]
-                for ai, bi, op in align_paragraph_lengths(la, lb):
-                    rows["page_key"].append(key)
-                    rows["a_idx"].append(ai)
-                    rows["b_idx"].append(bi)
-                    rows["op"].append(op)
-                    rows["len_a"].append(la[ai] if ai >= 0 else -1)
-                    rows["len_b"].append(lb[bi] if bi >= 0 else -1)
-            df = pd.DataFrame(rows)
-            for c in ("a_idx", "b_idx", "len_a", "len_b"):
-                df[c] = df[c].astype("int32")
-            yield df
+    def align(key, ta, tb):
+        la = [len(p) for p in (ta or "").split("\n\n")[:MAX_PARAS]]
+        lb = [len(p) for p in (tb or "").split("\n\n")[:MAX_PARAS]]
+        return [
+            (key, ai, bi, op, la[ai] if ai >= 0 else -1, lb[bi] if bi >= 0 else -1)
+            for ai, bi, op in align_paragraph_lengths(la, lb)
+        ]
 
     narrowed = pairs.select(
         F.col(key_col).alias("page_key"),
         F.col(text_a_col).alias(text_a_col),
         F.col(text_b_col).alias(text_b_col),
     )
-    return narrowed.mapInPandas(run, schema=ALIGN_SCHEMA)
+    return map_rows(narrowed, align, ALIGN_SCHEMA)
 
 
 def _edition_paragraphs(ds, d, side: str):

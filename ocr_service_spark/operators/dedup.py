@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 
 from ocr_service_spark.functions.hashing import h32, h32_sql
 from ocr_service_spark.plans.parallelism import documents
+from ocr_service_spark.plans.rows import map_rows
 from ocr_service_spark.sources.tables import read_table
 
 
@@ -239,7 +240,7 @@ def _batch_docs(docs: DataFrame) -> DataFrame:
 def _shingle_sigs(docs: DataFrame) -> DataFrame:
     """(doc_id, mh0..mhN): q34's shingle-MinHash signature.
 
-    Computed in ONE Arrow-batched map stage instead of the shingle
+    Computed in ONE per-row ``map_rows`` stage instead of the shingle
     explode + 16 per-row md5/hex/conv Catalyst expressions + groupBy:
     the explode multiplied every doc into ~50 rows only so a hash-agg
     could take 16 mins per doc, and each of those rows paid 16
@@ -255,39 +256,23 @@ def _shingle_sigs(docs: DataFrame) -> DataFrame:
     import re
     from hashlib import md5
 
-    import pandas as pd
-
     seeds = [s.encode("utf-8") for s in MINHASH_SEEDS]
     n = len(seeds)
     schema = "doc_id bigint, " + ", ".join(f"mh{i} bigint" for i in range(n))
     ws = re.compile(r"\s+", re.ASCII)
 
-    def gen(batches):
-        for pdf in batches:
-            ids = []
-            mh = [[] for _ in range(n)]
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w = ws.split((text or "").strip(" "))
-                if len(w) < 3:
-                    continue
-                sh = {
-                    (w[i] + " " + w[i + 1] + " " + w[i + 2]).encode("utf-8")
-                    for i in range(len(w) - 2)
-                }
-                ids.append(doc_id)
-                for k, seed in enumerate(seeds):
-                    mh[k].append(
-                        min(
-                            int.from_bytes(md5(seed + s).digest()[:4], "big")
-                            for s in sh
-                        )
-                    )
-            out = {"doc_id": pd.Series(ids, dtype="int64")}
-            for k in range(n):
-                out[f"mh{k}"] = pd.Series(mh[k], dtype="int64")
-            yield pd.DataFrame(out)
+    def signature(doc_id, text):
+        w = ws.split((text or "").strip(" "))
+        if len(w) < 3:
+            return []
+        sh = {
+            (w[i] + " " + w[i + 1] + " " + w[i + 2]).encode("utf-8")
+            for i in range(len(w) - 2)
+        }
+        mins = (min(int.from_bytes(md5(seed + s).digest()[:4], "big") for s in sh) for seed in seeds)
+        return [(doc_id, *mins)]
 
-    return docs.select("doc_id", "text").mapInPandas(gen, schema)
+    return map_rows(docs.select("doc_id", "text"), signature, schema)
 
 
 def q90_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:

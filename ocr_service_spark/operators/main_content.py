@@ -1,8 +1,8 @@
 """Main-content extraction operator (block text-density boilerplate
 strip) + its oracle-checked roundtrip query.
 
-The Spark stage is one Arrow-batched mapInPandas over (url, payload) —
-zero shuffles, column-pruned scan, identical shape to the extraction
+The Spark stage is one per-row Python stage (``plans/rows.py::map_rows``)
+over (url, payload) — zero shuffles, column-pruned scan, identical shape to the extraction
 job's single-pass branch. q35 proves the semantics end-to-end: each
 ``documents.text`` is wrapped into a page FULL of boilerplate (nav,
 link sidebar, footer) around one real paragraph; the stripper must
@@ -12,14 +12,12 @@ the whole stage.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_service_spark.extraction.main_content import MIN_BLOCK_CHARS
 from ocr_service_spark.plans.parallelism import documents
+from ocr_service_spark.plans.rows import map_rows
 
 MAIN_SCHEMA = "url string, main_text string, n_kept bigint"
 
@@ -27,22 +25,14 @@ MAIN_SCHEMA = "url string, main_text string, n_kept bigint"
 def extract_main_text(pages: DataFrame, payload_col: str = "html") -> DataFrame:
     """pages(url, <payload_col> binary) -> (url, main_text, n_kept)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def main_text(url, payload):
         from ocr_service_spark.extraction.main_content import extract_main_content
 
-        for batch in batches:
-            urls, texts, kept = [], [], []
-            for url, payload in zip(batch["url"], batch["payload"]):
-                text, n_kept, _ = (
-                    ("", 0, 0) if payload is None else extract_main_content(bytes(payload))
-                )
-                urls.append(url)
-                texts.append(text)
-                kept.append(n_kept)
-            yield pd.DataFrame({"url": urls, "main_text": texts, "n_kept": kept})
+        text, n_kept, _ = ("", 0, 0) if payload is None else extract_main_content(bytes(payload))
+        return [(url, text, n_kept)]
 
     narrowed = pages.select("url", F.col(payload_col).alias("payload"))
-    return narrowed.mapInPandas(run, schema=MAIN_SCHEMA)
+    return map_rows(narrowed, main_text, MAIN_SCHEMA)
 
 
 # boilerplate-heavy page template around one real paragraph (%s)
@@ -71,38 +61,21 @@ def extract_content_span_table(pages: DataFrame, payload_col: str = "html") -> D
     ("matching the reference's extracted text/spans per document"):
     char_start/char_end are offsets into the decoded page source, so a
     downstream consumer can slice the original bytes without re-parsing.
-    Same 100 TB shape as extract_main_text: one Arrow-batched
-    mapInPandas, zero shuffles, column-pruned scan; the explode happens
-    inside the UDF (a page yields its kept blocks), so no Spark-side
+    Same 100 TB shape as extract_main_text: one ``map_rows`` stage,
+    zero shuffles, column-pruned scan; the explode happens inside the
+    stage (a page yields its kept blocks), so no Spark-side
     explode/re-agg is needed.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def spans(url, payload):
         from ocr_service_spark.extraction.main_content import extract_content_spans
 
-        for batch in batches:
-            urls, idxs, starts, ends, texts = [], [], [], [], []
-            for url, payload in zip(batch["url"], batch["payload"]):
-                if payload is None:
-                    continue
-                for idx, s, e, text in extract_content_spans(bytes(payload)):
-                    urls.append(url)
-                    idxs.append(idx)
-                    starts.append(s)
-                    ends.append(e)
-                    texts.append(text)
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "block_idx": pd.Series(idxs, dtype="int64"),
-                    "char_start": pd.Series(starts, dtype="int64"),
-                    "char_end": pd.Series(ends, dtype="int64"),
-                    "span_text": texts,
-                }
-            )
+        if payload is None:
+            return []
+        return [(url, *span) for span in extract_content_spans(bytes(payload))]
 
     narrowed = pages.select("url", F.col(payload_col).alias("payload"))
-    return narrowed.mapInPandas(run, schema=SPAN_SCHEMA)
+    return map_rows(narrowed, spans, SPAN_SCHEMA)
 
 
 def q35_main_content_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,8 +3,8 @@
 The structured-text tier: where the reference service flattens a page
 to plain text (converter.py:70-106), modern LLM corpora keep the
 page's *structure* — headings, lists, links, code — as Markdown. The
-Spark stage is one Arrow-batched ``mapInPandas`` over (url, payload):
-zero shuffles, column-pruned scan, the same single-pass branch shape
+Spark stage is one per-row Python stage (``plans/rows.py::map_rows``)
+over (url, payload): zero shuffles, column-pruned scan, the same single-pass branch shape
 as the extraction job's T1 path, so it composes with the WARC/fixture
 sources unchanged.
 
@@ -22,13 +22,11 @@ extract_main_text (operators/main_content.py).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_service_spark.plans.parallelism import documents
+from ocr_service_spark.plans.rows import map_rows
 
 MD_SCHEMA = "url string, markdown string, n_blocks bigint"
 
@@ -36,26 +34,14 @@ MD_SCHEMA = "url string, markdown string, n_blocks bigint"
 def html_to_markdown_table(pages: DataFrame, payload_col: str = "html") -> DataFrame:
     """pages(url, <payload_col> binary) -> (url, markdown, n_blocks)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def markdown(url, payload):
         from ocr_service_spark.extraction.markdown import html_to_markdown_blocks
 
-        for batch in batches:
-            urls, mds, counts = [], [], []
-            for url, payload in zip(batch["url"], batch["payload"]):
-                blocks = [] if payload is None else html_to_markdown_blocks(bytes(payload))
-                urls.append(url)
-                mds.append("\n\n".join(blocks))
-                counts.append(len(blocks))
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "markdown": mds,
-                    "n_blocks": pd.Series(counts, dtype="int64"),
-                }
-            )
+        blocks = [] if payload is None else html_to_markdown_blocks(bytes(payload))
+        return [(url, "\n\n".join(blocks), len(blocks))]
 
     narrowed = pages.select("url", F.col(payload_col).alias("payload"))
-    return narrowed.mapInPandas(run, schema=MD_SCHEMA)
+    return map_rows(narrowed, markdown, MD_SCHEMA)
 
 
 # Fixture page: every pinned dialect rule, parameterized by doc_id so

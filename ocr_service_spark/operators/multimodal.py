@@ -1,8 +1,8 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Image/audio/video payloads are carried as ``binary`` columns with a
-typed metadata struct, processed by Arrow-batched ``mapInPandas``
-stages — identical plumbing to the text-extraction operator, so the
+typed metadata struct, processed by per-row Python stages
+(``plans/rows.py::map_rows``) — identical plumbing to the text-extraction operator, so the
 same partitioning/skew machinery applies.
 
 Decode reality by format (`_decode`):
@@ -27,11 +27,11 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ocr_service_spark.plans.rows import map_rows
 
 MEDIA_FEATURES_SCHEMA = (
     "url string, media_type string, width int, height int, n_frames int, "
@@ -373,76 +373,39 @@ def sample_frames(
     from ocr_service_spark.extraction.image_codecs import gif_frames
     from ocr_service_spark.extraction.mp4_codec import mp4_frames
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["url", "frame_no", "frame_ts", "width", "height", "frame_hash", "pixel_sum"]
-        for batch in batches:
-            rows = []
-            for url, payload in zip(batch["url"], batch["payload"]):
-                if payload is None:
-                    continue
-                payload = bytes(payload)
+    def luma_hash(luma: bytes) -> str:
+        return hashlib.sha256(luma).hexdigest()[:16]
 
-                def emit(frame_no: int, width: int, height: int,
-                         digest: str, pixel_sum: int | None) -> None:
-                    rows.append(
-                        {
-                            "url": url,
-                            "frame_no": frame_no,
-                            "frame_ts": round(frame_no / fps, 3),
-                            "width": width,
-                            "height": height,
-                            "frame_hash": digest,
-                            "pixel_sum": pixel_sum,
-                        }
-                    )
-
-                if payload[:6] in (b"GIF87a", b"GIF89a"):
-                    for frame_no, (fw, fh, luma) in enumerate(
-                        gif_frames(payload, max_frames)
-                    ):
-                        emit(frame_no, fw, fh,
-                             hashlib.sha256(luma).hexdigest()[:16], sum(luma))
-                    continue
-                if payload[4:8] == b"ftyp":
-                    decoded_mp4 = mp4_frames(payload, max_frames)
-                    if decoded_mp4:
-                        for frame_no, (fw, fh, luma, ts) in enumerate(decoded_mp4):
-                            rows.append(
-                                {
-                                    "url": url,
-                                    "frame_no": frame_no,
-                                    "frame_ts": ts,  # real media-timescale ts
-                                    "width": fw,
-                                    "height": fh,
-                                    "frame_hash": hashlib.sha256(luma).hexdigest()[:16],
-                                    "pixel_sum": sum(luma),
-                                }
-                            )
-                        continue
-                decoded = decode_image_luma(payload)
-                if decoded is not None:
-                    fw, fh, luma = decoded
-                    emit(0, fw, fh, hashlib.sha256(luma).hexdigest()[:16], sum(luma))
-                    continue
-                meta = _fake_decode(payload)
-                for frame_no in range(min(meta["n_frames"], max_frames)):
-                    emit(
-                        frame_no, meta["width"], meta["height"],
-                        hashlib.sha256(
-                            payload[:64] + frame_no.to_bytes(4, "big")
-                        ).hexdigest()[:16],
-                        None,
-                    )
-            frame = pd.DataFrame(rows, columns=cols)
-            if len(frame):
-                frame["frame_no"] = frame["frame_no"].astype("int32")
-                frame["width"] = frame["width"].astype("int32")
-                frame["height"] = frame["height"].astype("int32")
-                frame["pixel_sum"] = frame["pixel_sum"].astype("Int64")
-            yield frame
+    def frames(url, payload):
+        if payload is None:
+            return
+        payload = bytes(payload)
+        if payload[:6] in (b"GIF87a", b"GIF89a"):
+            for frame_no, (fw, fh, luma) in enumerate(gif_frames(payload, max_frames)):
+                yield url, frame_no, round(frame_no / fps, 3), fw, fh, luma_hash(luma), sum(luma)
+            return
+        if payload[4:8] == b"ftyp":
+            decoded_mp4 = mp4_frames(payload, max_frames)
+            if decoded_mp4:
+                # real media-timescale timestamps
+                for frame_no, (fw, fh, luma, ts) in enumerate(decoded_mp4):
+                    yield url, frame_no, ts, fw, fh, luma_hash(luma), sum(luma)
+                return
+        decoded = decode_image_luma(payload)
+        if decoded is not None:
+            fw, fh, luma = decoded
+            yield url, 0, round(0 / fps, 3), fw, fh, luma_hash(luma), sum(luma)
+            return
+        meta = _fake_decode(payload)
+        for frame_no in range(min(meta["n_frames"], max_frames)):
+            digest = luma_hash(payload[:64] + frame_no.to_bytes(4, "big"))
+            yield (
+                url, frame_no, round(frame_no / fps, 3), meta["width"], meta["height"], digest,
+                None,
+            )
 
     narrowed = df.select("url", F.col(payload_col).alias("payload"))
-    return narrowed.mapInPandas(run, schema=FRAME_SCHEMA)
+    return map_rows(narrowed, frames, FRAME_SCHEMA)
 
 
 def resize_images(
@@ -456,37 +419,19 @@ def resize_images(
     from ocr_service_spark.extraction.image_codecs import box_resize_luma, decode_image_luma
     from ocr_service_spark.extraction.png_codec import encode_png_gray
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for url, payload in zip(batch["url"], batch["payload"]):
-                if payload is None:
-                    continue
-                payload = bytes(payload)
-                decoded = decode_image_luma(payload)
-                if decoded is None:
-                    rows.append(
-                        {"url": url, "resized": payload, "width": None, "height": None}
-                    )
-                    continue
-                w, h, luma = decoded
-                out = box_resize_luma(w, h, luma, target[0], target[1])
-                rows.append(
-                    {
-                        "url": url,
-                        "resized": encode_png_gray(target[0], target[1], out),
-                        "width": target[0],
-                        "height": target[1],
-                    }
-                )
-            frame = pd.DataFrame(rows, columns=["url", "resized", "width", "height"])
-            if len(frame):
-                frame["width"] = frame["width"].astype("Int32")
-                frame["height"] = frame["height"].astype("Int32")
-            yield frame
+    def resize(url, payload):
+        if payload is None:
+            return []
+        payload = bytes(payload)
+        decoded = decode_image_luma(payload)
+        if decoded is None:
+            return [(url, payload, None, None)]
+        w, h, luma = decoded
+        out = box_resize_luma(w, h, luma, target[0], target[1])
+        return [(url, encode_png_gray(target[0], target[1], out), target[0], target[1])]
 
     narrowed = df.select("url", F.col(payload_col).alias("payload"))
-    return narrowed.mapInPandas(run, schema="url string, resized binary, width int, height int")
+    return map_rows(narrowed, resize, "url string, resized binary, width int, height int")
 
 
 # -- image perceptual-hash dedup (dHash + banded Hamming join) ----------------
@@ -540,22 +485,17 @@ def image_phash(df: DataFrame, payload_col: str = "html") -> DataFrame:
     success, the resize_images convention)."""
     from ocr_service_spark.extraction.image_codecs import decode_image_luma
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for img_id, payload in zip(batch["img_id"], batch["payload"]):
-                decoded = None if payload is None else decode_image_luma(bytes(payload))
-                if decoded is None:
-                    continue
-                w, h, luma = decoded
-                if w < PHASH_GRID_COLS or h < PHASH_GRID_ROWS:
-                    continue
-                w0, w1 = dhash_words(w, h, luma)
-                rows.append({"img_id": int(img_id), "w0": w0, "w1": w1})
-            yield pd.DataFrame(rows, columns=["img_id", "w0", "w1"])
+    def phash(img_id, payload):
+        decoded = None if payload is None else decode_image_luma(bytes(payload))
+        if decoded is None:
+            return []
+        w, h, luma = decoded
+        if w < PHASH_GRID_COLS or h < PHASH_GRID_ROWS:
+            return []
+        return [(int(img_id), *dhash_words(w, h, luma))]
 
     narrowed = df.select("img_id", F.col(payload_col).alias("payload"))
-    return narrowed.mapInPandas(run, schema="img_id bigint, w0 bigint, w1 bigint")
+    return map_rows(narrowed, phash, "img_id bigint, w0 bigint, w1 bigint")
 
 
 def phash_neardup_pairs(hashed: DataFrame) -> DataFrame:
@@ -661,12 +601,6 @@ def _spectral_features(mono: list[int]) -> dict:
     }
 
 
-_NULL_SPECTRAL = {
-    "energy": None, "zero_crossings": None, "band_dc": None,
-    "band_quarter": None, "band_nyquist": None,
-}
-
-
 def extract_audio_features(df: DataFrame, payload_col: str = "html") -> DataFrame:
     """(url, binary) -> typed audio metadata + spectral features. The
     container fields are a REAL RIFF/WAVE parse and the spectral
@@ -674,75 +608,44 @@ def extract_audio_features(df: DataFrame, payload_col: str = "html") -> DataFram
     bins, _spectral_features); non-audio payloads pass through with
     nulls."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "url", "media_type", "sample_rate", "channels", "bits",
-            "n_samples", "duration_s", "feature_hash",
-            "energy", "zero_crossings", "band_dc", "band_quarter", "band_nyquist",
-        ]
-        for batch in batches:
-            rows = []
-            for url, payload in zip(batch["url"], batch["payload"]):
-                if payload is None:
-                    continue
-                payload = bytes(payload)
-                info = _wav_info(payload)
-                if info:
-                    # content hash of the PCM data (container-independent)
-                    off, size = info.pop("_data_span")
-                    digest = hashlib.sha256(payload[off : off + size]).hexdigest()[:16]
-                    spectral = _spectral_features(_pcm_mono(payload, info, off, size))
-                    rows.append({"url": url, "feature_hash": digest, **info, **spectral})
-                else:
-                    rows.append(
-                        {
-                            "url": url,
-                            "media_type": "application/octet-stream",
-                            "sample_rate": None,
-                            "channels": None,
-                            "bits": None,
-                            "n_samples": None,
-                            "duration_s": None,
-                            "feature_hash": hashlib.sha256(payload).hexdigest()[:16],
-                            **_NULL_SPECTRAL,
-                        }
-                    )
-            frame = pd.DataFrame(rows, columns=cols)
-            if len(frame):
-                for c in ("sample_rate", "channels", "bits"):
-                    frame[c] = frame[c].astype("Int32")
-                for c in ("n_samples", "energy", "zero_crossings", "band_dc",
-                          "band_quarter", "band_nyquist"):
-                    frame[c] = frame[c].astype("Int64")
-            yield frame
+    cols = [
+        "url", "media_type", "sample_rate", "channels", "bits",
+        "n_samples", "duration_s", "feature_hash",
+        "energy", "zero_crossings", "band_dc", "band_quarter", "band_nyquist",
+    ]
+
+    def audio(url, payload):
+        if payload is None:
+            return []
+        payload = bytes(payload)
+        info = _wav_info(payload)
+        if info:
+            # content hash of the PCM data (container-independent)
+            off, size = info.pop("_data_span")
+            digest = hashlib.sha256(payload[off : off + size]).hexdigest()[:16]
+            spectral = _spectral_features(_pcm_mono(payload, info, off, size))
+            row = {"url": url, "feature_hash": digest, **info, **spectral}
+        else:
+            row = {
+                "url": url,
+                "media_type": "application/octet-stream",
+                "feature_hash": hashlib.sha256(payload).hexdigest()[:16],
+            }
+        return [tuple(row.get(c) for c in cols)]
 
     narrowed = df.select("url", F.col(payload_col).alias("payload"))
-    return narrowed.mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
+    return map_rows(narrowed, audio, AUDIO_FEATURES_SCHEMA)
 
 
 def extract_media_features(df: DataFrame, payload_col: str = "html") -> DataFrame:
-    """(url, binary) -> typed media features via Arrow batches."""
+    """(url, binary) -> typed media features, one row per payload."""
+    cols = ["media_type", "width", "height", "n_frames", "feature_hash", "feature_vec"]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for url, payload in zip(batch["url"], batch["payload"]):
-                if payload is None:
-                    continue
-                row = {"url": url, **_fake_decode(bytes(payload))}
-                rows.append(row)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "url",
-                    "media_type",
-                    "width",
-                    "height",
-                    "n_frames",
-                    "feature_hash",
-                    "feature_vec",
-                ],
-            )
+    def features(url, payload):
+        if payload is None:
+            return []
+        meta = _fake_decode(bytes(payload))
+        return [(url, *(meta[c] for c in cols))]
 
     narrowed = df.select("url", F.col(payload_col).alias("payload"))
-    return narrowed.mapInPandas(run, schema=MEDIA_FEATURES_SCHEMA)
+    return map_rows(narrowed, features, MEDIA_FEATURES_SCHEMA)

@@ -5,7 +5,7 @@ concatenates results in submission order with a mean confidence
 (ocr_engine.py:43-81). Here the shuffle IS the pool:
 
     (url, page_no, png) rows
-      -> mapInPandas: executor-singleton engine, one recognition per row
+      -> map_rows: executor-singleton engine, one recognition per row
       -> groupBy(url): ordered concat (array_sort over (page_no, text)),
          pages = count, confidence = round(avg, 4)   [ocr_engine.py:80-81]
 
@@ -15,13 +15,10 @@ reference's ``imap_unordered`` completion-order quirk (SURVEY §2.3 C4).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ocr_service_spark.plans.session import drop_zip_finders
+from ocr_service_spark.plans.rows import map_rows
 
 _PAGE_OCR_SCHEMA = "url string, page_no int, text string, confidence double"
 
@@ -29,29 +26,13 @@ _PAGE_OCR_SCHEMA = "url string, page_no int, text string, confidence double"
 def ocr_pages(page_images: DataFrame) -> DataFrame:
     """(url, page_no, png binary) -> per-page (text, confidence)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
+    def recognize(url, page_no, png):
         from ocr_service_spark.extraction.ocr_engine import get_engine
 
-        engine = get_engine()  # executor singleton (O1)
-        for batch in batches:
-            texts, confs = [], []
-            for png in batch["png"]:
-                text, conf = engine.recognize(bytes(png))
-                texts.append(text)
-                confs.append(conf)
-            yield pd.DataFrame(
-                {
-                    "url": batch["url"],
-                    "page_no": batch["page_no"].astype("int32"),
-                    "text": texts,
-                    "confidence": confs,
-                }
-            )
+        text, conf = get_engine().recognize(bytes(png))  # executor singleton (O1)
+        return [(url, page_no, text, conf)]
 
-    return page_images.select("url", "page_no", "png").mapInPandas(
-        run, schema=_PAGE_OCR_SCHEMA
-    )
+    return map_rows(page_images.select("url", "page_no", "png"), recognize, _PAGE_OCR_SCHEMA)
 
 
 def collect_ocr_documents(page_ocr: DataFrame) -> DataFrame:

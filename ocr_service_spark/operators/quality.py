@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_service_spark.plans.parallelism import fan_out
+from ocr_service_spark.plans.rows import map_rows
 from ocr_service_spark.sources.tables import read_table
 
 TOKEN_RE = r"\s+"
@@ -830,85 +831,57 @@ def q152_repetition_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pages = docs.select("doc_id", _q152_body().alias("body"))
 
-    # One Arrow-batched mapInPandas stage computes the whole battery per
-    # doc (guide §4.2): the former pure-Catalyst shape paid ~5 ms/doc of
+    # One per-row Python stage computes the whole battery per doc (guide
+    # §4.2): the former pure-Catalyst shape paid ~5 ms/doc of
     # interpreted expression evaluation (three array_sort + F.aggregate
     # struct-folds plus two per-line folds); a per-width Counter costs
     # ~0.1 ms/doc. Still a per-document statistic: zero gram shuffles —
     # the only exchange is the fan-out repartition above.
-    def battery(batches):
-        # Exact Python twin of the former Catalyst expressions (and of
-        # the unchanged DuckDB oracle): Java-regex \s is the ASCII class
-        # [ \t\n\x0B\f\r]; the run tie-break (first maximal run of the
-        # sorted gram array = lexicographically smallest top gram) is
-        # min() over the max-count grams, identical because UTF-8 byte
-        # order equals codepoint order; every `div` is a nonnegative
-        # integer division == Python //.
-        import re
-        from collections import Counter
+    #
+    # Exact Python twin of the former Catalyst expressions (and of the
+    # unchanged DuckDB oracle): Java-regex \s is the ASCII class
+    # [ \t\n\x0B\f\r]; the run tie-break (first maximal run of the
+    # sorted gram array = lexicographically smallest top gram) is min()
+    # over the max-count grams, identical because UTF-8 byte order
+    # equals codepoint order; every `div` is a nonnegative integer
+    # division == Python //.
+    import re
+    from collections import Counter
 
-        import pandas as pd
+    ws_split = re.compile("[ \t\n\x0b\x0c\r]+").split
+    ws_del = {ord(c): None for c in " \t\n\x0b\x0c\r"}
 
-        ws_split = re.compile("[ \t\n\x0b\x0c\r]+").split
-        ws_del = {ord(c): None for c in " \t\n\x0b\x0c\r"}
-        for pdf in batches:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["body"]):
-                lines = b.split("\n")
-                n_lines = len(lines)
-                dist = set(lines)
-                lchars = sum(map(len, lines))
-                dchars = sum(map(len, dist))
-                dup_line_frac_bp = (n_lines - len(dist)) * 10000 // n_lines
-                dup_line_char_bp = (lchars - dchars) * 10000 // max(lchars, 1)
-                nonws = len(b.translate(ws_del))
-                toks = ws_split(b)
-                bps = []
-                for w in REP_TOP_BP:
-                    if len(toks) >= w:
-                        cnt = Counter(
-                            " ".join(toks[i : i + w])
-                            for i in range(len(toks) - w + 1)
-                        )
-                        best_cnt = max(cnt.values())
-                        best_gram = min(
-                            g for g, c in cnt.items() if c == best_cnt
-                        )
-                        chars = best_cnt * len(best_gram.translate(ws_del))
-                    else:
-                        chars = 0
-                    bps.append(chars * 10000 // max(nonws, 1))
-                rows.append(
-                    (
-                        doc_id,
-                        n_lines,
-                        dup_line_frac_bp,
-                        dup_line_char_bp,
-                        bps[0],
-                        bps[1],
-                        bps[2],
-                        dup_line_frac_bp > REP_LINE_FRAC_BP
-                        or dup_line_char_bp > REP_LINE_CHAR_BP
-                        or bps[0] > REP_TOP_BP[2]
-                        or bps[1] > REP_TOP_BP[3]
-                        or bps[2] > REP_TOP_BP[4],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_lines",
-                    "dup_line_frac_bp",
-                    "dup_line_char_bp",
-                    "top2gram_bp",
-                    "top3gram_bp",
-                    "top4gram_bp",
-                    "repetitive",
-                ],
-            )
+    def battery(doc_id, b):
+        lines = b.split("\n")
+        n_lines = len(lines)
+        dist = set(lines)
+        lchars = sum(map(len, lines))
+        dchars = sum(map(len, dist))
+        dup_line_frac_bp = (n_lines - len(dist)) * 10000 // n_lines
+        dup_line_char_bp = (lchars - dchars) * 10000 // max(lchars, 1)
+        nonws = len(b.translate(ws_del))
+        toks = ws_split(b)
+        bps = []
+        for w in REP_TOP_BP:
+            if len(toks) >= w:
+                cnt = Counter(" ".join(toks[i : i + w]) for i in range(len(toks) - w + 1))
+                best_cnt = max(cnt.values())
+                best_gram = min(g for g, c in cnt.items() if c == best_cnt)
+                chars = best_cnt * len(best_gram.translate(ws_del))
+            else:
+                chars = 0
+            bps.append(chars * 10000 // max(nonws, 1))
+        repetitive = (
+            dup_line_frac_bp > REP_LINE_FRAC_BP
+            or dup_line_char_bp > REP_LINE_CHAR_BP
+            or bps[0] > REP_TOP_BP[2]
+            or bps[1] > REP_TOP_BP[3]
+            or bps[2] > REP_TOP_BP[4]
+        )
+        return [(doc_id, n_lines, dup_line_frac_bp, dup_line_char_bp, *bps, repetitive)]
 
-    return pages.mapInPandas(
+    return map_rows(
+        pages,
         battery,
         "doc_id bigint, n_lines bigint, dup_line_frac_bp bigint, "
         "dup_line_char_bp bigint, top2gram_bp bigint, top3gram_bp bigint, "

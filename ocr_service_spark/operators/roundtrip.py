@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ocr_service_spark.operators.extract import extract_documents
 from ocr_service_spark.plans.parallelism import documents, fan_out
+from ocr_service_spark.plans.rows import map_rows
 from ocr_service_spark.sources.tables import read_table
 
 
@@ -130,23 +131,15 @@ def q62_charset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     full ladder. Beyond the reference (which decodes everything as
     UTF-8 via bs4, converter.py:70-106) — this is the web-corpus
     reality of a Common-Crawl-style pages table."""
-    import pandas as pd
-
     docs = documents(spark, sf_dir, "doc_id", "text")
 
-    def gen(batches):
-        for batch in batches:
-            rows = []
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                i = int(doc_id)
-                codec, bom, decl, phrase = CS_RUNGS[i % 6]
-                page = _CS_HTML_FMT % (decl, f"{phrase} {text}")
-                rows.append(
-                    {"url": f"doc://{i}.html", "html": bom + page.encode(codec)}
-                )
-            yield pd.DataFrame(rows, columns=["url", "html"])
+    def page(doc_id, text):
+        i = int(doc_id)
+        codec, bom, decl, phrase = CS_RUNGS[i % 6]
+        html = _CS_HTML_FMT % (decl, f"{phrase} {text}")
+        return [(f"doc://{i}.html", bom + html.encode(codec))]
 
-    pages = docs.mapInPandas(gen, schema="url string, html binary")
+    pages = map_rows(docs, page, "url string, html binary")
     results = extract_documents(pages)
     doc_id = F.regexp_extract("url", r"doc://(\d+)\.", 1).cast("bigint")
     return results.select(
@@ -172,30 +165,24 @@ def q66_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import gzip as _gzip
     import zlib as _zlib
 
-    import pandas as pd
-
     docs = documents(spark, sf_dir, "doc_id", "text")
     fmt = "<!DOCTYPE html>\n<html><head><title>t</title></head><body><p>%s</p></body></html>"
 
-    def gen(batches):
-        for batch in batches:
-            rows = []
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                i = int(doc_id)
-                page = (fmt % text).encode()
-                rung = i % 4
-                if rung == 0:
-                    payload = _gzip.compress(page, mtime=0)
-                elif rung == 1:
-                    payload = _zlib.compress(page)
-                elif rung == 2:
-                    payload = _gzip.compress(_gzip.compress(page, mtime=0), mtime=0)
-                else:
-                    payload = page
-                rows.append({"url": f"doc://{i}.html", "html": payload})
-            yield pd.DataFrame(rows, columns=["url", "html"])
+    def compressed(doc_id, text):
+        i = int(doc_id)
+        page = (fmt % text).encode()
+        rung = i % 4
+        if rung == 0:
+            payload = _gzip.compress(page, mtime=0)
+        elif rung == 1:
+            payload = _zlib.compress(page)
+        elif rung == 2:
+            payload = _gzip.compress(_gzip.compress(page, mtime=0), mtime=0)
+        else:
+            payload = page
+        return [(f"doc://{i}.html", payload)]
 
-    pages = docs.mapInPandas(gen, schema="url string, html binary")
+    pages = map_rows(docs, compressed, "url string, html binary")
     results = extract_documents(pages)
     doc_id = F.regexp_extract("url", r"doc://(\d+)\.", 1).cast("bigint")
     return results.select(
@@ -256,42 +243,36 @@ def q44_audio_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's (the integer fields derive it anyway)."""
     import struct
 
-    import pandas as pd
-
     from ocr_service_spark.operators.multimodal import extract_audio_features
 
     docs = documents(spark, sf_dir, "doc_id")
 
-    def gen(batches):
-        for batch in batches:
-            rows = []
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                sr = 8000 + (i % 5) * 1000
-                ch = 1 + i % 2
-                n = 100 + i % 50
-                data = struct.pack(
-                    f"<{n * ch}h",
-                    *(((i * 31 + 17 * j) % 512) - 256 for j in range(n * ch)),
-                )
-                fmt = (
-                    b"fmt "
-                    + struct.pack("<I", 16)
-                    + struct.pack("<HHIIHH", 1, ch, sr, sr * ch * 2, ch * 2, 16)
-                )
-                wav = (
-                    b"RIFF"
-                    + struct.pack("<I", 4 + len(fmt) + 8 + len(data))
-                    + b"WAVE"
-                    + fmt
-                    + b"data"
-                    + struct.pack("<I", len(data))
-                    + data
-                )
-                rows.append({"url": f"doc://{i}.wav", "html": wav})
-            yield pd.DataFrame(rows, columns=["url", "html"])
+    def wav_page(doc_id):
+        i = int(doc_id)
+        sr = 8000 + (i % 5) * 1000
+        ch = 1 + i % 2
+        n = 100 + i % 50
+        data = struct.pack(
+            f"<{n * ch}h",
+            *(((i * 31 + 17 * j) % 512) - 256 for j in range(n * ch)),
+        )
+        fmt = (
+            b"fmt "
+            + struct.pack("<I", 16)
+            + struct.pack("<HHIIHH", 1, ch, sr, sr * ch * 2, ch * 2, 16)
+        )
+        wav = (
+            b"RIFF"
+            + struct.pack("<I", 4 + len(fmt) + 8 + len(data))
+            + b"WAVE"
+            + fmt
+            + b"data"
+            + struct.pack("<I", len(data))
+            + data
+        )
+        return [(f"doc://{i}.wav", wav)]
 
-    pages = docs.mapInPandas(gen, schema="url string, html binary")
+    pages = map_rows(docs, wav_page, "url string, html binary")
     feats = extract_audio_features(pages)
     doc_id = F.regexp_extract("url", r"doc://(\d+)\.", 1).cast("bigint")
     return feats.select(
@@ -436,33 +417,22 @@ def q88_mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     corrupted by 1 or 2 rounds of UTF-8-bytes-read-as-cp1252 appended
     (rung 3: nothing), and the repair must return exactly the clean
     phrase with the rung's iteration count — strict-UTF-8 gating means
-    legitimate text is never touched. Arrow-batched mapInPandas,
+    legitimate text is never touched. One per-row ``map_rows`` stage,
     shuffle-free: at 100 TB this is a scan-side column repair."""
     from ocr_service_spark.extraction.charset import mojibake, repair_mojibake
 
     docs = documents(spark, sf_dir, "doc_id", "text")
 
-    def gen(batches):
-        import pandas as pd
+    def repair(doc_id, text):
+        i = int(doc_id) % 4
+        if i == 3:
+            corrupted = text
+        else:
+            phrase, depth = MOJI_RUNGS[i]
+            corrupted = text + " " + mojibake(phrase, depth)
+        return [(int(doc_id), *repair_mojibake(corrupted))]
 
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id) % 4
-                if i == 3:
-                    corrupted = text
-                else:
-                    phrase, depth = MOJI_RUNGS[i]
-                    corrupted = text + " " + mojibake(phrase, depth)
-                fixed, n = repair_mojibake(corrupted)
-                out.append((int(doc_id), fixed, n))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "repaired_text", "n_repairs"]
-            )
-
-    return docs.mapInPandas(
-        gen, "doc_id bigint, repaired_text string, n_repairs bigint"
-    )
+    return map_rows(docs, repair, "doc_id bigint, repaired_text string, n_repairs bigint")
 
 
 # -- q87: CDX index ingest (fetch-list construction from the URL index) ------
@@ -578,64 +548,58 @@ def q133_epub_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import io as _io
     import zipfile as _zipfile
 
-    import pandas as pd
-
     docs = documents(spark, sf_dir, "doc_id")
 
-    def gen(batches):
-        for batch in batches:
-            rows = []
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                buf = _io.BytesIO()
-                with _zipfile.ZipFile(buf, "w", _zipfile.ZIP_DEFLATED) as z:
-                    # OCF conformance: mimetype FIRST and STORED (what
-                    # every epub toolchain writes; the sniffer's cheap
-                    # prefix probe keys on exactly this)
-                    z.writestr(
-                        "mimetype", "application/epub+zip",
-                        compress_type=_zipfile.ZIP_STORED,
-                    )
-                    if i % 8 != 5:
-                        z.writestr(
-                            "META-INF/container.xml",
-                            '<?xml version="1.0"?><container><rootfiles>'
-                            '<rootfile full-path="OEBPS/content.opf" '
-                            'media-type="application/oebps-package+xml"/>'
-                            "</rootfiles></container>",
-                        )
-                    items = "".join(
-                        f'<item id="c{j}" href="ch{j}.xhtml" '
-                        'media-type="application/xhtml+xml"/>'
-                        for j in range(3)
-                    )
-                    z.writestr(
-                        "OEBPS/content.opf",
-                        '<?xml version="1.0"?><package><metadata>'
-                        f"<dc:title>Book {i} &amp; co</dc:title></metadata>"
-                        f"<manifest>{items}"
-                        '<item id="css" href="style.css" media-type="text/css"/>'
-                        '<item id="cover" href="cover.xhtml" '
-                        'media-type="application/xhtml+xml"/></manifest>'
-                        '<spine><itemref idref="c2"/><itemref idref="c0"/>'
-                        '<itemref idref="c1"/></spine></package>',
-                    )
-                    for j in range(3):
-                        z.writestr(
-                            f"OEBPS/ch{j}.xhtml",
-                            '<?xml version="1.0"?>'
-                            '<html xmlns="http://www.w3.org/1999/xhtml">'
-                            f"<body><p>Chapter {j} of book {i}.</p></body></html>",
-                        )
-                    z.writestr(
-                        "OEBPS/cover.xhtml",
-                        "<html><body><p>COVER MUST NOT APPEAR</p></body></html>",
-                    )
-                    z.writestr("OEBPS/style.css", "p{}")
-                rows.append({"url": f"doc://{i}.epub", "html": buf.getvalue()})
-            yield pd.DataFrame(rows, columns=["url", "html"])
+    def book(doc_id):
+        i = int(doc_id)
+        buf = _io.BytesIO()
+        with _zipfile.ZipFile(buf, "w", _zipfile.ZIP_DEFLATED) as z:
+            # OCF conformance: mimetype FIRST and STORED (what
+            # every epub toolchain writes; the sniffer's cheap
+            # prefix probe keys on exactly this)
+            z.writestr(
+                "mimetype", "application/epub+zip",
+                compress_type=_zipfile.ZIP_STORED,
+            )
+            if i % 8 != 5:
+                z.writestr(
+                    "META-INF/container.xml",
+                    '<?xml version="1.0"?><container><rootfiles>'
+                    '<rootfile full-path="OEBPS/content.opf" '
+                    'media-type="application/oebps-package+xml"/>'
+                    "</rootfiles></container>",
+                )
+            items = "".join(
+                f'<item id="c{j}" href="ch{j}.xhtml" '
+                'media-type="application/xhtml+xml"/>'
+                for j in range(3)
+            )
+            z.writestr(
+                "OEBPS/content.opf",
+                '<?xml version="1.0"?><package><metadata>'
+                f"<dc:title>Book {i} &amp; co</dc:title></metadata>"
+                f"<manifest>{items}"
+                '<item id="css" href="style.css" media-type="text/css"/>'
+                '<item id="cover" href="cover.xhtml" '
+                'media-type="application/xhtml+xml"/></manifest>'
+                '<spine><itemref idref="c2"/><itemref idref="c0"/>'
+                '<itemref idref="c1"/></spine></package>',
+            )
+            for j in range(3):
+                z.writestr(
+                    f"OEBPS/ch{j}.xhtml",
+                    '<?xml version="1.0"?>'
+                    '<html xmlns="http://www.w3.org/1999/xhtml">'
+                    f"<body><p>Chapter {j} of book {i}.</p></body></html>",
+                )
+            z.writestr(
+                "OEBPS/cover.xhtml",
+                "<html><body><p>COVER MUST NOT APPEAR</p></body></html>",
+            )
+            z.writestr("OEBPS/style.css", "p{}")
+        return [(f"doc://{i}.epub", buf.getvalue())]
 
-    pages = docs.mapInPandas(gen, schema="url string, html binary")
+    pages = map_rows(docs, book, "url string, html binary")
     results = extract_documents(pages)
     doc_id = F.regexp_extract("url", r"doc://(\d+)\.", 1).cast("bigint")
     return results.select(

@@ -12,9 +12,10 @@ and DuckDB recomputes the expected structure from the same closed form
 — so the driver hash-checks the full dialect, including the
 nested-table and breadcrumb-pop rules.
 
-100 TB shape: q120/q123 are one Arrow-batched mapInPandas over
-(url, payload) — no shuffle beyond the input fan-out
-(plans/parallelism.py), the explode happens inside the UDF and
+100 TB shape: q120/q123 are one per-row Python stage
+(``plans/rows.py::map_rows``) over (url, payload) — no shuffle beyond
+the input fan-out (plans/parallelism.py), the explode happens inside
+the stage and
 is capped (MAX_CELLS / MAX_HEADINGS) so a pathological page bounds its
 own fan-out; q122 is pure whole-stage-codegen (regexp mark + split +
 posexplode), no Python at all.
@@ -22,13 +23,11 @@ posexplode), no Python at all.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_service_spark.plans.parallelism import documents
+from ocr_service_spark.plans.rows import map_rows
 
 CELLS_SCHEMA = (
     "url string, table_idx bigint, row_idx bigint, col_idx bigint, "
@@ -46,66 +45,30 @@ def extract_table_cells(pages: DataFrame, payload_col: str = "html") -> DataFram
     (url, table_idx, row_idx, col_idx, is_header, cell_text) per the
     dialect pinned in extraction/html_tables.py."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def cells(url, payload):
         from ocr_service_spark.extraction.html_tables import extract_tables
 
-        for batch in batches:
-            urls, tbls, rows, cols, hdrs, texts = [], [], [], [], [], []
-            for url, payload in zip(batch["url"], batch["payload"]):
-                if payload is None:
-                    continue
-                for tbl, row, col, hdr, text in extract_tables(bytes(payload)):
-                    urls.append(url)
-                    tbls.append(tbl)
-                    rows.append(row)
-                    cols.append(col)
-                    hdrs.append(hdr)
-                    texts.append(text)
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "table_idx": pd.Series(tbls, dtype="int64"),
-                    "row_idx": pd.Series(rows, dtype="int64"),
-                    "col_idx": pd.Series(cols, dtype="int64"),
-                    "is_header": pd.Series(hdrs, dtype="bool"),
-                    "cell_text": texts,
-                }
-            )
+        if payload is None:
+            return []
+        return [(url, *cell) for cell in extract_tables(bytes(payload))]
 
     narrowed = pages.select("url", F.col(payload_col).alias("payload"))
-    return narrowed.mapInPandas(run, schema=CELLS_SCHEMA)
+    return map_rows(narrowed, cells, CELLS_SCHEMA)
 
 
 def extract_outline_table(pages: DataFrame, payload_col: str = "html") -> DataFrame:
     """pages(url, <payload_col> binary) -> one row per h1-h6 heading:
     (url, heading_idx, level, heading_text, section_path)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def headings(url, payload):
         from ocr_service_spark.extraction.html_tables import extract_outline
 
-        for batch in batches:
-            urls, idxs, lvls, texts, paths = [], [], [], [], []
-            for url, payload in zip(batch["url"], batch["payload"]):
-                if payload is None:
-                    continue
-                for idx, level, text, path in extract_outline(bytes(payload)):
-                    urls.append(url)
-                    idxs.append(idx)
-                    lvls.append(level)
-                    texts.append(text)
-                    paths.append(path)
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "heading_idx": pd.Series(idxs, dtype="int64"),
-                    "level": pd.Series(lvls, dtype="int32"),
-                    "heading_text": texts,
-                    "section_path": paths,
-                }
-            )
+        if payload is None:
+            return []
+        return [(url, *heading) for heading in extract_outline(bytes(payload))]
 
     narrowed = pages.select("url", F.col(payload_col).alias("payload"))
-    return narrowed.mapInPandas(run, schema=OUTLINE_SCHEMA)
+    return map_rows(narrowed, headings, OUTLINE_SCHEMA)
 
 
 def segment_sentences(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -332,35 +295,18 @@ def extract_structured_table(pages: DataFrame, payload_col: str = "html") -> Dat
     """pages(url, <payload_col> binary) -> one row per structured-data
     field: (url, field_idx, kind, field_key, field_value) per the
     dialect pinned in extraction/structured_data.py. Same 100-TB shape
-    as the other tier members: one Arrow-batched mapInPandas, the
-    explode inside the UDF and capped at MAX_FIELDS."""
+    as the other tier members: one ``map_rows`` stage, the explode
+    inside it and capped at MAX_FIELDS."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fields(url, payload):
         from ocr_service_spark.extraction.structured_data import extract_structured
 
-        for batch in batches:
-            urls, idxs, kinds, keys, vals = [], [], [], [], []
-            for url, payload in zip(batch["url"], batch["payload"]):
-                if payload is None:
-                    continue
-                for idx, kind, key, val in extract_structured(bytes(payload)):
-                    urls.append(url)
-                    idxs.append(idx)
-                    kinds.append(kind)
-                    keys.append(key)
-                    vals.append(val)
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "field_idx": pd.Series(idxs, dtype="int64"),
-                    "kind": kinds,
-                    "field_key": keys,
-                    "field_value": vals,
-                }
-            )
+        if payload is None:
+            return []
+        return [(url, *field) for field in extract_structured(bytes(payload))]
 
     narrowed = pages.select("url", F.col(payload_col).alias("payload"))
-    return narrowed.mapInPandas(run, schema=STRUCTURED_SCHEMA)
+    return map_rows(narrowed, fields, STRUCTURED_SCHEMA)
 
 
 _SD_PAGE_HEAD = '<html><head>\n<meta property="og:title" content="Doc %s &amp; friends"/>\n'
@@ -487,23 +433,14 @@ def extract_pub_dates(pages: DataFrame, payload_col: str = "html") -> DataFrame:
     batch in, one row per page out, the date ladder entirely inside
     the UDF — at 100 TB this is a zero-shuffle projection."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def pub_date(url, payload):
         from ocr_service_spark.extraction.dates import extract_pub_date
 
-        for batch in batches:
-            dates, sources = [], []
-            for url, payload in zip(batch["url"], batch["payload"]):
-                d, src = extract_pub_date(
-                    bytes(payload) if payload is not None else b"", url
-                )
-                dates.append(d.isoformat() if d is not None else None)
-                sources.append(src)
-            yield pd.DataFrame(
-                {"url": batch["url"], "pub_date": dates, "date_source": sources}
-            )
+        d, src = extract_pub_date(bytes(payload) if payload is not None else b"", url)
+        return [(url, d.isoformat() if d is not None else None, src)]
 
     narrowed = pages.select("url", F.col(payload_col).alias("payload"))
-    return narrowed.mapInPandas(run, schema=PUBDATE_SCHEMA)
+    return map_rows(narrowed, pub_date, PUBDATE_SCHEMA)
 
 
 def q129_pub_dates(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ocr_service_spark.functions.hashing import h32, h32_sql
 from ocr_service_spark.plans.parallelism import documents
+from ocr_service_spark.plans.rows import map_rows
 from ocr_service_spark.sources.tables import read_table
 
 
@@ -661,7 +662,7 @@ def q86_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dialect: merges apply in priority order, one left-to-right pass per
 # merge (a repeat like 'aaa' under a+a becomes [aa, a]). The encoder
 # is a real iterative algorithm no Column expression expresses, so it
-# runs as an Arrow-batched mapInPandas (map-only, zero shuffles); the
+# runs as one per-row ``map_rows`` stage (map-only, zero shuffles); the
 # oracle replays HAND-DERIVED tokenizations of the planted lexicon —
 # independent ground truth, never the encoder itself.
 BPE_APPLY_MERGES = (
@@ -710,28 +711,16 @@ def q144_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle pins these as literals; the Spark side runs the REAL
     encoder over them."""
-    import pandas as pd
-
     docs = read_table(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
     word = F.element_at(F.array(*[F.lit(w) for w in BPE_LEXICON]), (d % 8 + 1).cast("int"))
     words = docs.select("doc_id", word.alias("word"))
 
-    def encode(batches):
-        for pdf in batches:
-            toks = [bpe_apply(w) for w in pdf["word"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "word": pdf["word"],
-                    "n_tokens": [len(t) for t in toks],
-                    "tokens": [" ".join(t) for t in toks],
-                }
-            )
+    def encode(doc_id, w):
+        toks = bpe_apply(w)
+        return [(doc_id, w, len(toks), " ".join(toks))]
 
-    return words.mapInPandas(
-        encode, "doc_id bigint, word string, n_tokens bigint, tokens string"
-    )
+    return map_rows(words, encode, "doc_id bigint, word string, n_tokens bigint, tokens string")
 
 
 def _q144_oracle() -> str:

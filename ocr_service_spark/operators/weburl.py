@@ -32,7 +32,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_service_spark.functions.hashing import h32, h32_sql
+from ocr_service_spark.operators.structure import CELLS_SCHEMA
 from ocr_service_spark.plans.parallelism import documents
+from ocr_service_spark.plans.rows import map_rows
 from ocr_service_spark.sources.tables import read_table
 
 # Dialect-portable regexes (same semantics in Java regex and RE2).
@@ -163,34 +165,24 @@ def extract_outlinks(
     pages: DataFrame, url_col: str = "url", payload_col: str = "html"
 ) -> DataFrame:
     """HTML payloads -> one row per outlink: (url, seq, outlink,
-    noindex). Arrow-batched mapInPandas over the stdlib link parser
+    noindex). One per-row ``map_rows`` stage over the stdlib link parser
     (extraction/links.py); relative hrefs resolve against the page
     URL, link farms are capped at MAX_LINKS per page. A page with no
     links still yields one seq=-1 row carrying its noindex flag, so
     the robots signal survives for link-free pages."""
-    import pandas as pd
 
-    def gen(batches):
+    def outlinks(url, payload):
         from ocr_service_spark.extraction.links import extract_links
 
-        for batch in batches:
-            rows = []
-            for url, payload in zip(batch[url_col], batch[payload_col]):
-                links, noindex = extract_links(
-                    bytes(payload) if payload is not None else b"", url
-                )
-                if not links:
-                    rows.append(
-                        {"url": url, "seq": -1, "outlink": None, "noindex": noindex}
-                    )
-                for seq, link in enumerate(links):
-                    rows.append(
-                        {"url": url, "seq": seq, "outlink": link, "noindex": noindex}
-                    )
-            yield pd.DataFrame(rows, columns=["url", "seq", "outlink", "noindex"])
+        links, noindex = extract_links(bytes(payload) if payload is not None else b"", url)
+        if not links:
+            return [(url, -1, None, noindex)]
+        return [(url, seq, link, noindex) for seq, link in enumerate(links)]
 
-    return pages.mapInPandas(
-        gen, schema="url string, seq int, outlink string, noindex boolean"
+    return map_rows(
+        pages.select(url_col, payload_col),
+        outlinks,
+        "url string, seq int, outlink string, noindex boolean",
     )
 
 
@@ -745,35 +737,22 @@ IMAGE_PAIRS_SCHEMA = (
 
 def extract_image_pair_rows(pages: DataFrame, payload_col: str = "html") -> DataFrame:
     """pages(url, <payload_col> binary) -> one row per usable <img>
-    per the dialect in extraction/images.py. Map-only mapInPandas,
-    explode inside the UDF capped at MAX_IMAGES — the q67/q134
+    per the dialect in extraction/images.py. Map-only ``map_rows``
+    stage, the explode inside it capped at MAX_IMAGES — the q67/q134
     parser-fan-out shape."""
-    import pandas as pd
 
-    def run(batches):
+    def pairs(url, payload):
         from ocr_service_spark.extraction.images import extract_image_pairs
 
-        for batch in batches:
-            rows: dict[str, list] = {
-                "url": [], "seq": [], "image_url": [], "alt": [],
-                "caption": [], "is_tracking": [], "keep": [],
-            }
-            for url, payload in zip(batch["url"], batch["payload"]):
-                if payload is None:
-                    continue
-                for rec in extract_image_pairs(bytes(payload), url):
-                    rows["url"].append(url)
-                    rows["seq"].append(rec["seq"])
-                    rows["image_url"].append(rec["image_url"])
-                    rows["alt"].append(rec["alt"])
-                    rows["caption"].append(rec["caption"])
-                    rows["is_tracking"].append(rec["is_tracking"])
-                    rows["keep"].append(rec["keep"])
-            rows["seq"] = pd.Series(rows["seq"], dtype="int64")
-            yield pd.DataFrame(rows)
+        if payload is None:
+            return []
+        return [
+            (url, r["seq"], r["image_url"], r["alt"], r["caption"], r["is_tracking"], r["keep"])
+            for r in extract_image_pairs(bytes(payload), url)
+        ]
 
     narrowed = pages.select("url", F.col(payload_col).alias("payload"))
-    return narrowed.mapInPandas(run, schema=IMAGE_PAIRS_SCHEMA)
+    return map_rows(narrowed, pairs, IMAGE_PAIRS_SCHEMA)
 
 
 def q161_image_text_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -859,8 +838,6 @@ def q162_page_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     competitors (og wins), 1 has figure+alt (figure), 2 has alt only
     (alt), 3 has only a tracking pixel and a too-short alt (no row),
     4 declares an unusable data: og:image (falls through to alt)."""
-    import pandas as pd
-
     docs = documents(spark, sf_dir, "doc_id")
     d = F.col("doc_id")
     ds = d.cast("string")
@@ -897,23 +874,16 @@ def q162_page_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pages = docs.select(page_url.alias("url"), F.encode(html, "utf-8").alias("html"))
 
-    def run(batches):
+    def elect(url, payload):
         from ocr_service_spark.extraction.images import elect_page_image
 
-        for batch in batches:
-            urls, rules, imgs = [], [], []
-            for url, payload in zip(batch["url"], batch["payload"]):
-                if payload is None:
-                    continue
-                got = elect_page_image(bytes(payload), url)
-                if got is not None:
-                    urls.append(url)
-                    rules.append(got[0])
-                    imgs.append(got[1])
-            yield pd.DataFrame({"url": urls, "rule": rules, "image_url": imgs})
+        got = None if payload is None else elect_page_image(bytes(payload), url)
+        return [] if got is None else [(url, *got)]
 
-    out = pages.select("url", F.col("html").alias("payload")).mapInPandas(
-        run, schema="url string, rule string, image_url string"
+    out = map_rows(
+        pages.select("url", F.col("html").alias("payload")),
+        elect,
+        "url string, rule string, image_url string",
     )
     doc_id = F.regexp_extract("url", r"/page/(\d+)\.html$", 1).cast("bigint")
     return out.select(doc_id.alias("doc_id"), "rule", "image_url")
@@ -939,53 +909,18 @@ ORACLES_Q162 = """
 
 
 # -- q165: HTML table extraction (structured cells) -------------------------------
-TABLE_CELLS_SCHEMA = (
-    "url string, table_idx bigint, row_idx bigint, col_idx bigint, "
-    "is_header boolean, cell_text string"
-)
-
-
-def extract_table_cells(pages: DataFrame, payload_col: str = "html") -> DataFrame:
-    """pages(url, <payload_col> binary) -> one row per table cell per
-    variant B of extraction/html_tables.py (colspan advances the
-    cursor, render-true grid positions). Map-only mapInPandas, explode
-    inside the UDF capped at MAX_CELLS — the q161 parser-fan-out
-    shape."""
-    import pandas as pd
-
-    def run(batches):
-        from ocr_service_spark.extraction.html_tables import extract_tables_spanned
-
-        for batch in batches:
-            rows: dict[str, list] = {
-                "url": [], "table_idx": [], "row_idx": [], "col_idx": [],
-                "is_header": [], "cell_text": [],
-            }
-            for url, payload in zip(batch["url"], batch["payload"]):
-                if payload is None:
-                    continue
-                for ti, ri, ci, hd, tx in extract_tables_spanned(bytes(payload)):
-                    rows["url"].append(url)
-                    rows["table_idx"].append(ti)
-                    rows["row_idx"].append(ri)
-                    rows["col_idx"].append(ci)
-                    rows["is_header"].append(hd)
-                    rows["cell_text"].append(tx)
-            for k in ("table_idx", "row_idx", "col_idx"):
-                rows[k] = pd.Series(rows[k], dtype="int64")
-            yield pd.DataFrame(rows)
-
-    narrowed = pages.select("url", F.col(payload_col).alias("payload"))
-    return narrowed.mapInPandas(run, schema=TABLE_CELLS_SCHEMA)
-
-
 def q165_html_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table cells over closed-form pages: every doc carries one
     header+2x2 grid (th cells, an inline-markup + entity cell when
     doc_id%4==0, an empty cell when doc_id%5==0); doc_id%3==0 adds a
     second table whose colspan=2 lead cell pushes the next cell to
     col_idx 2. The REAL parser runs end-to-end (charset ladder,
-    tolerant close); the oracle replays the planting."""
+    tolerant close); the oracle replays the planting.
+
+    The cells are q120's table (``structure.CELLS_SCHEMA``) read by
+    variant B of extraction/html_tables.py: colspan advances the
+    cursor, so grid positions are render-true. Map-only, the explode
+    inside the stage and capped at MAX_CELLS."""
     docs = documents(spark, sf_dir, "doc_id")
     d = F.col("doc_id")
     ds = d.cast("string")
@@ -1020,7 +955,15 @@ def q165_html_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = docs.select(
         page_url.alias("url"), F.encode(body, "utf-8").alias("html")
     )
-    out = extract_table_cells(pages)
+
+    def cells(url, payload):
+        from ocr_service_spark.extraction.html_tables import extract_tables_spanned
+
+        if payload is None:
+            return []
+        return [(url, *cell) for cell in extract_tables_spanned(bytes(payload))]
+
+    out = map_rows(pages.select("url", F.col("html").alias("payload")), cells, CELLS_SCHEMA)
     doc_id = F.regexp_extract("url", r"/page/(\d+)\.html$", 1).cast("bigint")
     return out.select(
         doc_id.alias("doc_id"), "table_idx", "row_idx", "col_idx",
@@ -1371,30 +1314,19 @@ def robots_rules_table(robots: DataFrame, agent: str) -> DataFrame:
     Python on the robots side (one row per HOST — tiny next to pages),
     emitting patterns pre-compiled to portable regexes so precedence
     resolution stays fully relational downstream."""
-    import pandas as pd
 
-    def gen(batches):
+    def rules(host, txt):
         from ocr_service_spark.extraction.robots import rules_for_agent
 
-        for batch in batches:
-            rows = []
-            for host, txt in zip(batch["host"], batch["robots_txt"]):
-                for r in rules_for_agent(txt or "", agent):
-                    rows.append(
-                        {
-                            "host": host,
-                            "allow": 1 if r.allow else 0,
-                            "plen": len(r.pattern),
-                            "pattern": r.pattern,
-                            "rx": r.regex,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["host", "allow", "plen", "pattern", "rx"]
-            )
+        return [
+            (host, 1 if r.allow else 0, len(r.pattern), r.pattern, r.regex)
+            for r in rules_for_agent(txt or "", agent)
+        ]
 
-    return robots.mapInPandas(
-        gen, schema="host string, allow int, plen int, pattern string, rx string"
+    return map_rows(
+        robots.select("host", "robots_txt"),
+        rules,
+        "host string, allow int, plen int, pattern string, rx string",
     )
 
 
@@ -1486,29 +1418,19 @@ def extract_anchor_edges(
     pages: DataFrame, url_col: str = "url", payload_col: str = "html"
 ) -> DataFrame:
     """HTML payloads -> (url, seq, outlink, anchor_text) rows via the
-    stdlib anchor collector (extraction/links.py). Arrow-batched; link
+    stdlib anchor collector (extraction/links.py). One ``map_rows`` stage; link
     farms capped at MAX_LINKS like extract_outlinks."""
-    import pandas as pd
 
-    def gen(batches):
+    def edges(url, payload):
         from ocr_service_spark.extraction.links import extract_anchors
 
-        for batch in batches:
-            rows = []
-            for url, payload in zip(batch[url_col], batch[payload_col]):
-                anchors, _ = extract_anchors(
-                    bytes(payload) if payload is not None else b"", url
-                )
-                for seq, (link, text) in enumerate(anchors):
-                    rows.append(
-                        {"url": url, "seq": seq, "outlink": link, "anchor_text": text}
-                    )
-            yield pd.DataFrame(
-                rows, columns=["url", "seq", "outlink", "anchor_text"]
-            )
+        anchors, _ = extract_anchors(bytes(payload) if payload is not None else b"", url)
+        return [(url, seq, link, text) for seq, (link, text) in enumerate(anchors)]
 
-    return pages.mapInPandas(
-        gen, schema="url string, seq int, outlink string, anchor_text string"
+    return map_rows(
+        pages.select(url_col, payload_col),
+        edges,
+        "url string, seq int, outlink string, anchor_text string",
     )
 
 
@@ -1710,27 +1632,16 @@ def sitemap_entries(sitemaps: DataFrame) -> DataFrame:
     (host, kind, loc, lastmod). Parsing runs Python-side on the
     per-host sitemap table — tiny next to pages, same placement as
     robots_rules_table; everything downstream is relational."""
-    import pandas as pd
 
-    def gen(batches):
+    def entries(host, xml):
         from ocr_service_spark.extraction.sitemap import parse_sitemap
 
-        for batch in batches:
-            rows = []
-            for host, xml in zip(batch["host"], batch["sitemap_xml"]):
-                for e in parse_sitemap(xml or ""):
-                    rows.append(
-                        {
-                            "host": host,
-                            "kind": e["kind"],
-                            "loc": e["loc"],
-                            "lastmod": e["lastmod"],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["host", "kind", "loc", "lastmod"])
+        return [(host, e["kind"], e["loc"], e["lastmod"]) for e in parse_sitemap(xml or "")]
 
-    return sitemaps.mapInPandas(
-        gen, schema="host string, kind string, loc string, lastmod string"
+    return map_rows(
+        sitemaps.select("host", "sitemap_xml"),
+        entries,
+        "host string, kind string, loc string, lastmod string",
     )
 
 
@@ -2615,25 +2526,17 @@ def extract_canonicals(
 ) -> DataFrame:
     """HTML payloads -> (url, canonical_url nullable): the declared
     ``<link rel=canonical>`` target, relative hrefs resolved against
-    the page URL, first declaration wins. Arrow-batched mapInPandas
+    the page URL, first declaration wins. One ``map_rows`` stage
     over the stdlib link parser — map-only, one output row per page."""
-    import pandas as pd
 
-    def gen(batches):
+    def canonical(url, payload):
         from ocr_service_spark.extraction.links import extract_canonical
 
-        for batch in batches:
-            urls, canon = [], []
-            for url, payload in zip(batch[url_col], batch[payload_col]):
-                urls.append(url)
-                canon.append(
-                    extract_canonical(
-                        bytes(payload) if payload is not None else b"", url
-                    )
-                )
-            yield pd.DataFrame({"url": urls, "canonical_url": canon})
+        return [(url, extract_canonical(bytes(payload) if payload is not None else b"", url))]
 
-    return pages.mapInPandas(gen, schema="url string, canonical_url string")
+    return map_rows(
+        pages.select(url_col, payload_col), canonical, "url string, canonical_url string"
+    )
 
 
 def _canonical_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2844,8 +2747,8 @@ _Q132_ORACLE = """
 # The two rungs that FEED the fetch-side parsers: q134 finds feeds
 # (HTML <link rel=alternate type=rss/atom> autodiscovery -> q130's
 # parser), q135 finds sitemaps (robots.txt ``Sitemap:`` records ->
-# q77's parser). Both map-only, one Arrow-batched mapInPandas with the
-# explode inside the UDF — zero shuffles at any scale.
+# q77's parser). Both map-only, one per-row ``map_rows`` stage with the
+# explode inside it — zero shuffles at any scale.
 FEED_LINKS_SCHEMA = (
     "url string, feed_idx bigint, feed_url string, feed_kind string, "
     "feed_title string"
@@ -2855,36 +2758,16 @@ FEED_LINKS_SCHEMA = (
 def discover_feed_links(pages: DataFrame, payload_col: str = "html") -> DataFrame:
     """pages(url, <payload_col> binary) -> one row per declared feed
     per the autodiscovery dialect in extraction/links.py."""
-    import pandas as pd
 
-    def run(batches):
+    def feed_links(url, payload):
         from ocr_service_spark.extraction.links import extract_feed_links
 
-        for batch in batches:
-            urls, idxs, furls, kinds, titles = [], [], [], [], []
-            for url, payload in zip(batch["url"], batch["payload"]):
-                if payload is None:
-                    continue
-                for i, (furl, kind, title) in enumerate(
-                    extract_feed_links(bytes(payload), url)
-                ):
-                    urls.append(url)
-                    idxs.append(i)
-                    furls.append(furl)
-                    kinds.append(kind)
-                    titles.append(title)
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "feed_idx": pd.Series(idxs, dtype="int64"),
-                    "feed_url": furls,
-                    "feed_kind": kinds,
-                    "feed_title": titles,
-                }
-            )
+        if payload is None:
+            return []
+        return [(url, i, *link) for i, link in enumerate(extract_feed_links(bytes(payload), url))]
 
     narrowed = pages.select("url", F.col(payload_col).alias("payload"))
-    return narrowed.mapInPandas(run, schema=FEED_LINKS_SCHEMA)
+    return map_rows(narrowed, feed_links, FEED_LINKS_SCHEMA)
 
 
 def q134_feed_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2971,28 +2854,14 @@ SITEMAP_DECL_SCHEMA = "url string, sitemap_idx bigint, sitemap_url string"
 def discover_sitemaps(robots: DataFrame, text_col: str = "robots_txt") -> DataFrame:
     """robots(url, <text_col> string) -> one row per Sitemap record
     per the RFC 9309 §2.3 dialect in extraction/robots.py."""
-    import pandas as pd
 
-    def run(batches):
+    def sitemaps(url, text):
         from ocr_service_spark.extraction.robots import sitemap_urls
 
-        for batch in batches:
-            urls, idxs, surls = [], [], []
-            for url, text in zip(batch["url"], batch["txt"]):
-                for i, s in enumerate(sitemap_urls(text or "")):
-                    urls.append(url)
-                    idxs.append(i)
-                    surls.append(s)
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "sitemap_idx": pd.Series(idxs, dtype="int64"),
-                    "sitemap_url": surls,
-                }
-            )
+        return [(url, i, s) for i, s in enumerate(sitemap_urls(text or ""))]
 
     narrowed = robots.select("url", F.col(text_col).alias("txt"))
-    return narrowed.mapInPandas(run, schema=SITEMAP_DECL_SCHEMA)
+    return map_rows(narrowed, sitemaps, SITEMAP_DECL_SCHEMA)
 
 
 def q135_sitemap_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3055,27 +2924,17 @@ HREFLANG_SCHEMA = "url string, hreflang string, target_url string"
 def extract_hreflang_edges(pages: DataFrame, payload_col: str = "html") -> DataFrame:
     """pages(url, <payload_col> binary) -> one row per hreflang
     declaration: (url, hreflang, target_url), per the dialect in
-    extraction/links.py. Map-only, explode inside the UDF."""
-    import pandas as pd
+    extraction/links.py. Map-only, the explode inside the stage."""
 
-    def run(batches):
+    def hreflangs(url, payload):
         from ocr_service_spark.extraction.links import extract_hreflangs
 
-        for batch in batches:
-            urls, langs, targets = [], [], []
-            for url, payload in zip(batch["url"], batch["payload"]):
-                if payload is None:
-                    continue
-                for lang, target in extract_hreflangs(bytes(payload), url):
-                    urls.append(url)
-                    langs.append(lang)
-                    targets.append(target)
-            yield pd.DataFrame(
-                {"url": urls, "hreflang": langs, "target_url": targets}
-            )
+        if payload is None:
+            return []
+        return [(url, lang, target) for lang, target in extract_hreflangs(bytes(payload), url)]
 
     narrowed = pages.select("url", F.col(payload_col).alias("payload"))
-    return narrowed.mapInPandas(run, schema=HREFLANG_SCHEMA)
+    return map_rows(narrowed, hreflangs, HREFLANG_SCHEMA)
 
 
 _HREFLANG_LANGS = ("en", "de", "fr")
@@ -3393,39 +3252,21 @@ def extract_feed_items(feeds: DataFrame, payload_col: str = "html") -> DataFrame
     """feeds(url, <payload_col> binary) -> one row per feed item:
     (url, feed_kind, item_idx, title, link, pub_utc) per the dialect
     pinned in extraction/feeds.py. Same 100-TB shape as the sitemap
-    and structured-data tiers: one Arrow-batched mapInPandas, the
-    explode inside the UDF and capped at MAX_ITEMS."""
-    import pandas as pd
+    and structured-data tiers: one ``map_rows`` stage, the explode
+    inside it and capped at MAX_ITEMS."""
 
-    def run(batches):
+    def items(url, payload):
         from ocr_service_spark.extraction.feeds import parse_feed
 
-        for batch in batches:
-            urls, kinds, idxs, titles, links, pubs = [], [], [], [], [], []
-            for url, payload in zip(batch["url"], batch["payload"]):
-                if payload is None:
-                    continue
-                kind, items = parse_feed(bytes(payload))
-                for it in items:
-                    urls.append(url)
-                    kinds.append(kind)
-                    idxs.append(it["item_idx"])
-                    titles.append(it["title"])
-                    links.append(it["link"])
-                    pubs.append(it["pub_utc"])
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "feed_kind": kinds,
-                    "item_idx": pd.Series(idxs, dtype="int64"),
-                    "title": titles,
-                    "link": links,
-                    "pub_utc": pubs,
-                }
-            )
+        if payload is None:
+            return []
+        kind, found = parse_feed(bytes(payload))
+        return [
+            (url, kind, it["item_idx"], it["title"], it["link"], it["pub_utc"]) for it in found
+        ]
 
     narrowed = feeds.select("url", F.col(payload_col).alias("payload"))
-    return narrowed.mapInPandas(run, schema=FEED_ITEMS_SCHEMA)
+    return map_rows(narrowed, items, FEED_ITEMS_SCHEMA)
 
 
 def _feed_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3506,7 +3347,7 @@ def q130_feed_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoy skipped), and the publication instant NORMALIZED TO UTC
     (the RSS arm publishes at +02:00, so cross-engine agreement on
     pub_utc proves the zone shift, not just the parse). Map-only at
-    any scale — the explode happens inside the UDF, capped at
+    any scale — the explode happens inside the Python stage, capped at
     MAX_ITEMS; no shuffle anywhere."""
     pages = _feed_pages(spark, sf_dir)
     out = extract_feed_items(pages)

@@ -7,12 +7,15 @@ sequential walk within a file but files are embarrassingly parallel;
 that per-file parallelism is exactly how production WARC readers
 scale, and it is why the writer emits ONE GZIP MEMBER PER RECORD
 (the reader never decompresses more than it needs). The parse itself
-(extraction/warc.py) is stdlib-only and runs Arrow-batched.
+(extraction/warc.py) is stdlib-only and runs as one per-row Python
+stage (``plans/rows.py::map_rows``), a file's records exploded inside it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+from ocr_service_spark.plans.rows import map_rows
 
 RECORD_FIELDS = (
     "warc_type string, url string, warc_ts string, status int, "
@@ -27,31 +30,15 @@ def read_warc(
     id_cols + (warc_type, url, warc_ts, status, content_type, payload).
     ``id_cols`` (e.g. the source file path or shard id) are copied
     onto every record for provenance."""
-    import pandas as pd
+    ids = [f for f in blobs.schema.fields if f.name in id_cols]
+    schema = "".join(f"{f.name} {f.dataType.simpleString()}, " for f in ids) + RECORD_FIELDS
+    fields = ("warc_type", "url", "warc_ts", "status", "content_type", "payload")
 
-    id_schema = "".join(
-        f"{f.name} {f.dataType.simpleString()}, "
-        for f in blobs.schema.fields
-        if f.name in id_cols
-    )
-    schema = id_schema + RECORD_FIELDS
-
-    def gen(batches):
+    def records(*values):
         from ocr_service_spark.extraction.warc import warc_to_pages
 
-        cols = list(id_cols) + [
-            "warc_type", "url", "warc_ts", "status", "content_type", "payload",
-        ]
-        for batch in batches:
-            rows = []
-            for rec in batch.to_dict("records"):
-                data = rec[data_col]
-                for page in warc_to_pages(
-                    bytes(data) if data is not None else b""
-                ):
-                    row = {c: rec[c] for c in id_cols}
-                    row.update(page)
-                    rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
+        *id_values, data = values
+        pages = warc_to_pages(bytes(data) if data is not None else b"")
+        return [(*id_values, *(page[c] for c in fields)) for page in pages]
 
-    return blobs.mapInPandas(gen, schema=schema)
+    return map_rows(blobs.select(*(f.name for f in ids), data_col), records, schema)

@@ -2,8 +2,9 @@
 
 Image/audio/video payloads are carried as ``binary`` columns with a
 typed metadata struct, processed by per-row Python stages
-(``plans/rows.py::map_rows``) — identical plumbing to the text-extraction operator, so the
-same partitioning/skew machinery applies.
+(``plans/rows.py::map_rows``) — the same Arrow-batched Python boundary
+as the text-extraction operator, so the same partitioning/skew
+machinery applies.
 
 Decode reality by format (`_decode`):
 

@@ -47,7 +47,8 @@ def map_rows(df: DataFrame, fn: Callable[..., Iterable[tuple]], schema: str) -> 
     def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         drop_zip_finders()
         for batch in batches:
-            rows = [out for values in zip(*(batch[c] for c in batch.columns)) for out in fn(*values)]
+            inputs = zip(*(batch[c] for c in batch.columns))
+            rows = [out for values in inputs for out in fn(*values)]
             cols = list(zip(*rows)) if rows else [()] * len(names)
             yield pd.DataFrame(
                 {name: pd.Series(col, dtype=object) for name, col in zip(names, cols)}

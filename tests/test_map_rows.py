@@ -6,6 +6,7 @@ module grows its own batch loop."""
 from __future__ import annotations
 
 import hashlib
+import importlib
 import re
 import struct
 from pathlib import Path
@@ -113,8 +114,9 @@ _WARC = build_warc(
 _PAGE = "url string, html binary"
 _RSS = b"<rss><channel><item><title>T</title><link>http://a.test/1</link></item></channel></rss>"
 _PARAGRAPH = b"<nav><a href='/'>home</a></nav><p>" + b"a real paragraph of words " * 6 + b"</p>"
+_PARAGRAPH_TEXT = " ".join(["a real paragraph of words"] * 6)
 
-# name -> (module, operator, kwargs, input schema, normal row, null row)
+# name -> (module, operator, kwargs, input schema, the normal row's payload)
 _NULL_CASES = {
     "outlinks": ("weburl", "extract_outlinks", {}, _PAGE, b'<a href="/x">x</a>'),
     "anchor_edges": ("weburl", "extract_anchor_edges", {}, _PAGE, b'<a href="/x">an x</a>'),
@@ -171,14 +173,16 @@ _NULL_CASES = {
         ("aa\n\nbbb", "aa\n\nbbbb"),
     ),
     "minhash": ("dedup", "_shingle_sigs", {}, "doc_id bigint, text string", "a b c d e"),
-    "warc": ("sources.warc", "read_warc", {"id_cols": ("shard",)}, "shard string, data binary", _WARC),
+    "warc": (
+        "sources.warc", "read_warc", {"id_cols": ("shard",)}, "shard string, data binary", _WARC
+    ),
 }
 
 
 def _null_case_input(spark, name):
-    """The case's two input rows: keys 'k1' (normal) and 'k2' (null
-    payload). The key column is the schema's first; a second text
-    column (bitext) is nulled on the null row too."""
+    """The case's two input rows, one key each (the schema's first
+    column): the normal row with the case's payload, then the null row
+    with every payload column null (bitext has two)."""
     _, _, _, ddl, payload = _NULL_CASES[name]
     first = ddl.split()[0]
     keys = {
@@ -193,11 +197,10 @@ def _null_case_input(spark, name):
 
 
 def _null_case_rows(spark, name):
-    import importlib
-
     module, op, kwargs, _, _ = _NULL_CASES[name]
     package = "ocr_service_spark" if "." in module else "ocr_service_spark.operators"
-    out = getattr(importlib.import_module(f"{package}.{module}"), op)(_null_case_input(spark, name), **kwargs)
+    operator = getattr(importlib.import_module(f"{package}.{module}"), op)
+    out = operator(_null_case_input(spark, name), **kwargs)
     return sorted((tuple(_cell(v) for v in row) for row in out.collect()), key=repr)
 
 
@@ -209,99 +212,115 @@ def _cell(v):
     return v
 
 
-_NULL_EXPECTED = {'align': [('k1', 0, 0, '1-1', 2, 2), ('k1', 1, 1, '1-1', 3, 4), ('k2', 0, 0, '1-1', 0, 0)],
- 'anchor_edges': [('http://a.test/p.html', 0, 'http://a.test/x', 'an x')],
- 'audio': [('http://a.test/p.html',
-            'audio/wav',
-            8000,
+_NULL_EXPECTED = {
+    "align": [
+        ("k1", 0, 0, "1-1", 2, 2),
+        ("k1", 1, 1, "1-1", 3, 4),
+        ("k2", 0, 0, "1-1", 0, 0),
+    ],
+    "anchor_edges": [
+        ("http://a.test/p.html", 0, "http://a.test/x", "an x"),
+    ],
+    "audio": [
+        (
+            "http://a.test/p.html", "audio/wav", 8000, 1, 16, 8, 0.001, "46a91d09ab12c0e1", 239276,
+            1, 608400, 174880, 163216,
+        ),
+    ],
+    "canonicals": [
+        ("http://a.test/2019/05/06/q.html", None),
+        ("http://a.test/p.html", "http://a.test/c"),
+    ],
+    "content_spans": [
+        (
+            "http://a.test/p.html", 0, 34, 190,
+            _PARAGRAPH_TEXT,
+        ),
+    ],
+    "feed_items": [
+        ("http://a.test/p.html", "rss", 0, "T", "http://a.test/1", None),
+    ],
+    "feed_links": [
+        ("http://a.test/p.html", 0, "http://a.test/feed", "rss", "F"),
+    ],
+    "frames": [
+        ("http://a.test/p.html", 0, 0.0, 10, 10, "e4d0dcb8d1714eb9", 9900),
+    ],
+    "hreflang": [
+        ("http://a.test/p.html", "de", "http://a.test/de"),
+    ],
+    "image_pairs": [
+        ("http://a.test/p.html", 0, "http://a.test/i.jpg", "An image alt", None, False, True),
+    ],
+    "main_text": [
+        ("http://a.test/2019/05/06/q.html", "", 0),
+        (
+            "http://a.test/p.html",
+            _PARAGRAPH_TEXT,
             1,
-            16,
-            8,
-            0.001,
-            '46a91d09ab12c0e1',
-            239276,
-            1,
-            608400,
-            174880,
-            163216)],
- 'canonicals': [('http://a.test/2019/05/06/q.html', None),
-                ('http://a.test/p.html', 'http://a.test/c')],
- 'content_spans': [('http://a.test/p.html',
-                    0,
-                    34,
-                    190,
-                    'a real paragraph of words a real paragraph of words a real paragraph of words '
-                    'a real paragraph of words a real paragraph of words a real paragraph of '
-                    'words')],
- 'feed_items': [('http://a.test/p.html', 'rss', 0, 'T', 'http://a.test/1', None)],
- 'feed_links': [('http://a.test/p.html', 0, 'http://a.test/feed', 'rss', 'F')],
- 'frames': [('http://a.test/p.html', 0, 0.0, 10, 10, 'e4d0dcb8d1714eb9', 9900)],
- 'hreflang': [('http://a.test/p.html', 'de', 'http://a.test/de')],
- 'image_pairs': [('http://a.test/p.html',
-                  0,
-                  'http://a.test/i.jpg',
-                  'An image alt',
-                  None,
-                  False,
-                  True)],
- 'main_text': [('http://a.test/2019/05/06/q.html', '', 0),
-               ('http://a.test/p.html',
-                'a real paragraph of words a real paragraph of words a real paragraph of words a '
-                'real paragraph of words a real paragraph of words a real paragraph of words',
-                1)],
- 'markdown': [('http://a.test/2019/05/06/q.html', '', 0), ('http://a.test/p.html', '# T\n\nx', 2)],
- 'media': [('http://a.test/p.html',
-            'image/png',
-            10,
-            10,
-            1,
-            'e4d0dcb8d1714eb9',
-            (0.3882350027561188,
-             0.22640100121498108,
-             0.0,
-             0.7764710187911987,
-             0.3199999928474426,
-             0.03999999910593033,
-             0.007842999882996082,
-             0.07843100279569626))],
- 'minhash': [(1,
-              518650293,
-              688880270,
-              9901491,
-              882158525,
-              1789423261,
-              1574583785,
-              2519497245,
-              3251507920,
-              1029718871,
-              607205569,
-              140451767,
-              2087707054,
-              1554902156,
-              770796957,
-              2737002061,
-              158636346)],
- 'outline': [('http://a.test/p.html', 0, 1, 'A', 'A'),
-             ('http://a.test/p.html', 1, 2, 'B', 'A > B')],
- 'outlinks': [('http://a.test/2019/05/06/q.html', -1, None, False),
-              ('http://a.test/p.html', 0, 'http://a.test/x', False)],
- 'phash': [(1, 0, 0)],
- 'pub_dates': [('http://a.test/2019/05/06/q.html', '2019-05-06', 'url'),
-               ('http://a.test/p.html', '2020-02-03', 'meta')],
- 'resize': [('http://a.test/p.html', 'sha256:2b37a09aa9beb649', 4, 4)],
- 'robots_rules': [('a.test', 0, 2, '/p', '^/p')],
- 'sitemap_decls': [('http://a.test/p.html', 0, 'http://a.test/s.xml')],
- 'sitemap_entries': [('a.test', 'url', 'http://a.test/x', '2020-01-01')],
- 'structured': [('http://a.test/p.html', 0, 'og', 'og:title', 'T')],
- 'table_cells': [('http://a.test/p.html', 0, 0, 0, True, 'h'),
-                 ('http://a.test/p.html', 0, 0, 1, False, 'v')],
- 'warc': [('k1',
-           'response',
-           'http://a.test/',
-           '2020-01-01T00:00:00Z',
-           200,
-           'text/html',
-           'sha256:0a4735281db70022')]}
+        ),
+    ],
+    "markdown": [
+        ("http://a.test/2019/05/06/q.html", "", 0),
+        ("http://a.test/p.html", "# T\n\nx", 2),
+    ],
+    "media": [
+        (
+            "http://a.test/p.html", "image/png", 10, 10, 1, "e4d0dcb8d1714eb9",
+            (
+                0.3882350027561188, 0.22640100121498108, 0.0, 0.7764710187911987,
+                0.3199999928474426, 0.03999999910593033, 0.007842999882996082, 0.07843100279569626,
+            ),
+        ),
+    ],
+    "minhash": [
+        (
+            1, 518650293, 688880270, 9901491, 882158525, 1789423261, 1574583785, 2519497245,
+            3251507920, 1029718871, 607205569, 140451767, 2087707054, 1554902156, 770796957,
+            2737002061, 158636346,
+        ),
+    ],
+    "outline": [
+        ("http://a.test/p.html", 0, 1, "A", "A"),
+        ("http://a.test/p.html", 1, 2, "B", "A > B"),
+    ],
+    "outlinks": [
+        ("http://a.test/2019/05/06/q.html", -1, None, False),
+        ("http://a.test/p.html", 0, "http://a.test/x", False),
+    ],
+    "phash": [
+        (1, 0, 0),
+    ],
+    "pub_dates": [
+        ("http://a.test/2019/05/06/q.html", "2019-05-06", "url"),
+        ("http://a.test/p.html", "2020-02-03", "meta"),
+    ],
+    "resize": [
+        ("http://a.test/p.html", "sha256:2b37a09aa9beb649", 4, 4),
+    ],
+    "robots_rules": [
+        ("a.test", 0, 2, "/p", "^/p"),
+    ],
+    "sitemap_decls": [
+        ("http://a.test/p.html", 0, "http://a.test/s.xml"),
+    ],
+    "sitemap_entries": [
+        ("a.test", "url", "http://a.test/x", "2020-01-01"),
+    ],
+    "structured": [
+        ("http://a.test/p.html", 0, "og", "og:title", "T"),
+    ],
+    "table_cells": [
+        ("http://a.test/p.html", 0, 0, 0, True, "h"),
+        ("http://a.test/p.html", 0, 0, 1, False, "v"),
+    ],
+    "warc": [
+        (
+            "k1", "response", "http://a.test/", "2020-01-01T00:00:00Z", 200, "text/html",
+            "sha256:0a4735281db70022",
+        ),
+    ],
+}
 
 
 @pytest.mark.parametrize("name", sorted(_NULL_CASES))
